@@ -41,6 +41,7 @@ from ffcl_spark.config import EngineConfig
 from ffcl_spark.functions import sphere as S
 from ffcl_spark.operators.search_nd import knn_join_nd, radius_join_nd
 from ffcl_spark.plans.cache import carry, free_checkpoint
+from ffcl_spark.plans.stats import salt_hot_keys
 
 # IUGG mean Earth radius, metres.
 EARTH_RADIUS_M = 6_371_008.8
@@ -114,8 +115,6 @@ def sphere_radius_join(
     lat_col: str = "lat",
     lon_col: str = "lon",
     earth_radius_m: float = EARTH_RADIUS_M,
-    hot_cell_rows: int = 2_000_000,
-    salt_buckets: int = 16,
     salt_hot_cells: bool = True,
 ) -> DataFrame:
     """All (q_id, r_id, dist_m) with great-circle dist < radius_m
@@ -127,8 +126,11 @@ def sphere_radius_join(
     cell, queries explode over the exact cap cover (≈9 cells when the
     band height matches the radius), the equi-join's candidates are
     bounded by true surface density, and the haversine predicate is
-    one codegen expression. Same literal hot-cell salting as the
-    planar plan for skewed corpora (real data clusters in cities)."""
+    one codegen expression. Skewed corpora (real data clusters in
+    cities) get the planar plan's hot-cell salting,
+    :func:`ffcl_spark.plans.stats.salt_hot_keys`, at the
+    ``EngineConfig`` defaults of ``hot_cell_rows`` and
+    ``salt_buckets``."""
     # the cover is a superset bound — pad it a few ulps so a pair whose
     # haversine lands strictly inside the radius can never be excluded
     # by rounding in the deg↔rad conversions of the cap bounds
@@ -150,31 +152,7 @@ def sphere_radius_join(
     ).withColumn("cell", S.sphere_cell(F.col("r_lat"), F.col("r_lon"), delta_deg))
     keys = ["cell"]
     if salt_hot_cells:
-        hot = [
-            row["cell"]
-            for row in r.groupBy("cell")
-            .count()
-            .where(F.col("count") > hot_cell_rows)
-            .select("cell")
-            .collect()
-        ]
-        if hot:
-            is_hot = F.col("cell").isin(hot)
-            r = r.withColumn(
-                "salt",
-                F.when(
-                    is_hot, F.pmod(F.xxhash64(F.col("r_id")), F.lit(salt_buckets))
-                ).otherwise(F.lit(0)),
-            )
-            q = q.withColumn(
-                "salt",
-                F.explode(
-                    F.when(
-                        is_hot, F.sequence(F.lit(0), F.lit(salt_buckets - 1))
-                    ).otherwise(F.array(F.lit(0)))
-                ),
-            )
-            keys = ["cell", "salt"]
+        q, r, keys = salt_hot_keys(q, r, EngineConfig())
     dist = haversine_m(
         F.col("q_lat"), F.col("q_lon"), F.col("r_lat"), F.col("r_lon"),
         earth_radius_m,
@@ -316,10 +294,12 @@ def sphere_knn_join(
             )
         more_tiers = tiered is not None and rnd + 1 < n_tiers
         last = (rnd == max_rounds + n_tiers - 2 or r_m >= half_circ) and not more_tiers
+        # the last round must cover the whole sphere, however small
+        # the radius is when the round budget runs out
         cand = sphere_radius_join(
             remaining,
             refs_n,
-            min(r_m, half_circ * 1.001),
+            half_circ * 1.001 if last else min(r_m, half_circ * 1.001),
             id_col="id",
             lat_col="lat",
             lon_col="lon",

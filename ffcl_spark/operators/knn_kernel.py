@@ -1,22 +1,27 @@
-"""Scale-path kNN join: per-cell vectorized NumPy kernel.
+"""Scale-path kNN join: a two-level cogrouped NumPy kernel.
 
 The all-JVM ring-expansion join (``operators.search.knn_join``)
 materializes every candidate pair through the shuffle + window — fine
-at moderate candidate fan-in, wasteful when cells are dense. This
-operator keeps the same two-level decomposition (grid = the global
-kd-tree levels) but runs the leaf scan as a *cogrouped Arrow kernel*:
+at moderate candidate fan-in, wasteful when cells are dense.
+:func:`knn_join_grid` keeps the same grid decomposition (grid = the
+global kd-tree levels) but runs the leaf scan as a *cogrouped Arrow
+kernel*:
 
-- refs are replicated to the cells they can serve (their Chebyshev-
-  ``ring`` neighborhood — replication factor (2·ring+1)², one shuffle);
-- queries shuffle once to their own cell;
-- per cell, a NumPy block scan computes exact top-k for every query in
-  the cell against all serving refs (float64, same IEEE operation
-  order as the SQL path → bit-equal distances);
+- queries and refs group by a coarse cell (refs replicated to the
+  groups their fine ring-1 neighborhood touches, one shuffle);
+- per fine query cell, a NumPy block scan computes exact top-k against
+  the 3×3 fine neighborhood (float64, same IEEE operation order as the
+  SQL path → bit-equal distances), in query blocks of at most
+  ``PAIR_BUDGET`` distances;
 - the FFCL sibling-prune termination (``KDNodeView.hpp:235-243``) is
   evaluated *inside* the kernel: a query whose k-th distance is
   strictly below the guaranteed-covered radius is done; the (rare)
   rest fall back to the iterative JVM ring expansion starting past the
   pre-searched ring.
+
+``knn_join_kernel``, the former fine-cell cogroup plan, is an alias of
+:func:`knn_join_grid`: the grouping decides which task scans a fine
+cell, never which rows the scan returns.
 
 Resolution should put O(max(48, 3k)) points per cell
 (``knn_resolution``) — the analogue of FFCL's bucket_size leaf cutoff
@@ -35,6 +40,7 @@ from ffcl_spark.config import EngineConfig
 from ffcl_spark.functions import cells as C
 from ffcl_spark.kernels import grid as G
 from ffcl_spark.kernels.neighbors import topk_rows
+from ffcl_spark.plans.stats import hot_keys
 
 PAIR_BUDGET = 4_000_000  # elements per distance block inside the kernel
 
@@ -55,161 +61,8 @@ def knn_resolution(n_rows: int, k: int, cfg: EngineConfig) -> EngineConfig:
     return cfg.with_resolution(res)
 
 
-def knn_join_kernel(
-    queries: DataFrame,
-    refs: DataFrame,
-    k: int,
-    cfg: EngineConfig,
-    ring: int = 1,
-    checkpoint: bool = False,
-) -> DataFrame:
-    """(q_id, r_id, dist, rank) — exact kNN, FFCL semantics, ties by
-    r_id. Same contract as ``search.knn_join``; different physical
-    plan (grouped-kernel leaf scan instead of pair materialization).
-
-    ``checkpoint``: see ``plans.cache`` — True for iterative callers
-    (materialize + unpersist per call), False (default) keeps the
-    kernel output persisted and hands it to the caller for release.
-    """
-    id_type = queries.schema["id"].dataType
-    q = queries.select(
-        F.col("id").alias("q_id"),
-        F.col("x").alias("q_x"),
-        F.col("y").alias("q_y"),
-        C.cell_id(F.col("x"), F.col("y"), cfg).alias("cell"),
-    )
-    r = refs.select(
-        F.col("id").alias("r_id"),
-        F.col("x").alias("r_x"),
-        F.col("y").alias("r_y"),
-        F.explode(
-            C.neighbor_cells(C.cell_id(F.col("x"), F.col("y"), cfg), ring, cfg)
-        ).alias("cell"),
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("q_id", id_type),
-            T.StructField("r_id", refs.schema["id"].dataType),
-            T.StructField("dist", T.DoubleType()),
-            T.StructField("rank", T.IntegerType()),
-            T.StructField("done", T.BooleanType()),
-        ]
-    )
-
-    grid_n = cfg.grid_n
-
-    def kernel(qpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if len(qpdf) == 0:
-            return pd.DataFrame(
-                {"q_id": [], "r_id": [], "dist": [], "rank": [], "done": []}
-            ).astype({"rank": "int32", "done": "bool"})
-        qx = qpdf["q_x"].to_numpy()
-        qy = qpdf["q_y"].to_numpy()
-        nq = len(qpdf)
-        nr = len(rpdf)
-        ix, iy = G.cell_ixy(qpdf["cell"].to_numpy())
-        gr = G.guaranteed_radius(qx, qy, ix, iy, ring, cfg)
-        covers_all = ring >= grid_n
-        if nr == 0:
-            # no serving refs: emit nothing — these queries fall out of
-            # the done set and are picked up by the fallback expansion
-            return pd.DataFrame(
-                {"q_id": [], "r_id": [], "dist": [], "rank": [], "done": []}
-            ).astype({"rank": "int32", "done": "bool"})
-        # pre-sort refs by id → stable distance sort breaks ties by id
-        order = np.argsort(rpdf["r_id"].to_numpy(), kind="stable")
-        rx = rpdf["r_x"].to_numpy()[order]
-        ry = rpdf["r_y"].to_numpy()[order]
-        rids = rpdf["r_id"].to_numpy()[order]
-        kk = min(k, nr)
-        block = max(16, PAIR_BUDGET // max(nr, 1))
-        out = []
-        for s in range(0, nq, block):
-            e = min(s + block, nq)
-            dx = qx[s:e, None] - rx[None, :]
-            dy = qy[s:e, None] - ry[None, :]
-            # sqrt BEFORE ranking: the (dist, id) tie-break is defined
-            # on the sqrt'd distance (sqrt rounding can create ties the
-            # squared values don't have)
-            d = np.sqrt(dx * dx + dy * dy)
-            part, dd = topk_rows(d, kk)  # exact (distance, id) tie-break
-            kth = dd[:, -1]
-            done = covers_all | ((kk >= k) & (kth < gr[s:e]))
-            out.append(
-                pd.DataFrame(
-                    {
-                        "q_id": np.repeat(qpdf["q_id"].to_numpy()[s:e], kk),
-                        "r_id": rids[part].ravel(),
-                        "dist": dd.ravel(),
-                        "rank": np.tile(np.arange(1, kk + 1, dtype="int32"), e - s),
-                        "done": np.repeat(done, kk),
-                    }
-                )
-            )
-        return pd.concat(out, ignore_index=True)
-
-    from ffcl_spark.plans.cache import carry
-
-    grouped = q.groupBy("cell").cogroup(r.groupBy("cell")).applyInPandas(
-        kernel, out_schema
-    )
-    grouped = grouped.persist()
-    done_rows = grouped.where(F.col("done")).select("q_id", "r_id", "dist", "rank")
-    if checkpoint:
-        # iterative callers: materialize final rows off the cached
-        # kernel output, then drop the cache — repeated calls must not
-        # accumulate cached partitions
-        done_rows = done_rows.localCheckpoint()
-    # pending = queries without a done result (covers the not-done flag
-    # AND queries whose cell had zero serving refs)
-    pend_q = queries.join(
-        done_rows.select(F.col("q_id").alias("id")).distinct(), "id", "left_anti"
-    ).persist()
-    n_pend = pend_q.count()
-    if checkpoint:
-        grouped.unpersist()
-    if n_pend == 0:
-        pend_q.unpersist()
-        return done_rows if checkpoint else carry(done_rows, grouped)
-    # fallback: iterative JVM ring expansion for the stragglers (their
-    # count is tiny — dense areas always terminate in ring 1)
-    from ffcl_spark.operators.search import knn_join
-
-    rest = knn_join(pend_q, refs, k, cfg, start_ring=ring + 1, checkpoint=checkpoint)
-    pend_q.unpersist()
-    out = done_rows.unionByName(rest)
-    return out if checkpoint else carry(out, grouped, rest)
-
-
-# ---------------------------------------------------------------------
-# Two-level kernel: coarse groups outside, fine-grid candidates inside.
-
-
 def _coarse_key_expr(ixc, iyc, gshift: int):
     return F.shiftleft(F.shiftright(ixc, gshift), 26) + F.shiftright(iyc, gshift)
-
-
-def _plan_row_count(df: DataFrame) -> int | None:
-    """Catalyst's row-count statistic when it is EXACT (materialized
-    cache statistics); None otherwise. Never runs a job. Row-preserving
-    wrappers (Project / SubqueryAlias — a column selection over a
-    cached table, the common caller shape) are walked through, because
-    the default size-only stats visitor drops rowCount at them."""
-    try:
-        node = df._jdf.queryExecution().optimizedPlan()
-        for _ in range(8):
-            rc = node.stats().rowCount()
-            if rc.isDefined():
-                return int(str(rc.get()))
-            name = node.getClass().getSimpleName()
-            if name in ("Project", "SubqueryAlias") and node.children().size() == 1:
-                node = node.children().apply(0)
-            else:
-                break
-    except Exception:  # pragma: no cover - py4j edge
-        pass
-    return None
 
 
 def hot_coarse_groups(
@@ -226,29 +79,12 @@ def hot_coarse_groups(
     list is grid-bounded metadata (≤ #coarse cells), never point-sized."""
     if cfg.resolution < group_delta:
         return []
-    # Catalyst row-count shortcut (r6): a cached/statistics-bearing ref
-    # set whose TOTAL row count is at or below the hot threshold cannot
-    # contain a hot group — skip the detection scan outright (one full
-    # aggregation job per call otherwise; the bench pays it per rep).
-    # Plan-only: hot classification never changes results, only the
-    # physical grouping.
-    rc = _plan_row_count(refs)
-    if rc is not None and rc <= hot_group_rows:
-        return []
-    fr = C.cell_id(F.col("x"), F.col("y"), cfg)
-    base = refs.select(fr.alias("fcell"))
+    # hot_keys skips the detection job when the ref set's exact row
+    # count is at or below the threshold. Plan-only: hot
+    # classification never changes results, only the physical grouping.
+    fcell = refs.select(C.cell_id(F.col("x"), F.col("y"), cfg).alias("fcell"))
     key = _coarse_key_expr(C.cell_ix(F.col("fcell")), C.cell_iy(F.col("fcell")), group_delta)
-    return [
-        row["g"]
-        for row in (
-            base.select(key.alias("g"))
-            .groupBy("g")
-            .count()
-            .where(F.col("count") > hot_group_rows)
-            .select("g")
-            .collect()
-        )
-    ]
+    return hot_keys(fcell.select(key.alias("g")), "g", hot_group_rows)
 
 
 def knn_join_grid(
@@ -261,20 +97,24 @@ def knn_join_grid(
     hot_group_rows: int | None = 2_000_000,
     hot_groups: list[int] | None = None,
 ) -> DataFrame:
-    """Scale-tuned kNN join: same contract/result as ``knn_join_kernel``
-    but with a two-level decomposition that minimizes both shuffle
-    volume and per-group overhead:
+    """(q_id, r_id, dist, rank) — exact kNN, FFCL semantics, ties by
+    r_id. Same contract as ``search.knn_join``; a two-level
+    decomposition that minimizes both shuffle volume and per-group
+    overhead:
 
     - *outside*: grouping happens at the coarse resolution
       ``cfg.resolution - group_delta`` (16× fewer pandas groups at
-      delta=2). Refs are replicated only to the coarse groups their
-      fine ring-1 neighborhood touches — replication factor ≈
-      1 + perimeter/area (~1.5) instead of the 9× of fine-cell
-      cogrouping.
+      delta=2; ``group_delta`` is clamped to ``cfg.resolution``, so at
+      resolution ≤ delta all points form one group). Refs are
+      replicated only to the coarse groups their fine ring-1
+      neighborhood touches — replication factor ≈ 1 + perimeter/area
+      (~1.5) instead of the 9× of fine-cell cogrouping.
     - *inside*: the kernel buckets refs by fine cell (lexsort +
       searchsorted — the top levels of a local kd-tree) and scans each
       query fine-cell block against its 3×3 fine neighborhood with the
-      vectorized leaf kernel (``topk_rows``: exact (dist, id) ties).
+      vectorized leaf kernel (``topk_rows``: exact (dist, id) ties),
+      ``PAIR_BUDGET`` distances per query block so a dense fine cell
+      never builds an unbounded queries × candidates matrix.
 
     Termination is the FFCL sibling-prune rule at fine ring 1
     (``KDNodeView.hpp:235-243``); stragglers fall back to the JVM
@@ -299,24 +139,19 @@ def knn_join_grid(
     like Borůvka) checkpoints the final rows and unpersists before
     returning.
     """
-    if cfg.resolution < group_delta:
-        return knn_join_kernel(queries, refs, k, cfg, ring=1, checkpoint=checkpoint)
+    group_delta = min(group_delta, cfg.resolution)
     id_type = queries.schema["id"].dataType
-    gshift = group_delta
-    n = cfg.grid_n
+    grid_n = cfg.grid_n
 
     FINE_FLAG = 1 << 53  # keeps fine-cell group keys disjoint from coarse keys
 
-    fr = C.cell_id(F.col("x"), F.col("y"), cfg)
+    fcell = C.cell_id(F.col("x"), F.col("y"), cfg)
     r_base = refs.select(
         F.col("id").alias("r_id"),
         F.col("x").alias("r_x"),
         F.col("y").alias("r_y"),
-        fr.alias("fcell"),
+        fcell.alias("fcell"),
     )
-
-    def coarse_key(ixc, iyc):
-        return _coarse_key_expr(ixc, iyc, gshift)
 
     if hot_groups is not None:
         hot = list(hot_groups)
@@ -326,19 +161,18 @@ def knn_join_grid(
         hot = []
 
     def gkey(ixc, iyc):
-        ck = coarse_key(ixc, iyc)
+        ck = _coarse_key_expr(ixc, iyc, group_delta)
         if not hot:
             return ck
         return F.when(
             ck.isin(hot), F.shiftleft(ixc, 26) + iyc + F.lit(FINE_FLAG)
         ).otherwise(ck)
 
-    fq = C.cell_id(F.col("x"), F.col("y"), cfg)
     q = queries.select(
         F.col("id").alias("q_id"),
         F.col("x").alias("q_x"),
         F.col("y").alias("q_y"),
-        fq.alias("fcell"),
+        fcell.alias("fcell"),
     ).withColumn(
         "grp", gkey(C.cell_ix(F.col("fcell")), C.cell_iy(F.col("fcell")))
     )
@@ -352,8 +186,8 @@ def knn_join_grid(
     neigh_keys = []
     for dxx in (-1, 0, 1):
         for dyy in (-1, 0, 1):
-            cx = F.greatest(F.lit(0), F.least(F.lit(n - 1), rix + dxx))
-            cy = F.greatest(F.lit(0), F.least(F.lit(n - 1), riy + dyy))
+            cx = F.greatest(F.lit(0), F.least(F.lit(grid_n - 1), rix + dxx))
+            cy = F.greatest(F.lit(0), F.least(F.lit(grid_n - 1), riy + dyy))
             neigh_keys.append(gkey(cx, cy))
     r = (
         r_base.withColumn("grp", F.explode(F.array_distinct(F.array(*neigh_keys))))
@@ -369,7 +203,6 @@ def knn_join_grid(
             T.StructField("done", T.BooleanType()),
         ]
     )
-    grid_n = cfg.grid_n
     empty = pd.DataFrame(
         {"q_id": [], "r_id": [], "dist": [], "rank": [], "done": []}
     ).astype({"rank": "int32", "done": "bool"})
@@ -383,18 +216,6 @@ def knn_join_grid(
         qids = qpdf["q_id"].to_numpy()
         qfx, qfy = G.cell_ixy(qpdf["fcell"].to_numpy())
         nr = len(rpdf)
-        if nr == 0:
-            # placeholder rows keep every query represented so the
-            # pending check never needs an anti-join against queries
-            return pd.DataFrame(
-                {
-                    "q_id": qids,
-                    "r_id": qids,
-                    "dist": np.full(nq, np.nan),
-                    "rank": np.zeros(nq, dtype="int32"),
-                    "done": np.zeros(nq, dtype=bool),
-                }
-            )
         # bucket refs by fine cell. Ids are ranked into integer codes
         # ONCE per group (one object sort) so all per-block tie-break
         # work is integer-only.
@@ -434,6 +255,8 @@ def knn_join_grid(
                 if hi > lo:
                     slices.append((lo, hi))
             if not slices:
+                # placeholder rows keep every query represented so the
+                # pending check never needs an anti-join against queries
                 acc_q.append(qids[blk])
                 acc_r.append(qids[blk])
                 acc_d.append(np.full(len(blk), np.nan))
@@ -449,23 +272,25 @@ def knn_join_grid(
             cid_order = np.argsort(rcode[cand], kind="stable")
             cand = cand[cid_order]
             crx, cry = rx[cand], ry[cand]
-            bqx = qx[blk]
-            bqy = qy[blk]
             kk = min(k, len(cand))
-            dxm = bqx[:, None] - crx[None, :]
-            dym = bqy[:, None] - cry[None, :]
-            # sqrt before ranking — tie-break is on the final distance
-            d = np.sqrt(dxm * dxm + dym * dym)
-            part, dd = topk_rows(d, kk)
-            gr = G.guaranteed_radius(bqx, bqy, np.full(len(blk), a), np.full(len(blk), b), 1, cfg)
-            done = (grid_n <= 1) | ((kk >= k) & (dd[:, -1] < gr))
-            acc_q.append(np.repeat(qids[blk], kk))
-            acc_r.append(rids[cand[part.ravel()]])
-            acc_d.append(dd.ravel())
-            acc_rank.append(np.tile(np.arange(1, kk + 1, dtype="int32"), len(blk)))
-            acc_done.append(np.repeat(done, kk))
-        if not acc_q:
-            return empty
+            ranks = np.arange(1, kk + 1, dtype="int32")
+            step = max(16, PAIR_BUDGET // len(cand))
+            for s in range(0, len(blk), step):
+                sub = blk[s : s + step]
+                bqx = qx[sub]
+                bqy = qy[sub]
+                dxm = bqx[:, None] - crx[None, :]
+                dym = bqy[:, None] - cry[None, :]
+                # sqrt before ranking — tie-break is on the final distance
+                d = np.sqrt(dxm * dxm + dym * dym)
+                part, dd = topk_rows(d, kk)
+                gr = G.guaranteed_radius(bqx, bqy, a, b, 1, cfg)
+                done = (grid_n <= 1) | ((kk >= k) & (dd[:, -1] < gr))
+                acc_q.append(np.repeat(qids[sub], kk))
+                acc_r.append(rids[cand[part.ravel()]])
+                acc_d.append(dd.ravel())
+                acc_rank.append(np.tile(ranks, len(sub)))
+                acc_done.append(np.repeat(done, kk))
         return pd.DataFrame(
             {
                 "q_id": np.concatenate(acc_q),
@@ -513,3 +338,7 @@ def knn_join_grid(
     rest = knn_join(pend_q, refs, k, cfg, start_ring=2, checkpoint=checkpoint)
     out = done_rows.unionByName(rest)
     return out if checkpoint else carry(out, grouped, rest)
+
+
+# the former fine-cell cogroup plan; the name stays for existing callers
+knn_join_kernel = knn_join_grid

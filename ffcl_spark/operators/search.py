@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ffcl_spark.config import EngineConfig
 from ffcl_spark.functions import cells as C
+from ffcl_spark.plans.stats import broadcast_threshold_bytes, plan_size_bytes, salt_hot_keys
 
 DIST = "sqrt((q_x - r_x) * (q_x - r_x) + (q_y - r_y) * (q_y - r_y))"
 # Manhattan — the reference's auto_distance dispatches L1 for integral
@@ -60,24 +61,6 @@ def _tag(df: DataFrame, prefix: str) -> DataFrame:
         F.col("x").alias(f"{prefix}_x"),
         F.col("y").alias(f"{prefix}_y"),
     )
-
-
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's own size estimate for a plan (no job is run). Used to
-    pick join strategies deliberately (guide §3.1) instead of letting
-    bad post-Generate estimates broadcast an exploded side."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # pragma: no cover - py4j edge
-        return 1 << 62
-
-
-def _broadcast_threshold_bytes(df: DataFrame) -> int:
-    try:
-        v = df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        return int(v)
-    except Exception:  # pragma: no cover - non-numeric spelling
-        return 10 * 1024 * 1024
 
 
 def radius_join(
@@ -130,13 +113,11 @@ def radius_join(
       runs only on survivors.
 
     Skew: cells whose ref count exceeds ``cfg.hot_cell_rows`` are
-    salted explicitly — refs in a hot cell scatter over
-    ``cfg.salt_buckets`` sub-keys (hash of id), queries fan out to all
-    sub-keys of hot cells only — so one hot key becomes
-    ``salt_buckets`` evenly-sized keys instead of one straggler task
-    (AQE skew-join splitting remains on as the second line of
-    defense). The hot-cell set is a broadcast of cell counts — per-cell
-    metadata, not data.
+    salted over ``cfg.salt_buckets`` sub-keys by
+    :func:`ffcl_spark.plans.stats.salt_hot_keys` (AQE skew-join
+    splitting remains on as the second line of defense). Its detection
+    job is skipped when the refs' exact row count is at or below the
+    threshold.
     """
     if radius > 0:
         res_star = max(0, min(14, math.ceil(math.log2(cfg.domain / radius))))
@@ -179,60 +160,14 @@ def radius_join(
     r = _tag(refs, "r").withColumn(
         "cell", C.cell_id(F.col("r_x"), F.col("r_y"), cfg)
     )
+    keys = ["cell"]
     if salt_hot_cells:
-        # The hot set is per-cell METADATA (bounded by grid_n², not by
-        # data): materialize it eagerly to the driver once, so the refs
-        # plan is not re-executed through an unpersisted groupBy
-        # lineage on every downstream action (ADVICE: radius_join
-        # double-scan). The literal isin() keeps both sides' salting a
-        # pure column expression — no extra join, no cached lineage to
-        # manage.
-        from ffcl_spark.operators.knn_kernel import _plan_row_count
-
-        # exact-statistics shortcut (r6): a ref set whose total row
-        # count (known from materialized cache stats, no job) is at or
-        # below the hot threshold cannot contain a hot cell — skip the
-        # detection aggregation job entirely
-        rc = _plan_row_count(refs)
-        if rc is not None and rc <= cfg.hot_cell_rows:
-            hot_cells = []
-        else:
-            hot_rows = (
-                r.groupBy("cell")
-                .count()
-                .where(F.col("count") > cfg.hot_cell_rows)
-                .select("cell")
-                .collect()
-            )
-            hot_cells = [row["cell"] for row in hot_rows]
-        nbuckets = cfg.salt_buckets
-        if hot_cells:
-            is_hot = F.col("cell").isin(hot_cells)
-            r = r.withColumn(
-                "salt",
-                F.when(
-                    is_hot, F.pmod(F.xxhash64(F.col("r_id")), F.lit(nbuckets))
-                ).otherwise(F.lit(0)),
-            )
-            q = q.withColumn(
-                "salt",
-                F.explode(
-                    F.when(
-                        is_hot, F.sequence(F.lit(0), F.lit(nbuckets - 1))
-                    ).otherwise(F.array(F.lit(0)))
-                ),
-            )
-        else:
-            r = r.withColumn("salt", F.lit(0))
-            q = q.withColumn("salt", F.lit(0))
-        keys = ["cell", "salt"]
-    else:
-        keys = ["cell"]
+        q, r, keys = salt_hot_keys(q, r, cfg)
     # join strategy: build on the compact refs side, never the exploded
     # query side (guide §3.1) — broadcast when it truly fits, else a
     # shuffled-hash join (candidate pairs are filtered immediately, so
     # a sort-merge's sorts would be pure overhead)
-    if _plan_size_bytes(r) <= _broadcast_threshold_bytes(refs):
+    if plan_size_bytes(r) <= broadcast_threshold_bytes(refs):
         joined = q.join(F.broadcast(r), keys)
     else:
         joined = q.join(r.hint("shuffle_hash"), keys)

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from ffcl_spark.config import EngineConfig
 from ffcl_spark.functions import cells as C
+from ffcl_spark.plans.stats import exact_row_count, salt_hot_keys
 
 
 def dist_nd(q: Column, r: Column, metric: str = "euclidean") -> Column:
@@ -119,7 +120,10 @@ def radius_join_nd(
 ) -> DataFrame:
     """All (q_id, r_id, dist) with full n-D dist < radius (strict).
     One shuffle on the projected cell key; same a-priori Chebyshev
-    cover and literal hot-cell salting as the 2-D plan."""
+    cover as the 2-D plan, and the same hot-cell salting
+    (:func:`ffcl_spark.plans.stats.salt_hot_keys`: cells above
+    ``cfg.hot_cell_rows`` refs spread over ``cfg.salt_buckets``
+    sub-keys)."""
     a0, a1 = axes
     rings = max(1, math.ceil(radius / cfg.cell_size))
     q = _tag_nd(queries, "q", vec_col).withColumn(
@@ -135,37 +139,10 @@ def radius_join_nd(
     r = _tag_nd(refs, "r", vec_col).withColumn(
         "cell", C.cell_id(_proj(F.col("r_vec"), a0), _proj(F.col("r_vec"), a1), cfg)
     )
+    keys = ["cell"]
     if salt_hot_cells:
-        hot_rows = (
-            r.groupBy("cell")
-            .count()
-            .where(F.col("count") > cfg.hot_cell_rows)
-            .select("cell")
-            .collect()
-        )
-        hot_cells = [row["cell"] for row in hot_rows]
-        nbuckets = cfg.salt_buckets
-        if hot_cells:
-            is_hot = F.col("cell").isin(hot_cells)
-            r = r.withColumn(
-                "salt",
-                F.when(
-                    is_hot, F.pmod(F.xxhash64(F.col("r_id")), F.lit(nbuckets))
-                ).otherwise(F.lit(0)),
-            )
-            q = q.withColumn(
-                "salt",
-                F.explode(
-                    F.when(
-                        is_hot, F.sequence(F.lit(0), F.lit(nbuckets - 1))
-                    ).otherwise(F.array(F.lit(0)))
-                ),
-            )
-            joined = q.join(r, ["cell", "salt"])
-        else:
-            joined = q.join(r, "cell")
-    else:
-        joined = q.join(r, "cell")
+        q, r, keys = salt_hot_keys(q, r, cfg)
+    joined = q.join(r, keys)
     return (
         joined.withColumn("dist", dist_nd(F.col("q_vec"), F.col("r_vec"), metric))
         .where(F.col("dist") < radius)
@@ -270,12 +247,10 @@ def radius_join_nd_blocked(
 
     from ffcl_spark.kernels.neighbors import pairwise_fold_nd
 
-    from ffcl_spark.operators.knn_kernel import _plan_row_count
-
     # exact cache statistics replace the sizing count jobs when known
     # (persisted inputs — the common iterative-caller shape)
-    nq = _plan_row_count(queries) or queries.count()
-    nr = _plan_row_count(refs) or refs.count()
+    nq = exact_row_count(queries) or queries.count()
+    nr = exact_row_count(refs) or refs.count()
     n_rb = max(1, math.ceil(nr / ref_block_rows))
     n_qb = max(1, math.ceil(nq / query_block_rows))
     # scale-adaptive parallelism floor (guide §2): the cogroup gets
@@ -389,12 +364,10 @@ def knn_join_nd_blocked(
     if metric != "euclidean":
         precise = True  # BLAS form is euclidean-only
 
-    from ffcl_spark.operators.knn_kernel import _plan_row_count
-
     # exact cache statistics replace the sizing count jobs when known
     # (persisted inputs — the common iterative-caller shape)
-    nq = _plan_row_count(queries) or queries.count()
-    nr = _plan_row_count(refs) or refs.count()
+    nq = exact_row_count(queries) or queries.count()
+    nr = exact_row_count(refs) or refs.count()
     n_rb = max(1, math.ceil(nr / ref_block_rows))
     n_qb = max(1, math.ceil(nq / query_block_rows))
     # scale-adaptive parallelism floor (guide §2): the cogroup gets

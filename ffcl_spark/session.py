@@ -13,6 +13,27 @@ import os
 
 from pyspark.sql import SparkSession
 
+MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def default_driver_memory() -> str:
+    """Driver heap when ``FFCL_DRIVER_MEM`` is unset: a quarter of RAM.
+
+    Local mode runs every task in the driver JVM, and the JVM grows its
+    heap (and its direct buffers, which default to the heap size) before
+    it runs a full GC, so a heap sized past the host's RAM lets one
+    long-lived session outgrow it. The quarter is clamped to 1g..48g;
+    when ``/proc/meminfo`` cannot be read the 48g cap is used.
+    """
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{MAX_DRIVER_MEM_MB}m"
+    return f"{max(1024, min(MAX_DRIVER_MEM_MB, total_kb // 4096))}m"
+
 
 def get_spark(
     app_name: str = "ffcl_spark",
@@ -41,7 +62,10 @@ def get_spark(
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("FFCL_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("FFCL_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

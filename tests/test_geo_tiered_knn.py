@@ -69,3 +69,25 @@ def test_tiered_local_start_matches_brute(spark, skewed_geo):
             # same metric, different expression trees (haversine column
             # vs numpy) — equal to float slack
             assert abs(dist - odists[rank]) < 1e-6
+
+
+@pytest.mark.parametrize("max_rounds", [1, 2])
+def test_round_budget_exhausted_searches_whole_sphere(spark, max_rounds):
+    """A start radius far below the neighbour spacing and a round
+    budget too small to grow out of it: the last round must still
+    search the whole sphere and return k rows per query."""
+    rng = np.random.default_rng(5)
+    n = 300
+    lat = np.degrees(np.arcsin(rng.uniform(-1, 1, n)))
+    lon = rng.uniform(-180.0, 180.0, n)
+    rows = [(int(i), float(a), float(b)) for i, (a, b) in enumerate(zip(lat, lon))]
+    df = spark.createDataFrame(rows, "id long, lat double, lon double")
+    out = sphere_knn_join(df, df, K, init_radius_m=1000.0, max_rounds=max_rounds)
+    got = out.toPandas().sort_values(["q_id", "rank"])
+    release(out)
+    assert len(got) == n * K
+    oracle = geo_brute_knn(lat, lon, lat, lon, np.arange(n), K)
+    for qi, (oids, odists) in enumerate(oracle):
+        sub = got[got.q_id == qi]
+        assert list(sub.r_id) == list(oids), qi
+        np.testing.assert_allclose(sub.dist_m.to_numpy(), odists, rtol=1e-9, atol=1e-6)

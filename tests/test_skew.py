@@ -2,6 +2,7 @@
 
 import numpy as np
 import pandas as pd
+import pytest
 from dataclasses import replace
 
 from ffcl_spark import EngineConfig
@@ -83,3 +84,63 @@ def test_knn_grid_adaptive_split_single_hot_cell(spark, cfg):
     qi, ni, dd = NK.knn(xy, xy, pdf.id.to_numpy(), k)
     exp = {(int(q), int(n_), d) for q, n_, d in zip(qi, ni, dd)}
     assert set(zip(got.q_id, got.r_id, got.dist)) == exp
+
+
+def test_stale_catalog_row_count_keeps_salting(spark, tmp_path):
+    """A catalog rowCount from an old ANALYZE says the ref set is tiny,
+    but files added since make one cell hot: the skew defence must not
+    trust the statistic, so the hot cell is still salted."""
+    rng = np.random.default_rng(9)
+
+    def frame(ids, lo, hi):
+        xy = rng.uniform(lo, hi, (len(ids), 2))
+        return pd.DataFrame({"id": ids, "x": xy[:, 0], "y": xy[:, 1]})
+
+    path = str(tmp_path / "refs")
+    small = frame(np.arange(20, dtype=np.int64), -29, 29)
+    hot = frame(np.arange(20, 1020, dtype=np.int64), 0.0, 0.4)
+    spark.createDataFrame(small).write.parquet(path)
+    spark.sql(f"CREATE TABLE stale_refs USING parquet LOCATION '{path}'")
+    try:
+        spark.sql("ANALYZE TABLE stale_refs COMPUTE STATISTICS")
+        spark.createDataFrame(hot).write.mode("append").parquet(path)
+        spark.sql("REFRESH TABLE stale_refs")
+        spark.conf.set("spark.sql.cbo.planStats.enabled", "true")
+        refs = spark.table("stale_refs")
+        assert str(refs._jdf.queryExecution().optimizedPlan().stats().rowCount()) == "Some(20)"
+        cfg = replace(EngineConfig(resolution=4), hot_cell_rows=200, salt_buckets=8)
+        out = S.radius_join(refs, refs, 0.5, cfg)
+        assert "xxhash64" in out._jdf.queryExecution().optimizedPlan().toString()
+        got = out.toPandas()
+    finally:
+        spark.conf.unset("spark.sql.cbo.planStats.enabled")
+        spark.sql("DROP TABLE IF EXISTS stale_refs")
+    pdf = pd.concat([small, hot], ignore_index=True)
+    xy = pdf[["x", "y"]].to_numpy()
+    oa, ob, _ = K.radius_pairs(xy, pdf.id.to_numpy(), xy, pdf.id.to_numpy(), 0.5)
+    assert set(zip(got.q_id, got.r_id)) == set(zip(oa, ob))
+
+
+@pytest.mark.parametrize("res", [0, 5])
+def test_knn_grid_blocked_fine_cell_scan(spark, monkeypatch, res):
+    """A PAIR_BUDGET small enough that the hot fine cell splits into
+    many query blocks: distances and ranks stay bit-equal to the
+    brute-force oracle, at one group (resolution 0) and at fine
+    resolution with group splitting off."""
+    from ffcl_spark.operators import knn_kernel
+
+    monkeypatch.setattr(knn_kernel, "PAIR_BUDGET", 64)
+    df, pdf = _skewed(spark, n=1200, seed=8)
+    k = 5
+    got = (
+        knn_join_grid(df, df, k, EngineConfig(resolution=res), hot_group_rows=None)
+        .toPandas()
+        .sort_values(["q_id", "rank"])
+        .reset_index(drop=True)
+    )
+    xy = pdf[["x", "y"]].to_numpy()
+    oq, on, od = K.knn(xy, xy, pdf.id.to_numpy(), k)
+    assert list(got.q_id) == list(pdf.id.to_numpy()[oq])
+    assert list(got.r_id) == list(on)
+    assert (got.dist.to_numpy() == od).all()
+    assert (got["rank"].to_numpy() == np.tile(np.arange(1, k + 1), len(pdf))).all()
