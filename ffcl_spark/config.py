@@ -10,6 +10,7 @@ resolution is chosen per job so that a cell holds roughly
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
 
@@ -38,6 +39,15 @@ class EngineConfig:
     @property
     def cell_size(self) -> float:
         return self.domain / (1 << self.resolution)
+
+    @property
+    def edge_slack(self) -> float:
+        """How far a point can sit outside its cell's nominal box: the
+        edge x0 + i*s is rounded, and so is the point's
+        floor((x - x0) / s). Eight ulps of the largest coordinate
+        magnitude in the domain cover both; pruning bounds move each
+        edge by this much before they measure a gap."""
+        return 8 * math.ulp(max(abs(self.x0), abs(self.y0)) + self.domain)
 
     @property
     def grid_n(self) -> int:

@@ -119,27 +119,30 @@ def guaranteed_radius(x: Column, y: Column, cell: Column, radius: int, cfg: Engi
 
     The covered region is the square [ (ix-r)*s, (ix+r+1)*s ) on each
     axis (clipped to the domain — clipped sides are unbounded in data
-    space, so they do not constrain the radius). Any point strictly
-    closer than the returned value lies inside the searched region.
+    space, so they do not constrain the radius). Each side moves in by
+    ``cfg.edge_slack``, because a point just outside a rounded edge can
+    still floor into the cell beyond it. Any point strictly closer than
+    the returned value lies inside the searched region.
     This is the distributed form of the reference's sibling-prune test
     ``KDNodeView.hpp:235-243`` (visit the far side only while the
     buffer's furthest distance can still beat the split plane).
     """
     s = cfg.cell_size
     n = cfg.grid_n
+    e = F.lit(cfg.edge_slack)
     ix = cell_ix(cell)
     iy = cell_iy(cell)
     big = F.lit(float("inf"))
     lo_x = F.when(ix - radius <= 0, big).otherwise(
-        x - (F.lit(cfg.x0) + (ix - radius).cast("double") * F.lit(s))
+        x - ((F.lit(cfg.x0) + (ix - radius).cast("double") * F.lit(s)) + e)
     )
     hi_x = F.when(ix + radius >= n - 1, big).otherwise(
-        (F.lit(cfg.x0) + (ix + radius + 1).cast("double") * F.lit(s)) - x
+        ((F.lit(cfg.x0) + (ix + radius + 1).cast("double") * F.lit(s)) - e) - x
     )
     lo_y = F.when(iy - radius <= 0, big).otherwise(
-        y - (F.lit(cfg.y0) + (iy - radius).cast("double") * F.lit(s))
+        y - ((F.lit(cfg.y0) + (iy - radius).cast("double") * F.lit(s)) + e)
     )
     hi_y = F.when(iy + radius >= n - 1, big).otherwise(
-        (F.lit(cfg.y0) + (iy + radius + 1).cast("double") * F.lit(s)) - y
+        ((F.lit(cfg.y0) + (iy + radius + 1).cast("double") * F.lit(s)) - e) - y
     )
     return F.least(lo_x, hi_x, lo_y, hi_y)

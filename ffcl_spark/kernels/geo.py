@@ -463,16 +463,22 @@ def hausdorff_rad(
     Hausdorff compares the vertex SETS, Fréchet the walks; H ≤ F
     always). The symmetric Hausdorff distance is ``max(h_ab, h_ba)``.
 
-    O(m·n); deterministic (max/min reductions over a fixed float64
-    matrix — no order freedom)."""
+    O(m·n); deterministic: the dot products and the cross-product
+    norms are elementwise folds in one stated order,
+    ``(ax*bx + ay*by) + az*bz`` and ``sqrt((cx*cx + cy*cy) + cz*cz)``
+    (no BLAS reduction, whose order depends on the CPU), and the
+    max/min reductions have no order freedom."""
     a = np.asarray(chain_a_latlon, dtype=np.float64)
     b = np.asarray(chain_b_latlon, dtype=np.float64)
     va = unit_vector_np(a[:, 0], a[:, 1])
     vb = unit_vector_np(b[:, 0], b[:, 1])
-    dots = va @ vb.T
-    crosses = np.linalg.norm(
-        np.cross(va[:, None, :], vb[None, :, :]), axis=2
-    )
+    ax, ay, az = (va[:, i, None] for i in range(3))
+    bx, by, bz = (vb[None, :, i] for i in range(3))
+    dots = (ax * bx + ay * by) + az * bz
+    cx = ay * bz - az * by
+    cy = az * bx - ax * bz
+    cz = ax * by - ay * bx
+    crosses = np.sqrt((cx * cx + cy * cy) + cz * cz)
     d = np.arctan2(crosses, dots)  # [m, n] exact angles
     return float(d.min(axis=1).max()), float(d.min(axis=0).max())
 

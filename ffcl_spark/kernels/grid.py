@@ -36,9 +36,10 @@ def guaranteed_radius(
     (domain-clipped sides are unbounded thanks to cell clamping)."""
     s = cfg.cell_size
     n = cfg.grid_n
+    e = cfg.edge_slack
     inf = np.inf
-    lo_x = np.where(ix - ring <= 0, inf, x - (cfg.x0 + (ix - ring) * s))
-    hi_x = np.where(ix + ring >= n - 1, inf, (cfg.x0 + (ix + ring + 1) * s) - x)
-    lo_y = np.where(iy - ring <= 0, inf, y - (cfg.y0 + (iy - ring) * s))
-    hi_y = np.where(iy + ring >= n - 1, inf, (cfg.y0 + (iy + ring + 1) * s) - y)
+    lo_x = np.where(ix - ring <= 0, inf, x - ((cfg.x0 + (ix - ring) * s) + e))
+    hi_x = np.where(ix + ring >= n - 1, inf, ((cfg.x0 + (ix + ring + 1) * s) - e) - x)
+    lo_y = np.where(iy - ring <= 0, inf, y - ((cfg.y0 + (iy - ring) * s) + e))
+    hi_y = np.where(iy + ring >= n - 1, inf, ((cfg.y0 + (iy + ring + 1) * s) - e) - y)
     return np.minimum(np.minimum(lo_x, hi_x), np.minimum(lo_y, hi_y))

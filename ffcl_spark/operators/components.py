@@ -47,7 +47,8 @@ def connected_components(
     graph ``edges`` (columns src, dst) over the vertex universe ``ids``
     (column id). Vertices with no incident edge are their own
     component. Deterministic at any parallelism (min is order-free)."""
-    from ffcl_spark.plans.cache import carry, free_checkpoint
+    from ffcl_spark.plans.cache import carry
+    from ffcl_spark.plans.stats import free_checkpoint
 
     comp = ids.select("id", F.col("id").alias("comp")).localCheckpoint()
     E = (

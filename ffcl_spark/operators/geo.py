@@ -40,8 +40,8 @@ from pyspark.sql import functions as F
 from ffcl_spark.config import EngineConfig
 from ffcl_spark.functions import sphere as S
 from ffcl_spark.operators.search_nd import knn_join_nd, radius_join_nd
-from ffcl_spark.plans.cache import carry, free_checkpoint
-from ffcl_spark.plans.stats import salt_hot_keys
+from ffcl_spark.plans.cache import carry
+from ffcl_spark.plans.stats import free_checkpoint, salt_hot_keys
 
 # IUGG mean Earth radius, metres.
 EARTH_RADIUS_M = 6_371_008.8

@@ -1,27 +1,23 @@
-"""Scale-path kNN join: a two-level cogrouped NumPy kernel.
+"""The engine's planar kNN join: a two-level cogrouped NumPy kernel.
 
-The all-JVM ring-expansion join (``operators.search.knn_join``)
-materializes every candidate pair through the shuffle + window — fine
-at moderate candidate fan-in, wasteful when cells are dense.
-:func:`knn_join_grid` keeps the same grid decomposition (grid = the
-global kd-tree levels) but runs the leaf scan as a *cogrouped Arrow
-kernel*:
+:func:`knn_join_grid` keeps the grid decomposition (grid = the global
+kd-tree levels) and runs the leaf scan as a *cogrouped Arrow kernel*:
 
 - queries and refs group by a coarse cell (refs replicated to the
   groups their fine ring-1 neighborhood touches, one shuffle);
 - per fine query cell, a NumPy block scan computes exact top-k against
   the 3×3 fine neighborhood (float64, same IEEE operation order as the
-  SQL path → bit-equal distances), in query blocks of at most
-  ``PAIR_BUDGET`` distances;
+  SQL distance expressions → bit-equal distances), in query blocks of
+  at most ``PAIR_BUDGET`` distances;
 - the FFCL sibling-prune termination (``KDNodeView.hpp:235-243``) is
   evaluated *inside* the kernel: a query whose k-th distance is
   strictly below the guaranteed-covered radius is done; the (rare)
-  rest fall back to the iterative JVM ring expansion starting past the
-  pre-searched ring.
+  rest are scanned against every ref in one broadcast pass.
 
-``knn_join_kernel``, the former fine-cell cogroup plan, is an alias of
-:func:`knn_join_grid`: the grouping decides which task scans a fine
-cell, never which rows the scan returns.
+``search.knn_join`` and ``search.core_distances`` run on it.
+``knn_join_kernel``, the former fine-cell cogroup plan, is an alias:
+the grouping decides which task scans a fine cell, never which rows
+the scan returns.
 
 Resolution should put O(max(48, 3k)) points per cell
 (``knn_resolution``) — the analogue of FFCL's bucket_size leaf cutoff
@@ -35,11 +31,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from ffcl_spark.config import EngineConfig
 from ffcl_spark.functions import cells as C
 from ffcl_spark.kernels import grid as G
 from ffcl_spark.kernels.neighbors import topk_rows
+from ffcl_spark.plans.cache import carry
 from ffcl_spark.plans.stats import hot_keys
 
 PAIR_BUDGET = 4_000_000  # elements per distance block inside the kernel
@@ -96,11 +94,11 @@ def knn_join_grid(
     checkpoint: bool = False,
     hot_group_rows: int | None = 2_000_000,
     hot_groups: list[int] | None = None,
+    metric: str = "euclidean",
 ) -> DataFrame:
     """(q_id, r_id, dist, rank) — exact kNN, FFCL semantics, ties by
-    r_id. Same contract as ``search.knn_join``; a two-level
-    decomposition that minimizes both shuffle volume and per-group
-    overhead:
+    r_id; self included when queries ⊆ refs. A two-level decomposition
+    that minimizes both shuffle volume and per-group overhead:
 
     - *outside*: grouping happens at the coarse resolution
       ``cfg.resolution - group_delta`` (16× fewer pandas groups at
@@ -116,9 +114,21 @@ def knn_join_grid(
       ``PAIR_BUDGET`` distances per query block so a dense fine cell
       never builds an unbounded queries × candidates matrix.
 
+    ``metric``: 'euclidean' (``sqrt(dx*dx + dy*dy)``) or 'manhattan'
+    (``abs(dx) + abs(dy)``, the reference's L1 dispatch for integral
+    data, ``Distances.hpp:94-117``) — the same IEEE operations as the
+    SQL ``search.DIST``/``DIST_L1``, so distances are bit-equal.
+
     Termination is the FFCL sibling-prune rule at fine ring 1
-    (``KDNodeView.hpp:235-243``); stragglers fall back to the JVM
-    ring-expansion join.
+    (``KDNodeView.hpp:235-243``): a query is done when its k-th
+    distance is strictly below the L∞ distance to the searched box's
+    border. L2 ≥ L∞ and L1 ≥ L∞, so the rule holds for both metrics.
+    Straggler pass: the queries that are not done are collected to the
+    driver and scanned against every ref (:func:`_broadcast_pass`) —
+    exact, no ref shuffle, no task holding more than one Arrow batch of
+    refs however skewed they are. It costs pending × refs distances;
+    14 of 100 000 skewed-blob queries were pending at
+    ``knn_resolution``.
 
     Skew (``hot_group_rows``): one cheap ref-count aggregation finds
     coarse groups whose ref count exceeds the threshold; points of hot
@@ -136,12 +146,111 @@ def knn_join_grid(
     ``checkpoint``: cache hand-off mode (see ``plans.cache``) — False
     (default, one-shot callers) returns a view over the persisted
     kernel output, no second materialization; True (iterative callers
-    like Borůvka) checkpoints the final rows and unpersists before
-    returning.
+    like Borůvka) checkpoints the grid pass's and the straggler pass's
+    final rows and releases every intermediate before returning.
     """
+    if metric not in ("euclidean", "manhattan"):
+        raise ValueError(f"unknown metric {metric!r}")
     group_delta = min(group_delta, cfg.resolution)
+    if hot_groups is not None:
+        hot = list(hot_groups)
+    elif hot_group_rows is not None:
+        hot = hot_coarse_groups(refs, cfg, group_delta, hot_group_rows)
+    else:
+        hot = []
+
+    grouped = _grid_pass(queries, refs, k, cfg, group_delta, hot, metric).persist()
+    out = grouped.where(F.col("done")).select("q_id", "r_id", "dist", "rank")
+    if checkpoint:
+        # iterative callers: checkpoint final rows off the cached
+        # kernel output, then drop the cache — Borůvka calls this per
+        # escalation round and must not accumulate cached partitions
+        out = out.localCheckpoint()
+    # every query is represented in `grouped` (placeholders for the
+    # candidate-less case), so the pending check is a cached scan, no
+    # join — the common case returns here. This isEmpty is the action
+    # that materializes the kernel output into the cache; the one-shot
+    # caller's own action then reads the cache (the r1-floor plan —
+    # the unconditional localCheckpoint cost the headline join ~1.5x
+    # in round 2).
+    not_done = grouped.where(~F.col("done")).select(F.col("q_id").alias("id"))
+    if not not_done.isEmpty():
+        pend = queries.join(not_done.distinct(), "id", "left_semi").select("id", "x", "y")
+        tail = _broadcast_pass(pend.toPandas(), queries.schema["id"].dataType, refs, k, metric)
+        if checkpoint:
+            tail = tail.localCheckpoint()
+        out = out.unionByName(tail)
+    if checkpoint:
+        grouped.unpersist()
+        return out
+    return carry(out, grouped)
+
+
+def _broadcast_pass(
+    pend: pd.DataFrame, q_type: T.DataType, refs: DataFrame, k: int, metric: str
+) -> DataFrame:
+    """Exact (q_id, r_id, dist, rank) of the few pending queries
+    against every ref: the queries ship with the task closure, the refs
+    are scanned where they lie (no ref shuffle) one Arrow batch at a
+    time, and a window over q_id merges the per-batch top-k by
+    (dist, r_id). Work is pending × refs distances."""
+    qids = pend["id"].to_numpy()
+    qx = pend["x"].to_numpy()
+    qy = pend["y"].to_numpy()
+    l1 = metric == "manhattan"
+
+    def scan(batches):
+        for b in batches:
+            if len(b) == 0:
+                continue
+            o = np.argsort(b["id"].to_numpy(), kind="stable")  # columns in id order
+            rids, rx, ry = (b[c].to_numpy()[o] for c in ("id", "x", "y"))
+            kk = min(k, len(rids))
+            step = max(16, PAIR_BUDGET // len(rids))
+            for s in range(0, len(qids), step):
+                dxm = qx[s : s + step, None] - rx[None, :]
+                dym = qy[s : s + step, None] - ry[None, :]
+                d = np.abs(dxm) + np.abs(dym) if l1 else np.sqrt(dxm * dxm + dym * dym)
+                part, dd = topk_rows(d, kk)
+                yield pd.DataFrame(
+                    {
+                        "q_id": np.repeat(qids[s : s + step], kk),
+                        "r_id": rids[part].ravel(),
+                        "dist": dd.ravel(),
+                    }
+                )
+
+    schema = T.StructType(
+        [
+            T.StructField("q_id", q_type),
+            T.StructField("r_id", refs.schema["id"].dataType),
+            T.StructField("dist", T.DoubleType()),
+        ]
+    )
+    w = Window.partitionBy("q_id").orderBy("dist", "r_id")
+    return (
+        refs.select("id", "x", "y")
+        .mapInPandas(scan, schema)
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+    )
+
+
+def _grid_pass(
+    queries: DataFrame,
+    refs: DataFrame,
+    k: int,
+    cfg: EngineConfig,
+    group_delta: int,
+    hot: list[int],
+    metric: str,
+) -> DataFrame:
+    """The grid pass of :func:`knn_join_grid`: the cogrouped kernel's
+    (q_id, r_id, dist, rank, done) rows, one row set per query (a
+    NaN placeholder row for a query with no candidate)."""
     id_type = queries.schema["id"].dataType
     grid_n = cfg.grid_n
+    l1 = metric == "manhattan"
 
     FINE_FLAG = 1 << 53  # keeps fine-cell group keys disjoint from coarse keys
 
@@ -152,13 +261,6 @@ def knn_join_grid(
         F.col("y").alias("r_y"),
         fcell.alias("fcell"),
     )
-
-    if hot_groups is not None:
-        hot = list(hot_groups)
-    elif hot_group_rows is not None:
-        hot = hot_coarse_groups(refs, cfg, group_delta, hot_group_rows)
-    else:
-        hot = []
 
     def gkey(ixc, iyc):
         ck = _coarse_key_expr(ixc, iyc, group_delta)
@@ -282,7 +384,7 @@ def knn_join_grid(
                 dxm = bqx[:, None] - crx[None, :]
                 dym = bqy[:, None] - cry[None, :]
                 # sqrt before ranking — tie-break is on the final distance
-                d = np.sqrt(dxm * dxm + dym * dym)
+                d = np.abs(dxm) + np.abs(dym) if l1 else np.sqrt(dxm * dxm + dym * dym)
                 part, dd = topk_rows(d, kk)
                 gr = G.guaranteed_radius(bqx, bqy, a, b, 1, cfg)
                 done = (grid_n <= 1) | ((kk >= k) & (dd[:, -1] < gr))
@@ -301,43 +403,7 @@ def knn_join_grid(
             }
         )
 
-    from ffcl_spark.plans.cache import carry
-
-    grouped = (
-        q.groupBy("grp")
-        .cogroup(r.groupBy("grp"))
-        .applyInPandas(kernel, out_schema)
-        .persist()
-    )
-    done_rows = grouped.where(F.col("done")).select("q_id", "r_id", "dist", "rank")
-    if checkpoint:
-        # iterative callers: checkpoint final rows off the cached
-        # kernel output, then drop the cache — Borůvka calls this per
-        # escalation round and must not accumulate cached partitions
-        done_rows = done_rows.localCheckpoint()
-    # every query is represented in `grouped` (placeholders for the
-    # candidate-less case), so the pending check is a cached scan, no
-    # join — the common case returns immediately. This isEmpty is the
-    # action that materializes the kernel output into the cache; the
-    # one-shot caller's own action then reads the cache (the r1-floor
-    # plan — the unconditional localCheckpoint cost the headline join
-    # ~1.5x in round 2).
-    not_done = grouped.where(~F.col("done")).select("q_id")
-    if not_done.isEmpty():
-        if checkpoint:
-            grouped.unpersist()
-            return done_rows
-        return carry(done_rows, grouped)
-    from ffcl_spark.operators.search import knn_join
-
-    pend_q = queries.join(
-        not_done.distinct().withColumnRenamed("q_id", "id"), "id", "left_semi"
-    ).localCheckpoint()
-    if checkpoint:
-        grouped.unpersist()
-    rest = knn_join(pend_q, refs, k, cfg, start_ring=2, checkpoint=checkpoint)
-    out = done_rows.unionByName(rest)
-    return out if checkpoint else carry(out, grouped, rest)
+    return q.groupBy("grp").cogroup(r.groupBy("grp")).applyInPandas(kernel, out_schema)
 
 
 # the former fine-cell cogroup plan; the name stays for existing callers

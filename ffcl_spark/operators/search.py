@@ -12,15 +12,15 @@ upper levels; candidate generation mirrors its traversal:
 - radius join → queries explode to the Chebyshev-``ceil(r/s)`` cell
   neighborhood, equi-join on cell, strict ``dist < r`` post-filter.
   Reference: ``Ball.hpp:91-97,208-216`` + traversal.
-- kNN join → iterative ring expansion with the furthest-distance
-  termination rule — the distributed form of the kd-tree sibling prune
-  (``KDNodeView.hpp:235-243``): a query stops expanding once its k-th
-  distance is strictly smaller than the guaranteed-covered radius of
-  the rings searched so far.
+- kNN join and core distances → the cogrouped grid plan
+  (:func:`ffcl_spark.operators.knn_kernel.knn_join_grid`) with the
+  furthest-distance termination rule — the distributed form of the
+  kd-tree sibling prune (``KDNodeView.hpp:235-243``). ``knn_join`` is
+  its alias here.
 
-The hot path is 100% JVM (explode/join/window, WholeStageCodegen); no
-Python executes per row. Distance = sqrt(dx*dx + dy*dy) in float64 —
-bit-identical to the NumPy kernels.
+Box search and the radius join are 100% JVM (explode/join,
+WholeStageCodegen); no Python executes per row. Distance =
+sqrt(dx*dx + dy*dy) in float64 — bit-identical to the NumPy kernels.
 """
 
 from __future__ import annotations
@@ -32,6 +32,8 @@ from pyspark.sql import functions as F
 
 from ffcl_spark.config import EngineConfig
 from ffcl_spark.functions import cells as C
+from ffcl_spark.operators.knn_kernel import knn_join_grid
+from ffcl_spark.plans.cache import carry
 from ffcl_spark.plans.stats import broadcast_threshold_bytes, plan_size_bytes, salt_hot_keys
 
 DIST = "sqrt((q_x - r_x) * (q_x - r_x) + (q_y - r_y) * (q_y - r_y))"
@@ -95,8 +97,10 @@ def radius_join(
     - *cell box-distance prune*: an exploded (query, cell) row whose
       cell box lies entirely ≥ r away can contribute no pair and is
       dropped BEFORE the join (before the exchange — guide §2.3).
-      Sound in float: the box gap per axis is a single rounded
-      subtraction of exact inputs and correctly-rounded ops are
+      Sound in float: each box edge is moved out by
+      ``cfg.edge_slack``, which covers the rounding of the edge and of
+      the ref's cell assignment, and the gap is one rounded
+      subtraction from that edge. Correctly-rounded ops are
       monotone, so fl(gap²·sum) ≤ fl(dx²+dy²) for every ref in the
       cell (domain-clamped edge cells treat the clamped side as
       unbounded). Cuts candidates ≈2-3× on top of the resolution
@@ -132,9 +136,14 @@ def radius_join(
     # box-distance prune: drop (query, cell) rows whose cell box cannot
     # hold any point strictly closer than r. Edge cells absorb the
     # whole out-of-domain half-plane (axis_index clamps), so their
-    # clamped sides must not bound the gap.
+    # clamped sides must not bound the gap. The box edge x0 + ix*s is
+    # rounded, and a ref's cell comes from the rounded
+    # floor((x - x0) / s), so a ref can sit a few ulps of the domain's
+    # magnitude outside its nominal box: each edge moves out by
+    # cfg.edge_slack before the (monotone) gap subtraction.
     n = cfg.grid_n
     s = F.lit(cfg.cell_size)
+    slack = F.lit(cfg.edge_slack)
     ix = C.cell_ix(F.col("cell"))
     iy = C.cell_iy(F.col("cell"))
     x_lo = F.lit(cfg.x0) + ix.cast("double") * s
@@ -142,13 +151,13 @@ def radius_join(
     zero = F.lit(0.0)
     gx = F.greatest(
         zero,
-        F.when(ix > 0, x_lo - F.col("q_x")).otherwise(zero),
-        F.when(ix < n - 1, F.col("q_x") - (x_lo + s)).otherwise(zero),
+        F.when(ix > 0, (x_lo - slack) - F.col("q_x")).otherwise(zero),
+        F.when(ix < n - 1, F.col("q_x") - ((x_lo + s) + slack)).otherwise(zero),
     )
     gy = F.greatest(
         zero,
-        F.when(iy > 0, y_lo - F.col("q_y")).otherwise(zero),
-        F.when(iy < n - 1, F.col("q_y") - (y_lo + s)).otherwise(zero),
+        F.when(iy > 0, (y_lo - slack) - F.col("q_y")).otherwise(zero),
+        F.when(iy < n - 1, F.col("q_y") - ((y_lo + s) + slack)).otherwise(zero),
     )
     # non-strict bounds: a passing pair can sit exactly AT d2 == r·r
     # in float (its sqrt rounding down below r), so the superset
@@ -191,145 +200,19 @@ def knn_join(
     refs: DataFrame,
     k: int,
     cfg: EngineConfig,
-    start_ring: int = 1,
     metric: str = "euclidean",
     checkpoint: bool = False,
 ) -> DataFrame:
-    """k nearest refs per query: (q_id, r_id, dist, rank).
+    """k nearest refs per query: (q_id, r_id, dist, rank) — the grid
+    plan :func:`ffcl_spark.operators.knn_kernel.knn_join_grid` under
+    this module's name.
 
-    Semantics: k smallest Euclidean distances, ties broken by r_id
-    (deterministic engine tie-break; reference keeps first-encountered,
+    Semantics: k smallest distances, ties broken by r_id (deterministic
+    engine tie-break; reference keeps first-encountered,
     ``StaticBuffer.hpp:169``); self included when queries ⊆ refs.
-
-    Algorithm (ring expansion — FFCL sibling-prune rule distributed):
-      round 0: search the Chebyshev-``start_ring`` neighborhood of the
-      query's cell; keep top-k per query.
-      A query is DONE when it has k candidates and its k-th distance is
-      strictly < the guaranteed-covered radius of the searched region
-      (``functions.cells.guaranteed_radius``), or the region already
-      covers the whole grid.
-      Pending queries search only the *incremental* ring(s) next round;
-      survivors' top-k candidate sets carry forward.
-
-    ``metric``: 'euclidean' or 'manhattan' — the guaranteed-radius
-    termination bound is the L∞ distance to the searched box border,
-    and L1 ≥ L∞, so the same rule is valid for both metrics.
-
-    Each round = one shuffle join on cell for the pending queries only.
-    At sane resolutions (cfg.auto_resolution) almost all queries finish
-    in round 0. After ``cfg.max_rounds`` the (rare) stragglers fall
-    back to a brute-force join against all refs — the correctness
-    backstop; at that point they are few, so the broadcast of the
-    pending queries is small.
-
-    Cache discipline (see ``plans.cache``): with ``checkpoint=True``
-    (iterative callers) each round's done rows are locally
-    checkpointed and every intermediate is unpersisted before return,
-    so repeated calls never accumulate cached partitions. With the
-    default ``checkpoint=False`` (one-shot callers) the per-round
-    top-k stays persisted and the output reads it directly — the
-    round's pending-count action is the materialization, and the
-    caller's single action is a cache read; the persisted handles ride
-    on the returned DataFrame for ``plans.cache.release``.
-    """
-    from ffcl_spark.plans.cache import carry
-
-    w = Window.partitionBy("q_id").orderBy("dist", "r_id")
-
-    r = _tag(refs, "r").withColumn("cell", C.cell_id(F.col("r_x"), F.col("r_y"), cfg))
-    r = r.persist()
-
-    pending = _tag(queries, "q").withColumn(
-        "q_cell", C.cell_id(F.col("q_x"), F.col("q_y"), cfg)
-    )
-    done_parts: list[DataFrame] = []
-    retained: list[DataFrame] = []  # persisted topk per round (checkpoint=False)
-    survivors: DataFrame | None = None  # carried top-k candidates of pending queries
-    ring_lo = 0
-    ring_hi = start_ring
-    max_ring = cfg.grid_n  # covers everything
-
-    for _ in range(cfg.max_rounds):
-        # candidate cells: full neighborhood minus what previous rounds saw
-        probe = pending.withColumn(
-            "cell",
-            F.explode(
-                F.array_except(
-                    C.neighbor_cells(F.col("q_cell"), ring_hi, cfg),
-                    C.neighbor_cells(F.col("q_cell"), ring_lo - 1, cfg)
-                    if ring_lo > 0
-                    else F.array().cast("array<long>"),
-                )
-            ),
-        )
-        cand = (
-            probe.join(r, "cell")
-            .withColumn("dist", F.expr(dist_expr(metric)))
-            .select("q_id", "q_x", "q_y", "q_cell", "r_id", "dist")
-        )
-        if survivors is not None:
-            cand = cand.unionByName(survivors)
-        topk = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-        ).persist()
-
-        gr = C.guaranteed_radius(F.col("q_x"), F.col("q_y"), F.col("q_cell"), ring_hi, cfg)
-        covers_all = ring_hi >= max_ring
-        per_q = topk.groupBy("q_id", "q_x", "q_y", "q_cell").agg(
-            F.count(F.lit(1)).alias("n_cand"),
-            F.max("dist").alias("kth"),
-        )
-        done_q = per_q.where(
-            F.lit(covers_all) | ((F.col("n_cand") >= k) & (F.col("kth") < gr))
-        ).select("q_id")
-        done = topk.join(done_q, "q_id").select("q_id", "r_id", "dist", "rank")
-        if checkpoint:
-            # done rows are final output — checkpoint them (reads the
-            # cached topk once) so the final union never re-executes
-            # round joins after topk unpersists
-            done = done.localCheckpoint()
-        done_parts.append(done)
-        # pending from the QUERY set, not the candidate set — a query
-        # with zero candidates this round must stay pending
-        pend_q = pending.join(done_q, "q_id", "left_anti").persist()
-        if not checkpoint:
-            retained.append(topk)
-        n_pend = pend_q.count()  # materializes topk into its cache
-        if n_pend == 0:
-            pend_q.unpersist()
-            if checkpoint:
-                topk.unpersist()
-            pending = None
-            break
-        survivors = topk.join(pend_q.select("q_id"), "q_id").select(
-            "q_id", "q_x", "q_y", "q_cell", "r_id", "dist"
-        ).localCheckpoint()
-        pending = pend_q.select("q_id", "q_x", "q_y", "q_cell").localCheckpoint()
-        pend_q.unpersist()
-        if checkpoint:
-            topk.unpersist()
-        ring_lo = ring_hi + 1
-        ring_hi = min(max_ring, ring_hi * 2)  # geometric expansion
-
-    if pending is not None:
-        # brute-force backstop: few queries remain; cross join via
-        # cell-less join against all refs
-        brute = (
-            pending.crossJoin(r.drop("cell"))
-            .withColumn("dist", F.expr(dist_expr(metric)))
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("q_id", "r_id", "dist", "rank")
-            .localCheckpoint()
-        )
-        done_parts.append(brute)
-
-    r.unpersist()
-    out = done_parts[0]
-    for p in done_parts[1:]:
-        out = out.unionByName(p)
-    return out if checkpoint else carry(out, *retained)
+    ``metric``: 'euclidean' or 'manhattan'. ``checkpoint``: the cache
+    hand-off mode of ``plans.cache`` (True for iterative callers)."""
+    return knn_join_grid(queries, refs, k, cfg, checkpoint=checkpoint, metric=metric)
 
 
 def core_distances(
@@ -337,10 +220,10 @@ def core_distances(
 ) -> DataFrame:
     """(id, core_distance): distance to the k-th NN, self counted —
     reference ``CoreDistances.hpp:39-54``. The self-pair contributes
-    distance 0, so this is the max distance of the self-kNN(k) set."""
-    from ffcl_spark.plans.cache import carry
-
-    nn = knn_join(points, points, k, cfg, checkpoint=checkpoint)
+    distance 0, so this is the max distance of the self-kNN(k) set.
+    With ``checkpoint=True`` every intermediate is released before
+    return; the result reads only the checkpointed kNN rows."""
+    nn = knn_join_grid(points, points, k, cfg, checkpoint=checkpoint)
     out = nn.groupBy("q_id").agg(F.max("dist").alias("core_distance")).select(
         F.col("q_id").alias("id"), "core_distance"
     )
@@ -375,16 +258,8 @@ def knn_with_memory(
     visited_indices). Distributed form: LEFT ANTI JOIN of the refs
     against ``visited`` (column ``id``) before the search — the
     anti-join runs JVM-side and prunes before any shuffle."""
-    from ffcl_spark.operators.knn_kernel import knn_join_grid
-
     pruned = refs.join(visited.select("id"), "id", "left_anti")
     return knn_join_grid(queries, pruned, k, cfg)
-
-
-def _carry_through(out: DataFrame, src: DataFrame) -> DataFrame:
-    from ffcl_spark.plans.cache import carry
-
-    return carry(out, src)
 
 
 def closest_pair(
@@ -411,8 +286,6 @@ def closest_pair(
     the previous k+1 assumed at most one zero-distance twin). Every one
     of the k globally shortest edges is one of its own query's k
     nearest positive-distance refs, so the per-query bound is exact."""
-    from ffcl_spark.operators.knn_kernel import knn_join_grid
-
     max_dup = (
         refs.groupBy("x", "y").count().agg(F.max("count")).first()[0] or 1
     )
@@ -426,6 +299,6 @@ def closest_pair(
         )
     )
     if k == 1:
-        return _carry_through(out, raw)
+        return carry(out, raw)
     w = Window.orderBy("dist", "src", "dst")
-    return _carry_through(out.withColumn("rank", F.row_number().over(w).cast("int")), raw)
+    return carry(out.withColumn("rank", F.row_number().over(w).cast("int")), raw)

@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ffcl_spark.plans.stats import free_checkpoint, is_checkpointed
+
 
 def carry(out: DataFrame, *cached: DataFrame) -> DataFrame:
     """Attach persisted upstream handles to ``out`` for later release.
@@ -36,32 +38,11 @@ def carry(out: DataFrame, *cached: DataFrame) -> DataFrame:
         if (
             c.storageLevel.useMemory
             or c.storageLevel.useDisk
-            or _is_checkpointed(c)
+            or is_checkpointed(c)
         ):
             handles.append(c)
     out._ffcl_cached = handles
     return out
-
-
-def _is_checkpointed(df: DataFrame) -> bool:
-    plan = df._jdf.queryExecution().analyzed()
-    return plan.getClass().getName().endswith(".LogicalRDD")
-
-
-def free_checkpoint(df: DataFrame) -> None:
-    """Deterministically unpersist a localCheckpointed frame's RDD.
-
-    ``DataFrame.unpersist`` reaches only CacheManager entries; the
-    checkpoint's RDD-level persist is invisible to it and otherwise
-    waits on GC + ContextCleaner, which can lag minutes on a busy
-    driver (observed: surviving checkpoint RDDs per streaming epoch in
-    the full test suite). A checkpointed frame's analyzed plan is a
-    ``LogicalRDD`` whose ``rdd()`` IS the persisted RDD — note
-    ``toRdd()`` is NOT (it returns a derived, unpersisted RDD).
-    No-op for non-checkpointed frames."""
-    plan = df._jdf.queryExecution().analyzed()
-    if plan.getClass().getName().endswith(".LogicalRDD"):
-        plan.rdd().unpersist(False)
 
 
 def release(df: DataFrame) -> None:
@@ -74,21 +55,3 @@ def release(df: DataFrame) -> None:
         c.unpersist()
         free_checkpoint(c)
     df._ffcl_cached = []
-
-
-def free_checkpoint_tree(df: DataFrame) -> None:
-    """Deterministically unpersist EVERY localCheckpoint in ``df``'s
-    analyzed plan — a union of checkpointed rounds (the expanding-
-    radius kNN joins, grid escalation) holds several LogicalRDD
-    leaves, which single-frame :func:`free_checkpoint` cannot reach.
-    For epoch-scoped results a streaming handler has already written
-    out: the caller must own every checkpoint in the plan, and the
-    frame is not collectable afterwards (truncated lineage)."""
-    stack = [df._jdf.queryExecution().analyzed()]
-    while stack:
-        node = stack.pop()
-        if node.getClass().getName().endswith(".LogicalRDD"):
-            node.rdd().unpersist(False)
-        kids = node.children()
-        for i in range(kids.size()):
-            stack.append(kids.apply(i))

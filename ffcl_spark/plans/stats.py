@@ -17,10 +17,22 @@ instead of one straggler task. The hot set is per-key metadata
 (bounded by the key space, not by data), collected to the driver once
 and applied as a literal ``isin`` — no extra join, no cached lineage.
 Salting changes the physical grouping only, never the result.
+
+Checkpoint release: :func:`is_checkpointed`, :func:`free_checkpoint`
+and :func:`free_checkpoint_tree` find the ``LogicalRDD`` leaves that
+``localCheckpoint`` leaves in a plan and unpersist their RDDs at once,
+instead of waiting on GC and the ContextCleaner.
+
+Every reader here walks Spark's JVM plan classes through py4j. Their
+names and accessors are those of Spark 3 and 4 (``_PLAN_API_MAJORS``).
+On any other major version the walks are skipped: the statistics read
+as unknown (the detection jobs run), and checkpoint blocks are left to
+the ContextCleaner. Results never depend on them.
 """
 
 from __future__ import annotations
 
+import pyspark
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -31,6 +43,9 @@ from ffcl_spark.config import EngineConfig
 # column selection over a cached frame is the common caller shape,
 # and the size-only stats visitor drops rowCount at them
 _ROW_PRESERVING = ("Project", "SubqueryAlias")
+
+_PLAN_API_MAJORS = (3, 4)
+_PLAN_WALKS = int(pyspark.__version__.split(".")[0]) in _PLAN_API_MAJORS
 
 
 def exact_row_count(df: DataFrame) -> int | None:
@@ -44,6 +59,8 @@ def exact_row_count(df: DataFrame) -> int | None:
     ``rowCount`` is never trusted: catalog statistics go stale when
     files change under the table, and a stale small count would switch
     the skew defences off."""
+    if not _PLAN_WALKS:
+        return None
     try:
         node = df._jdf.queryExecution().optimizedPlan()
         name = node.getClass().getSimpleName()
@@ -65,6 +82,8 @@ def plan_size_bytes(df: DataFrame) -> int:
     """Catalyst's own size estimate for a plan (no job is run). Used to
     pick join strategies deliberately (guide §3.1) instead of letting
     bad post-Generate estimates broadcast an exploded side."""
+    if not _PLAN_WALKS:
+        return 1 << 62
     try:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Py4JError:  # pragma: no cover - py4j edge
@@ -123,3 +142,49 @@ def salt_hot_keys(
         ),
     )
     return q, r, ["cell", "salt"]
+
+
+def is_checkpointed(df: DataFrame) -> bool:
+    """True when ``df`` is a localCheckpointed frame (its analyzed plan
+    is a ``LogicalRDD``). Its RDD-level persist is invisible to
+    ``DataFrame.storageLevel``, which consults only the CacheManager."""
+    if not _PLAN_WALKS:
+        return False
+    plan = df._jdf.queryExecution().analyzed()
+    return plan.getClass().getName().endswith(".LogicalRDD")
+
+
+def free_checkpoint(df: DataFrame) -> None:
+    """Deterministically unpersist a localCheckpointed frame's RDD.
+
+    ``DataFrame.unpersist`` reaches only CacheManager entries; the
+    checkpoint's RDD-level persist is invisible to it and otherwise
+    waits on GC + ContextCleaner, which can lag minutes on a busy
+    driver (observed: surviving checkpoint RDDs per streaming epoch in
+    the full test suite). A checkpointed frame's analyzed plan is a
+    ``LogicalRDD`` whose ``rdd()`` IS the persisted RDD — note
+    ``toRdd()`` is NOT (it returns a derived, unpersisted RDD).
+    No-op for non-checkpointed frames."""
+    if is_checkpointed(df):
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def free_checkpoint_tree(df: DataFrame) -> None:
+    """Deterministically unpersist EVERY localCheckpoint in ``df``'s
+    analyzed plan — a union of checkpointed levels (the grid kNN's
+    grid and straggler passes, the expanding-radius joins) holds several
+    LogicalRDD leaves, which single-frame :func:`free_checkpoint`
+    cannot reach. For epoch-scoped results a streaming handler has
+    already written out: the caller must own every checkpoint in the
+    plan, and the frame is not collectable afterwards (truncated
+    lineage)."""
+    if not _PLAN_WALKS:
+        return
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        if node.getClass().getName().endswith(".LogicalRDD"):
+            node.rdd().unpersist(False)
+        kids = node.children()
+        for i in range(kids.size()):
+            stack.append(kids.apply(i))

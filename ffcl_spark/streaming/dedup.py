@@ -76,7 +76,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ffcl_spark.plans.cache import free_checkpoint, release
+from ffcl_spark.plans.cache import release
+from ffcl_spark.plans.stats import free_checkpoint
 
 HASHES, BANDS, TEXTS = "hashes", "bands", "texts"
 
@@ -314,7 +315,7 @@ def dedup_batch(
                 df.unpersist()
             # checkpoint RDDs are invisible to DataFrame.unpersist —
             # free their blocks deterministically (see
-            # plans.cache.free_checkpoint)
+            # plans.stats.free_checkpoint)
             free_checkpoint(df)
 
 

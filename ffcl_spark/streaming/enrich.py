@@ -68,7 +68,7 @@ def knn_enrich_stream(
     cost in the loop.
     """
     from ffcl_spark.operators.knn_kernel import hot_coarse_groups, knn_join_grid
-    from ffcl_spark.plans.cache import free_checkpoint_tree
+    from ffcl_spark.plans.stats import free_checkpoint_tree
     from ffcl_spark.sources.points import media_points
 
     # the reference side is static across every micro-batch: detect hot

@@ -61,19 +61,21 @@ def test_guaranteed_radius_is_safe(spark, cfg):
         C.guaranteed_radius(F.col("x"), F.col("y"), F.col("cell"), 1, cfg).alias("g"),
     ).toPandas()
     s = cfg.cell_size
+    e = cfg.edge_slack
     ixs, iys = G.cell_ixy(pdf.cell.to_numpy())  # keep int64 (iterrows would coerce to float64)
     for x, y, g, ix, iy in zip(pdf.x, pdf.y, pdf.g, ixs, iys):
         # exact expected value: min over non-domain-clipped sides of the
-        # ring-1 box (clipped sides cover everything via cell clamping)
+        # ring-1 box (clipped sides cover everything via cell clamping),
+        # each rounded edge moved in by the edge slack
         exp = []
         if ix - 1 > 0:
-            exp.append(x - (cfg.x0 + (ix - 1) * s))
+            exp.append(x - ((cfg.x0 + (ix - 1) * s) + e))
         if ix + 1 < cfg.grid_n - 1:
-            exp.append((cfg.x0 + (ix + 2) * s) - x)
+            exp.append(((cfg.x0 + (ix + 2) * s) - e) - x)
         if iy - 1 > 0:
-            exp.append(y - (cfg.y0 + (iy - 1) * s))
+            exp.append(y - ((cfg.y0 + (iy - 1) * s) + e))
         if iy + 1 < cfg.grid_n - 1:
-            exp.append((cfg.y0 + (iy + 2) * s) - y)
+            exp.append(((cfg.y0 + (iy + 2) * s) - e) - y)
         expected = min(exp) if exp else float("inf")
         assert g == expected or (np.isinf(g) and np.isinf(expected))
 

@@ -2190,23 +2190,19 @@ def test_hausdorff_kernel_invariants():
         sphere_route_paths_b,
     )
 
+    def angle(u, w):
+        # per-pair scalar folds in the kernel's stated order
+        dot = (u[0] * w[0] + u[1] * w[1]) + u[2] * w[2]
+        cx = u[1] * w[2] - u[2] * w[1]
+        cy = u[2] * w[0] - u[0] * w[2]
+        cz = u[0] * w[1] - u[1] * w[0]
+        return float(np.arctan2(np.sqrt((cx * cx + cy * cy) + cz * cz), dot))
+
     def brute(a, b):
         va = unit_vector_np(np.array(a)[:, 0], np.array(a)[:, 1])
         vb = unit_vector_np(np.array(b)[:, 0], np.array(b)[:, 1])
-        h_ab = max(
-            min(
-                float(np.arctan2(np.linalg.norm(np.cross(u, w)), u @ w))
-                for w in vb
-            )
-            for u in va
-        )
-        h_ba = max(
-            min(
-                float(np.arctan2(np.linalg.norm(np.cross(u, w)), u @ w))
-                for u in va
-            )
-            for w in vb
-        )
+        h_ab = max(min(angle(u, w) for w in vb) for u in va)
+        h_ba = max(min(angle(u, w) for u in va) for w in vb)
         return h_ab, h_ba
 
     for _, ap in sphere_route_paths():

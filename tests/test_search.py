@@ -2,6 +2,8 @@
 oracle-test pattern (SearchTest.cpp:954-995)."""
 
 import numpy as np
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from ffcl_spark import EngineConfig
@@ -85,18 +87,20 @@ def test_mutual_reachability(spark, cfg, blobs):
     assert np.allclose(mr.mreach, exp)
 
 
-def test_knn_kernel_matches_jvm_and_oracle(spark, cfg, blobs):
+def test_knn_kernel_bit_equal_to_oracle(spark, cfg, blobs):
     from ffcl_spark.operators.knn_kernel import knn_join_kernel
 
     df, pdf = blobs
     k = 5
-    jvm = S.knn_join(df, df, k, cfg).toPandas()
-    ker = knn_join_kernel(df, df, k, cfg).toPandas()
-    assert knn_sets(jvm) == knn_sets(ker)
-    # bit-equal distances between the two physical plans
-    a = jvm.sort_values(["q_id", "r_id"]).reset_index(drop=True)
-    b = ker.sort_values(["q_id", "r_id"]).reset_index(drop=True)
-    assert (a.dist.to_numpy() == b.dist.to_numpy()).all()
+    got = knn_join_kernel(df, df, k, cfg).toPandas()
+    ids = pdf.id.to_numpy()
+    oq, on, od = K.knn(pdf[["x", "y"]].to_numpy(), pdf[["x", "y"]].to_numpy(), ids, k)
+    exp = pd.DataFrame({"q_id": ids[oq], "r_id": on, "dist": od})
+    # bit-equal distances, row for row in (q_id, rank) order
+    a = got.sort_values(["q_id", "rank"]).reset_index(drop=True)
+    assert (a.q_id.to_numpy() == exp.q_id.to_numpy()).all()
+    assert (a.r_id.to_numpy() == exp.r_id.to_numpy()).all()
+    assert (a.dist.to_numpy() == exp.dist.to_numpy()).all()
 
 
 def test_knn_kernel_ties_and_resolutions(spark, grid_exact):
@@ -231,3 +235,138 @@ def test_closest_pair_with_many_coincident_refs(spark, cfg):
     got_edges = sorted(zip(got.dist, got.src, got.dst))
     assert [(s, t) for _, s, t in got_edges] == [(s, t) for _, s, t in exp]
     assert np.allclose([w for w, *_ in got_edges], [w for w, *_ in exp])
+
+
+def brute_knn(qpdf, rpdf, k, metric):
+    """(q_id, r_id, dist, rank) of every query against every ref: the
+    SQL distance expressions' IEEE operations, ties by r_id."""
+    dx = qpdf.x.to_numpy()[:, None] - rpdf.x.to_numpy()[None, :]
+    dy = qpdf.y.to_numpy()[:, None] - rpdf.y.to_numpy()[None, :]
+    d = np.abs(dx) + np.abs(dy) if metric == "manhattan" else np.sqrt(dx * dx + dy * dy)
+    rids = rpdf.id.to_numpy()
+    rows = []
+    for i, qid in enumerate(qpdf.id.to_numpy()):
+        order = np.lexsort((rids, d[i]))[:k]
+        rows += [(qid, rids[j], d[i, j], rank) for rank, j in enumerate(order, 1)]
+    return pd.DataFrame(rows, columns=["q_id", "r_id", "dist", "rank"])
+
+
+def logical_rdd_leaves(df):
+    stack, n = [df._jdf.queryExecution().analyzed()], 0
+    while stack:
+        node = stack.pop()
+        n += node.getClass().getName().endswith(".LogicalRDD")
+        kids = node.children()
+        stack += [kids.apply(i) for i in range(kids.size())]
+    return n
+
+
+@pytest.mark.parametrize("metric", ["euclidean", "manhattan"])
+@pytest.mark.parametrize("res", [2, 4, 6])
+def test_knn_grid_straggler_levels_exact(spark, res, metric):
+    """Queries in an empty region against skewed refs: none is done at
+    ring 1 of the query resolution, so the straggler pass scans them
+    against every ref. Rows are bit-equal to the brute oracle."""
+    from ffcl_spark.operators.knn_kernel import knn_join_grid
+
+    rng = np.random.default_rng(res)
+    # refs: a dense blob near one corner plus a thin scatter
+    rxy = np.vstack(
+        [rng.normal((-24.0, -24.0), 0.8, (300, 2)), rng.uniform(-29, 0, (12, 2))]
+    )
+    # queries: an empty quadrant far from every ref
+    qxy = rng.uniform(12.0, 28.0, (40, 2))
+    rpdf = pd.DataFrame({"id": np.arange(len(rxy), dtype=np.int64), "x": rxy[:, 0], "y": rxy[:, 1]})
+    qpdf = pd.DataFrame({"id": np.arange(len(qxy), dtype=np.int64) + 10_000, "x": qxy[:, 0], "y": qxy[:, 1]})
+    k = 5
+    out = knn_join_grid(
+        spark.createDataFrame(qpdf), spark.createDataFrame(rpdf), k,
+        EngineConfig(resolution=res), checkpoint=True, metric=metric,
+    )
+    got = out.toPandas().sort_values(["q_id", "rank"]).reset_index(drop=True)
+    exp = brute_knn(qpdf, rpdf, k, metric)
+    assert (got.q_id.to_numpy() == exp.q_id.to_numpy()).all()
+    assert (got.r_id.to_numpy() == exp.r_id.to_numpy()).all()
+    assert (got["rank"].to_numpy() == exp["rank"].to_numpy()).all()
+    assert (got.dist.to_numpy() == exp.dist.to_numpy()).all()
+    # one checkpointed part per pass: the grid pass and the straggler pass
+    assert logical_rdd_leaves(out) == 2
+
+
+@pytest.mark.parametrize("res", [0, 3])
+def test_knn_grid_no_refs_returns_no_rows(spark, res):
+    """Every query is pending and the straggler pass has no ref to scan:
+    no rows, at any resolution (resolution 0 included)."""
+    from ffcl_spark.operators.knn_kernel import knn_join_grid
+
+    q = spark.createDataFrame(pd.DataFrame({"id": [1, 2], "x": [0.5, -3.0], "y": [0.5, 2.0]}))
+    refs = q.where("id < 0")
+    got = knn_join_grid(q, refs, 3, EngineConfig(resolution=res), checkpoint=True)
+    assert got.count() == 0
+
+
+def test_knn_with_memory_all_visited_returns_no_rows(spark, cfg, blobs):
+    df, _ = blobs
+    assert S.knn_with_memory(df, df, df.select("id"), 4, cfg).count() == 0
+
+
+def test_core_distances_checkpoint_leaves_nothing_behind(spark):
+    """Borůvka's contract for ``checkpoint=True``: after the call only
+    the checkpointed rows the result reads are left; freeing those
+    leaves no persisted or checkpointed RDD from the call."""
+    from ffcl_spark.plans.stats import free_checkpoint_tree
+
+    rng = np.random.default_rng(3)
+    # a blob plus far outliers, so some queries need the straggler pass
+    xy = np.vstack([rng.normal(0.0, 1.0, (300, 2)), rng.uniform(-29, 29, (6, 2))])
+    pdf = pd.DataFrame({"id": np.arange(len(xy), dtype=np.int64), "x": xy[:, 0], "y": xy[:, 1]})
+    df = spark.createDataFrame(pdf)
+
+    def persistent_ids():
+        return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+    id_floor = max(persistent_ids(), default=-1)
+    k = 4
+    out = S.core_distances(df, k, EngineConfig(resolution=6), checkpoint=True)
+    assert logical_rdd_leaves(out) >= 2  # the straggler pass ran
+    got = out.toPandas().set_index("id").core_distance.loc[pdf.id].to_numpy()
+    exp = K.core_distance(xy, pdf.id.to_numpy(), k)
+    assert (got == exp).all()
+    assert not getattr(out, "_ffcl_cached", [])
+    free_checkpoint_tree(out)
+    assert {i for i in persistent_ids() if i > id_floor} == set()
+
+
+def test_radius_box_prune_sound_across_rounded_edge(spark):
+    """The cell edge x0 + ix*s rounds up to 0.45 while a ref at the
+    double just below it still floors into cell 3. The query's true
+    distance is below r, but its gap to the rounded edge is above r:
+    the prune must not drop that cell."""
+    cfg = EngineConfig(x0=-0.3, y0=-0.3, domain=1.0)
+    r = 0.3  # the join re-cells at resolution 2: s = 0.25
+    q = pd.DataFrame({"id": [0], "x": [0.15], "y": [0.0]})
+    refs = pd.DataFrame({"id": [1], "x": [0.44999999999999996], "y": [0.0]})
+    got = S.radius_join(spark.createDataFrame(q), spark.createDataFrame(refs), r, cfg).toPandas()
+    oa, ob, od = K.radius_pairs(
+        q[["x", "y"]].to_numpy(), q.id.to_numpy(), refs[["x", "y"]].to_numpy(), refs.id.to_numpy(), r
+    )
+    assert len(oa) == 1
+    assert set(zip(got.q_id, got.r_id)) == set(zip(oa, ob))
+    assert (got.dist.to_numpy() == od).all()
+
+
+def test_knn_grid_done_rule_sound_across_rounded_edge(spark):
+    """Ring 1 of the query's cell ends at the rounded edge 0.45; ref 2
+    at the double just below it floors into the cell beyond. Its
+    distance is below the query's gap to that edge, so the ring-1
+    candidate (ref 1, distance 0.3) must not finish the query."""
+    from ffcl_spark.operators.knn_kernel import knn_join_grid
+
+    cfg = EngineConfig(x0=-0.3, y0=-0.3, domain=1.0, resolution=2)
+    q = pd.DataFrame({"id": [0], "x": [0.15], "y": [0.0]})
+    refs = pd.DataFrame({"id": [1, 2], "x": [-0.15, 0.44999999999999996], "y": [0.0, 0.0]})
+    got = knn_join_grid(spark.createDataFrame(q), spark.createDataFrame(refs), 1, cfg).toPandas()
+    _, on, od = K.knn(q[["x", "y"]].to_numpy(), refs[["x", "y"]].to_numpy(), refs.id.to_numpy(), 1)
+    assert list(on) == [2]
+    assert list(got.r_id) == [2]
+    assert (got.dist.to_numpy() == od).all()

@@ -144,3 +144,27 @@ def test_knn_grid_blocked_fine_cell_scan(spark, monkeypatch, res):
     assert list(got.r_id) == list(on)
     assert (got.dist.to_numpy() == od).all()
     assert (got["rank"].to_numpy() == np.tile(np.arange(1, k + 1), len(pdf))).all()
+
+
+def test_plan_walks_off_on_unknown_spark_major(spark, monkeypatch):
+    """On a Spark major version whose plan classes the walks do not
+    know, every statistic reads as unknown and checkpoint release
+    falls back to the ContextCleaner: results stay the same."""
+    from ffcl_spark.plans import stats
+
+    cached = spark.range(10).cache()
+    cached.count()
+    ckpt = spark.range(10).localCheckpoint()
+    assert stats.exact_row_count(cached) == 10
+    assert stats.is_checkpointed(ckpt)
+
+    monkeypatch.setattr(stats, "_PLAN_WALKS", False)
+    assert stats.exact_row_count(cached) is None
+    assert stats.plan_size_bytes(cached) == 1 << 62
+    assert not stats.is_checkpointed(ckpt)
+    stats.free_checkpoint(ckpt)
+    stats.free_checkpoint_tree(ckpt)
+    assert ckpt.count() == 10  # blocks were left alone
+    # same answer, from the detection job instead of the exact count
+    assert stats.hot_keys(cached.withColumnRenamed("id", "k"), "k", 10) == []
+    cached.unpersist()
