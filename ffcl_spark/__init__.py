@@ -10,8 +10,8 @@ distances, DBSCAN) re-expressed Spark-first:
   join (all-JVM explode/join/window, or a NumPy ``applyInPandas``
   kernel);
 - FFCL's branch-and-bound sibling prune (reference
-  ``KDNodeView.hpp:235-243``) becomes the ring-expansion termination
-  rule of ``operators.knn``.
+  ``KDNodeView.hpp:235-243``) becomes the termination rule of the
+  grid kNN kernel (``operators.knn_kernel``).
 
 Input data model (BASELINE.json input_hint): Iceberg/parquet tables of
 interleaved text+media documents

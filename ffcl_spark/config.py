@@ -33,9 +33,6 @@ class EngineConfig:
     hot_cell_rows: int = 2_000_000
     salt_buckets: int = 16
 
-    # kNN ring expansion bounds.
-    max_rounds: int = 6
-
     @property
     def cell_size(self) -> float:
         return self.domain / (1 << self.resolution)

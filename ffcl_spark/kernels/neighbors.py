@@ -61,30 +61,44 @@ def pairwise_sq(q: np.ndarray, r: np.ndarray) -> np.ndarray:
     return d
 
 
+def fold_dist(q_cols, r_cols, metric: str = "euclidean") -> np.ndarray:
+    """Distances between every query and every ref as a LEFT FOLD over
+    paired coordinate columns, in dimension order: ``((t0 + t1) + t2)
+    + …`` with ``t = d*d`` (euclidean, sqrt'd at the end) or
+    ``t = abs(d)`` (manhattan), ``d = q - r``. Columns are 1-D float64
+    arrays; the result has shape (len(q), len(r)).
+
+    The fold starts from the first term, not from 0.0: every term is
+    ≥ 0 or NaN, so ``0.0 + t == t`` and the result is bit-equal to the
+    SQL ``aggregate(zip_with(...), 0.0, acc + v)``. In 2-D it is exactly
+    ``sqrt(dx*dx + dy*dy)`` / ``abs(dx) + abs(dy)``, the planar SQL
+    distance expressions."""
+    if metric not in ("euclidean", "manhattan"):
+        raise ValueError(f"unknown metric {metric!r}")
+    l1 = metric == "manhattan"
+    acc = None
+    for qc, rc in zip(q_cols, r_cols):
+        d = qc[:, None] - rc[None, :]
+        t = np.abs(d) if l1 else d * d
+        acc = t if acc is None else acc + t
+    return acc if l1 else np.sqrt(acc)
+
+
 def pairwise_fold_nd(q: np.ndarray, r: np.ndarray, metric: str = "euclidean") -> np.ndarray:
-    """n-D distances in LEFT-FOLD accumulation order — the identical
-    IEEE operation sequence as the engine's SQL expression
-    ``aggregate(zip_with(q, r, (a,b) -> (a-b)*(a-b)), 0.0, acc+v)``
-    (a sequential fold over dimensions), so the NumPy oracle and the
-    all-JVM n-D path produce bit-equal distances. Returns the final
-    (sqrt'd for euclidean) distance matrix, shape (len(q), len(r)).
+    """n-D distances in LEFT-FOLD accumulation order (:func:`fold_dist`
+    over the matrix columns) — the identical IEEE operation sequence as
+    the engine's SQL expression
+    ``aggregate(zip_with(q, r, (a,b) -> (a-b)*(a-b)), 0.0, acc+v)``,
+    so the NumPy oracle and the SQL n-D path produce bit-equal
+    distances. Returns the final (sqrt'd for euclidean) distance
+    matrix, shape (len(q), len(r)).
 
     Reference n-features contract: ``KDTree.hpp:137`` (ctor takes
     n_features; all distance kernels are dimension-generic,
     ``Distances.hpp:44-117``)."""
     q = np.asarray(q, dtype=np.float64)
     r = np.asarray(r, dtype=np.float64)
-    acc = np.zeros((q.shape[0], r.shape[0]), dtype=np.float64)
-    if metric == "euclidean":
-        for j in range(q.shape[1]):
-            d = q[:, j][:, None] - r[:, j][None, :]
-            acc = acc + d * d  # fold order: ((0 + d0²) + d1²) + …
-        return np.sqrt(acc)
-    if metric == "manhattan":
-        for j in range(q.shape[1]):
-            acc = acc + np.abs(q[:, j][:, None] - r[:, j][None, :])
-        return acc
-    raise ValueError(f"unknown metric {metric!r}")
+    return fold_dist(q.T, r.T, metric)
 
 
 def knn_nd(

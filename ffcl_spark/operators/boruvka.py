@@ -118,7 +118,7 @@ def minimum_spanning_tree(
     ``features_col``: when given, points carry an n-D
     ``array<double>`` feature column instead of (x, y) — the reference
     n-features contract (``KDTree.hpp:137``). Neighbor queries route
-    through the n-D ring-expansion join (grid on ``axes``); distances
+    through the n-D kNN join (grid on ``axes``); distances
     are the full n-D metric, bit-equal between the distributed fold and
     the local Prim kernel.
 

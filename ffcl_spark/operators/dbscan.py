@@ -153,7 +153,7 @@ def _dbscan_from_pairs(
         [T.StructField("id", id_type), T.StructField("comp", id_type)]
     )
 
-    def local_components(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def local_components(key, pdf):
         # fully vectorized connected components: min-label propagation
         # with pointer jumping (Shiloach–Vishkin style) — no per-edge
         # Python loop, so a dense hot cell stays NumPy-bound.

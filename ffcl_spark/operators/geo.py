@@ -12,8 +12,8 @@ Chord distance on the embedded points is STRICTLY MONOTONE with
 great-circle distance (gc = 2·R·asin(chord/2)), so
 
 - geodesic kNN  == 3-D Euclidean kNN over the embedding
-  (:func:`ffcl_spark.operators.search_nd.knn_join_nd` — the proven
-  ring-expansion/blocked plans, exact, ties by r_id preserved);
+  (:func:`ffcl_spark.operators.search_nd.knn_join_nd` — its closure,
+  grid-kernel and blocked plans, exact, ties by r_id preserved);
 - geodesic radius r == 3-D radius 2·sin(r/2R) over the embedding
   (:func:`radius_join_nd` — a-priori Chebyshev cell cover, hot-cell
   salting).
@@ -400,8 +400,10 @@ def geo_knn_join(
 
     ``plan="sphere"`` (default): expanding-radius search over the
     latitude-band spherical grid (:func:`sphere_knn_join` — the
-    corpus-scale path). ``plan="embed"``: ring expansion through the
-    3-D embedding's projected grid — the independent correctness twin.
+    corpus-scale path). ``plan="embed"``: the 3-D embedding through
+    :func:`ffcl_spark.operators.search_nd.knn_join_nd`'s automatic plan
+    choice — the independent correctness twin; ``"local"``, ``"grid"``
+    and ``"blocked"`` force one of its plans.
     Rank order under chord == rank order under great-circle distance
     (strict monotonicity), ties broken by r_id in both framings — so
     the planar kNN result-set contract (k smallest, deterministic
@@ -417,7 +419,7 @@ def geo_knn_join(
             **knn_kwargs,
         )
     # any plan other than sphere/embed names an n-D physical plan
-    # (auto/ring/blocked) and is forwarded to the embedding machinery
+    # (local/grid/blocked) and is forwarded to the embedding machinery
     out = knn_join_nd(
         geo_points(queries, lat_col=lat_col, lon_col=lon_col),
         geo_points(refs, lat_col=lat_col, lon_col=lon_col),

@@ -202,7 +202,7 @@ def kmedoids_per_cell(
         ]
     )
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         from ffcl_spark.kernels.neighbors import pairwise_fold_nd
 
         pdf = pdf.sort_values("id").reset_index(drop=True)

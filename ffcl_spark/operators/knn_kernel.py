@@ -1,20 +1,27 @@
-"""The engine's planar kNN join: a two-level cogrouped NumPy kernel.
+"""The engine's grid kNN join: a two-level cogrouped NumPy kernel.
 
 :func:`knn_join_grid` keeps the grid decomposition (grid = the global
-kd-tree levels) and runs the leaf scan as a *cogrouped Arrow kernel*:
+kd-tree levels) and runs the leaf scan as a *cogrouped Arrow kernel*.
+The grid lives on the two columns ``x``, ``y``; the distance is a left
+fold over a tuple of coordinate columns (``coords``), so the same
+kernel serves planar points (``("x", "y")``) and low-dimension n-D
+points projected onto two grid axes
+(:func:`ffcl_spark.operators.search_nd.knn_join_nd`):
 
 - queries and refs group by a coarse cell (refs replicated to the
   groups their fine ring-1 neighborhood touches, one shuffle);
 - per fine query cell, a NumPy block scan computes exact top-k against
   the 3×3 fine neighborhood (float64, same IEEE operation order as the
   SQL distance expressions → bit-equal distances), in query blocks of
-  at most ``PAIR_BUDGET`` distances;
+  at most ``PAIR_BUDGET`` distances. A projection never exceeds the
+  full distance, so the grid prune stays exact in n-D;
 - the FFCL sibling-prune termination (``KDNodeView.hpp:235-243``) is
   evaluated *inside* the kernel: a query whose k-th distance is
   strictly below the guaranteed-covered radius is done; the (rare)
   rest are scanned against every ref in one broadcast pass.
 
-``search.knn_join`` and ``search.core_distances`` run on it.
+``search.knn_join``, ``search.core_distances`` and the low-dimension
+plan of ``search_nd.knn_join_nd`` run on it.
 ``knn_join_kernel``, the former fine-cell cogroup plan, is an alias:
 the grouping decides which task scans a fine cell, never which rows
 the scan returns.
@@ -36,7 +43,7 @@ from pyspark.sql.window import Window
 from ffcl_spark.config import EngineConfig
 from ffcl_spark.functions import cells as C
 from ffcl_spark.kernels import grid as G
-from ffcl_spark.kernels.neighbors import topk_rows
+from ffcl_spark.kernels.neighbors import fold_dist, topk_rows
 from ffcl_spark.plans.cache import carry
 from ffcl_spark.plans.stats import hot_keys
 
@@ -95,6 +102,7 @@ def knn_join_grid(
     hot_group_rows: int | None = 2_000_000,
     hot_groups: list[int] | None = None,
     metric: str = "euclidean",
+    coords: tuple[str, ...] = ("x", "y"),
 ) -> DataFrame:
     """(q_id, r_id, dist, rank) — exact kNN, FFCL semantics, ties by
     r_id; self included when queries ⊆ refs. A two-level decomposition
@@ -118,6 +126,14 @@ def knn_join_grid(
     (``abs(dx) + abs(dy)``, the reference's L1 dispatch for integral
     data, ``Distances.hpp:94-117``) — the same IEEE operations as the
     SQL ``search.DIST``/``DIST_L1``, so distances are bit-equal.
+
+    ``coords``: the double columns the distance folds over, in
+    dimension order (:func:`ffcl_spark.kernels.neighbors.fold_dist`).
+    Grid keys, hot groups and the done rule always use ``x`` and
+    ``y``; they must be a projection of ``coords`` (two of them), so
+    the projected distance never exceeds the full one and the done
+    rule stays exact. ``("x", "y")`` is the planar join;
+    ``search_nd.knn_join_nd`` passes the flattened vector.
 
     Termination is the FFCL sibling-prune rule at fine ring 1
     (``KDNodeView.hpp:235-243``): a query is done when its k-th
@@ -159,7 +175,7 @@ def knn_join_grid(
     else:
         hot = []
 
-    grouped = _grid_pass(queries, refs, k, cfg, group_delta, hot, metric).persist()
+    grouped = _grid_pass(queries, refs, k, cfg, group_delta, hot, metric, coords).persist()
     out = grouped.where(F.col("done")).select("q_id", "r_id", "dist", "rank")
     if checkpoint:
         # iterative callers: checkpoint final rows off the cached
@@ -175,8 +191,10 @@ def knn_join_grid(
     # in round 2).
     not_done = grouped.where(~F.col("done")).select(F.col("q_id").alias("id"))
     if not not_done.isEmpty():
-        pend = queries.join(not_done.distinct(), "id", "left_semi").select("id", "x", "y")
-        tail = _broadcast_pass(pend.toPandas(), queries.schema["id"].dataType, refs, k, metric)
+        pend = queries.join(not_done.distinct(), "id", "left_semi").select("id", *coords)
+        tail = _broadcast_pass(
+            pend.toPandas(), queries.schema["id"].dataType, refs, k, metric, coords
+        )
         if checkpoint:
             tail = tail.localCheckpoint()
         out = out.unionByName(tail)
@@ -187,7 +205,12 @@ def knn_join_grid(
 
 
 def _broadcast_pass(
-    pend: pd.DataFrame, q_type: T.DataType, refs: DataFrame, k: int, metric: str
+    pend: pd.DataFrame,
+    q_type: T.DataType,
+    refs: DataFrame,
+    k: int,
+    metric: str,
+    coords: tuple[str, ...],
 ) -> DataFrame:
     """Exact (q_id, r_id, dist, rank) of the few pending queries
     against every ref: the queries ship with the task closure, the refs
@@ -195,22 +218,19 @@ def _broadcast_pass(
     time, and a window over q_id merges the per-batch top-k by
     (dist, r_id). Work is pending × refs distances."""
     qids = pend["id"].to_numpy()
-    qx = pend["x"].to_numpy()
-    qy = pend["y"].to_numpy()
-    l1 = metric == "manhattan"
+    qcols = [pend[c].to_numpy() for c in coords]
 
     def scan(batches):
         for b in batches:
             if len(b) == 0:
                 continue
             o = np.argsort(b["id"].to_numpy(), kind="stable")  # columns in id order
-            rids, rx, ry = (b[c].to_numpy()[o] for c in ("id", "x", "y"))
+            rids = b["id"].to_numpy()[o]
+            rcols = [b[c].to_numpy()[o] for c in coords]
             kk = min(k, len(rids))
             step = max(16, PAIR_BUDGET // len(rids))
             for s in range(0, len(qids), step):
-                dxm = qx[s : s + step, None] - rx[None, :]
-                dym = qy[s : s + step, None] - ry[None, :]
-                d = np.abs(dxm) + np.abs(dym) if l1 else np.sqrt(dxm * dxm + dym * dym)
+                d = fold_dist([qc[s : s + step] for qc in qcols], rcols, metric)
                 part, dd = topk_rows(d, kk)
                 yield pd.DataFrame(
                     {
@@ -229,7 +249,7 @@ def _broadcast_pass(
     )
     w = Window.partitionBy("q_id").orderBy("dist", "r_id")
     return (
-        refs.select("id", "x", "y")
+        refs.select("id", *coords)
         .mapInPandas(scan, schema)
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
@@ -244,21 +264,22 @@ def _grid_pass(
     group_delta: int,
     hot: list[int],
     metric: str,
+    coords: tuple[str, ...],
 ) -> DataFrame:
     """The grid pass of :func:`knn_join_grid`: the cogrouped kernel's
     (q_id, r_id, dist, rank, done) rows, one row set per query (a
     NaN placeholder row for a query with no candidate)."""
     id_type = queries.schema["id"].dataType
     grid_n = cfg.grid_n
-    l1 = metric == "manhattan"
+    # the grid columns ship once even when they are also coordinates
+    shipped = list(dict.fromkeys(("x", "y", *coords)))
 
     FINE_FLAG = 1 << 53  # keeps fine-cell group keys disjoint from coarse keys
 
     fcell = C.cell_id(F.col("x"), F.col("y"), cfg)
     r_base = refs.select(
         F.col("id").alias("r_id"),
-        F.col("x").alias("r_x"),
-        F.col("y").alias("r_y"),
+        *[F.col(c).alias(f"r_{c}") for c in shipped],
         fcell.alias("fcell"),
     )
 
@@ -272,8 +293,7 @@ def _grid_pass(
 
     q = queries.select(
         F.col("id").alias("q_id"),
-        F.col("x").alias("q_x"),
-        F.col("y").alias("q_y"),
+        *[F.col(c).alias(f"q_{c}") for c in shipped],
         fcell.alias("fcell"),
     ).withColumn(
         "grp", gkey(C.cell_ix(F.col("fcell")), C.cell_iy(F.col("fcell")))
@@ -315,22 +335,22 @@ def _grid_pass(
             return empty
         qx = qpdf["q_x"].to_numpy()
         qy = qpdf["q_y"].to_numpy()
+        qcols = [qpdf[f"q_{c}"].to_numpy() for c in coords]
         qids = qpdf["q_id"].to_numpy()
         qfx, qfy = G.cell_ixy(qpdf["fcell"].to_numpy())
         nr = len(rpdf)
         # bucket refs by fine cell. Ids are ranked into integer codes
         # ONCE per group (one object sort) so all per-block tie-break
         # work is integer-only.
-        rx = rpdf["r_x"].to_numpy()
-        ry = rpdf["r_y"].to_numpy()
         rids = rpdf["r_id"].to_numpy()
         id_rank = np.empty(nr, dtype=np.int64)
         id_rank[np.argsort(rids, kind="stable")] = np.arange(nr)
-        rfx = G.axis_index(rx, cfg.x0, cfg.cell_size, grid_n)
-        rfy = G.axis_index(ry, cfg.y0, cfg.cell_size, grid_n)
+        rfx = G.axis_index(rpdf["r_x"].to_numpy(), cfg.x0, cfg.cell_size, grid_n)
+        rfy = G.axis_index(rpdf["r_y"].to_numpy(), cfg.y0, cfg.cell_size, grid_n)
         rkey = rfx * grid_n + rfy
         order = np.lexsort((id_rank, rkey))
-        rx, ry, rids, rkey = rx[order], ry[order], rids[order], rkey[order]
+        rcols = [rpdf[f"r_{c}"].to_numpy()[order] for c in coords]
+        rids, rkey = rids[order], rkey[order]
         rcode = id_rank[order]
 
         qkey = qfx * grid_n + qfy
@@ -373,20 +393,16 @@ def _grid_pass(
             # candidate columns in ascending id-code order (int sort)
             cid_order = np.argsort(rcode[cand], kind="stable")
             cand = cand[cid_order]
-            crx, cry = rx[cand], ry[cand]
+            ccols = [rc[cand] for rc in rcols]
             kk = min(k, len(cand))
             ranks = np.arange(1, kk + 1, dtype="int32")
             step = max(16, PAIR_BUDGET // len(cand))
             for s in range(0, len(blk), step):
                 sub = blk[s : s + step]
-                bqx = qx[sub]
-                bqy = qy[sub]
-                dxm = bqx[:, None] - crx[None, :]
-                dym = bqy[:, None] - cry[None, :]
                 # sqrt before ranking — tie-break is on the final distance
-                d = np.abs(dxm) + np.abs(dym) if l1 else np.sqrt(dxm * dxm + dym * dym)
+                d = fold_dist([qc[sub] for qc in qcols], ccols, metric)
                 part, dd = topk_rows(d, kk)
-                gr = G.guaranteed_radius(bqx, bqy, a, b, 1, cfg)
+                gr = G.guaranteed_radius(qx[sub], qy[sub], a, b, 1, cfg)
                 done = (grid_n <= 1) | ((kk >= k) & (dd[:, -1] < gr))
                 acc_q.append(np.repeat(qids[sub], kk))
                 acc_r.append(rids[cand[part.ravel()]])

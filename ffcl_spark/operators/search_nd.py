@@ -11,9 +11,11 @@ same physical plans to ``(id, features: array<double>)`` inputs:
   MaximumSpread policy of ``AxisSelectionPolicy.hpp:46-71`` is
   available via :func:`select_axes`) — the distributed analogue of the
   kd-tree's top-level split axes;
-- DISTANCE is the full n-D metric, evaluated JVM-side as a sequential
-  fold ``aggregate(zip_with(q, r, (a,b)->(a-b)*(a-b)), 0.0, acc+v)``
-  — bit-equal to the NumPy oracle ``kernels.neighbors.pairwise_fold_nd``.
+- DISTANCE is the full n-D metric as a sequential fold over the
+  dimensions: JVM-side ``aggregate(zip_with(q, r, (a,b)->(a-b)*(a-b)),
+  0.0, acc+v)`` in the radius join, NumPy-side
+  ``kernels.neighbors.fold_dist`` in the kNN plans — bit-equal to the
+  oracle ``kernels.neighbors.pairwise_fold_nd``.
 
 Correctness of the projection pruning (both metrics): the projected
 2-D distance never exceeds the full n-D distance, so
@@ -24,22 +26,31 @@ Correctness of the projection pruning (both metrics): the projected
     sibling-prune rule (``KDNodeView.hpp:235-243``) remains exact. The
     prune weakens as dimensionality grows (curse of dimensionality:
     the projection covers more candidates), but never admits a wrong
-    answer — stragglers fall through to the brute backstop.
+    answer — the queries it leaves open go to the grid kernel's
+    broadcast pass against every ref.
 
-Scale shape: arrays ride the shuffle only up to the moment the
-distance is computed; the rank/window and every iterative round
-operate on (id, id, dist) scalars.
+Scale shape: the low-dimension kNN plan flattens each vector into
+scalar double columns before it reaches the grid kernel
+(:func:`ffcl_spark.operators.knn_kernel.knn_join_grid`), so no array
+crosses Arrow; the blocked plans' merge windows run on
+(id, id, dist) scalars.
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ffcl_spark.config import EngineConfig
 from ffcl_spark.functions import cells as C
+from ffcl_spark.kernels.neighbors import pairwise_fold_nd, pairwise_sq, topk_rows
+from ffcl_spark.operators.knn_kernel import PAIR_BUDGET, knn_join_grid
+from ffcl_spark.plans.cache import carry
 from ffcl_spark.plans.stats import exact_row_count, salt_hot_keys
 
 
@@ -150,6 +161,30 @@ def radius_join_nd(
     )
 
 
+def _topk_blocks(qmat, qids, rmat, rids, k: int, metric: str):
+    """Exact top-k rows (q_id, r_id, dist, rank) of each query against
+    every ref, refs in ascending id order: fold-order NumPy scans with
+    the exact (dist, id) tie-break, in query blocks of at most
+    ``PAIR_BUDGET`` distances (the grid kernel's bound), so the block
+    stays the same size however many refs there are."""
+    kk = min(k, len(rids))
+    if kk == 0:
+        return
+    step = max(16, PAIR_BUDGET // len(rids))
+    ranks = np.arange(1, kk + 1, dtype="int32")
+    for s in range(0, len(qmat), step):
+        e = min(s + step, len(qmat))
+        part, dd = topk_rows(pairwise_fold_nd(qmat[s:e], rmat, metric), kk)
+        yield pd.DataFrame(
+            {
+                "q_id": np.repeat(qids[s:e], kk),
+                "r_id": rids[part.ravel()],
+                "dist": dd.ravel(),
+                "rank": np.tile(ranks, e - s),
+            }
+        )
+
+
 def _knn_nd_local_refs(
     queries: DataFrame,
     refs: DataFrame,
@@ -158,31 +193,23 @@ def _knn_nd_local_refs(
     metric: str,
 ) -> DataFrame:
     """Exact n-D kNN with the refs shipped in the task closure: ONE
-    narrow pass over the queries (mapInPandas), fold-order NumPy block
-    scan + exact (dist, id) tie-break per batch — no shuffle at all.
+    narrow pass over the queries (mapInPandas), :func:`_topk_blocks`
+    per batch — no shuffle at all.
 
     This is the reference's own regime (FFCL is a single-node
     in-memory engine; ``KDTree.hpp`` holds the whole ref set), kept
     for ref sets up to ``LOCAL_REFS_LIMIT``: in high dimensions the
-    projected-grid prune weakens (curse of dimensionality), so for
-    closure-sized refs a blocked brute scan is both exact and strictly
-    faster than iterative ring rounds."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ffcl_spark.kernels.neighbors import BLOCK, pairwise_fold_nd, topk_rows
-
+    projected-grid prune weakens (curse of dimensionality), and a
+    blocked brute scan of closure-sized refs is exact with no
+    shuffle."""
     rpdf = (
         refs.select("id", F.col(vec_col).cast("array<double>").alias("v"))
         .toPandas()
         .sort_values("id")
         .reset_index(drop=True)
     )
-    import numpy as np
-
     rmat = np.array(rpdf["v"].tolist(), dtype=np.float64)
     rids = rpdf["id"].to_numpy()
-    kk = min(k, len(rids))
     id_type = queries.schema["id"].dataType
     out_schema = T.StructType(
         [
@@ -199,21 +226,7 @@ def _knn_nd_local_refs(
             if len(pdf) == 0:
                 continue
             qmat = np.array(pdf["v"].tolist(), dtype=np.float64)
-            qids = pdf["id"].to_numpy()
-            for s in range(0, len(qmat), BLOCK):
-                e = min(s + BLOCK, len(qmat))
-                d = pairwise_fold_nd(qmat[s:e], rmat, metric)
-                part, dd = topk_rows(d, kk)
-                yield pd.DataFrame(
-                    {
-                        "q_id": np.repeat(qids[s:e], kk),
-                        "r_id": rids[part.ravel()],
-                        "dist": dd.ravel(),
-                        "rank": np.tile(
-                            np.arange(1, kk + 1, dtype="int32"), e - s
-                        ),
-                    }
-                )
+            yield from _topk_blocks(qmat, pdf["id"].to_numpy(), rmat, rids, k, metric)
 
     return sel.mapInPandas(kernel, out_schema)
 
@@ -221,32 +234,19 @@ def _knn_nd_local_refs(
 LOCAL_REFS_LIMIT = 100_000
 
 
-def radius_join_nd_blocked(
+def _blocked_inputs(
     queries: DataFrame,
     refs: DataFrame,
-    radius: float,
-    vec_col: str = "features",
-    metric: str = "euclidean",
-    ref_block_rows: int = 20_000,
-    query_block_rows: int = 8_192,
-    chunk: int = 512,
-) -> DataFrame:
-    """Exact n-D radius join (strict ``dist < radius``) with no index
-    assumption — the high-dimension companion of
-    :func:`knn_join_nd_blocked`: at high dims the projected-grid cover
-    of :func:`radius_join_nd` prunes nothing, so the exact plan is the
-    blocked brute cogroup. Same block/replication scheme; the kernel
-    emits only the passing pairs, so output volume is the true result
-    size. No merge stage is needed (radius is per-pair, not per-query
-    ranking)."""
-    import math
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ffcl_spark.kernels.neighbors import pairwise_fold_nd
-
+    vec_col: str,
+    ref_block_rows: int,
+    query_block_rows: int,
+) -> tuple[DataFrame, DataFrame]:
+    """The blocked brute cogroup's two sides, (q_id, v, blk) and
+    (r_id, v, blk): refs hash into ⌈nr/ref_block_rows⌉ blocks (more
+    when the cores would sit idle), queries into
+    ⌈nq/query_block_rows⌉; each query replicates to every ref block
+    and each ref to every query block, so group ``blk`` pairs one
+    query block with one ref block."""
     # exact cache statistics replace the sizing count jobs when known
     # (persisted inputs — the common iterative-caller shape)
     nq = exact_row_count(queries) or queries.count()
@@ -284,6 +284,28 @@ def radius_join_nd_blocked(
         .withColumn("qb", F.explode(F.sequence(F.lit(0), F.lit(n_qb - 1))))
         .select("r_id", "v", (F.col("qb") * n_rb + F.col("rb")).alias("blk"))
     )
+    return q, r
+
+
+def radius_join_nd_blocked(
+    queries: DataFrame,
+    refs: DataFrame,
+    radius: float,
+    vec_col: str = "features",
+    metric: str = "euclidean",
+    ref_block_rows: int = 20_000,
+    query_block_rows: int = 8_192,
+    chunk: int = 512,
+) -> DataFrame:
+    """Exact n-D radius join (strict ``dist < radius``) with no index
+    assumption — the high-dimension companion of
+    :func:`knn_join_nd_blocked`: at high dims the projected-grid cover
+    of :func:`radius_join_nd` prunes nothing, so the exact plan is the
+    blocked brute cogroup. Same block/replication scheme; the kernel
+    emits only the passing pairs, so output volume is the true result
+    size. No merge stage is needed (radius is per-pair, not per-query
+    ranking)."""
+    q, r = _blocked_inputs(queries, refs, vec_col, ref_block_rows, query_block_rows)
 
     out_schema = T.StructType(
         [
@@ -329,8 +351,8 @@ def knn_join_nd_blocked(
     """Exact n-D kNN join with NO index assumption — the high-
     dimension scale path past the closure limit, where the projected-
     2-axis grid prune admits nearly everything (curse of
-    dimensionality) and ring expansion degenerates to iterated
-    near-brute rounds with window shuffles.
+    dimensionality) and the grid pass degenerates to a near-brute
+    scan that leaves most queries to the broadcast pass.
 
     Plan (one shuffle + one scalar merge, reference contract
     ``KDTree.hpp:137`` — exact any-d):
@@ -353,54 +375,10 @@ def knn_join_nd_blocked(
     faster, the euclidean throughput path): the same exact neighbor
     sets, with distance values differing only in rounding order.
     """
-    import math
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from ffcl_spark.kernels.neighbors import pairwise_fold_nd, pairwise_sq, topk_rows
-
     if metric != "euclidean":
         precise = True  # BLAS form is euclidean-only
 
-    # exact cache statistics replace the sizing count jobs when known
-    # (persisted inputs — the common iterative-caller shape)
-    nq = exact_row_count(queries) or queries.count()
-    nr = exact_row_count(refs) or refs.count()
-    n_rb = max(1, math.ceil(nr / ref_block_rows))
-    n_qb = max(1, math.ceil(nq / query_block_rows))
-    # scale-adaptive parallelism floor (guide §2): the cogroup gets
-    # exactly n_qb·n_rb group keys, hashed into shuffle partitions —
-    # so a ref set of a few × ref_block_rows would otherwise occupy a
-    # handful of cores, and with exactly `par` keys the balls-in-bins
-    # collision tail still leaves cores idle. Split refs until the key
-    # count reaches ~4× the scheduler's parallelism (evens the hash
-    # tail) — but never below ~2k refs per block (keeps each block's
-    # NumPy scan fat enough to stay vectorization-bound). Queries
-    # replicate ×n_rb (the cheap side); refs still shuffle exactly
-    # once when n_qb == 1.
-    par = queries.sparkSession.sparkContext.defaultParallelism
-    n_rb = max(n_rb, min(math.ceil(4 * par / n_qb), max(1, nr // 2000)))
-
-    q = (
-        queries.select(
-            F.col("id").alias("q_id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-            F.pmod(F.xxhash64("id"), F.lit(n_qb)).alias("qb"),
-        )
-        .withColumn("rb", F.explode(F.sequence(F.lit(0), F.lit(n_rb - 1))))
-        .select("q_id", "v", (F.col("qb") * n_rb + F.col("rb")).alias("blk"))
-    )
-    r = (
-        refs.select(
-            F.col("id").alias("r_id"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-            F.pmod(F.xxhash64("id"), F.lit(n_rb)).alias("rb"),
-        )
-        .withColumn("qb", F.explode(F.sequence(F.lit(0), F.lit(n_qb - 1))))
-        .select("r_id", "v", (F.col("qb") * n_rb + F.col("rb")).alias("blk"))
-    )
+    q, r = _blocked_inputs(queries, refs, vec_col, ref_block_rows, query_block_rows)
 
     id_type = queries.schema["id"].dataType
     out_schema = T.StructType(
@@ -457,7 +435,6 @@ def knn_join_nd(
     vec_col: str = "features",
     axes: tuple[int, int] = (0, 1),
     metric: str = "euclidean",
-    start_ring: int = 1,
     local_refs_limit: int = LOCAL_REFS_LIMIT,
     checkpoint: bool = False,
     plan: str = "auto",
@@ -466,128 +443,52 @@ def knn_join_nd(
     semantics (k smallest full-metric distances, ties by r_id, self
     included when queries ⊆ refs).
 
-    Physical plan by refs size (same result either way, tested):
-    - refs ≤ ``local_refs_limit``: closure-shipped refs, one narrow
-      pass over queries (``_knn_nd_local_refs``) — the reference's own
-      single-node regime, no shuffle;
-    - larger refs, dims > 4: blocked brute cogroup
+    Physical plan (``plan="auto"`` picks by refs size and dimension;
+    every plan returns the same rows, tested):
+    - ``"local"``, refs ≤ ``local_refs_limit``: closure-shipped refs,
+      one narrow pass over queries (``_knn_nd_local_refs``) — the
+      reference's own single-node regime, no shuffle;
+    - ``"blocked"``, larger refs with dims > 4: blocked brute cogroup
       (``knn_join_nd_blocked``) — in high dimensions the projected-
-      grid prune admits nearly everything, so exact blocking beats
-      iterated ring rounds;
-    - larger refs, low dims: iterative ring expansion on the projected
-      grid; the guaranteed-covered radius of the searched projection
-      region is a valid full-metric termination bound (see module
-      docstring). Arrays are dropped the moment the distance is
-      computed — every window/aggregation and all survivor state is
-      (id, id, dist) + two projected scalars."""
-    from ffcl_spark.plans.cache import carry
-
+      grid prune admits nearly everything;
+    - ``"grid"``, larger refs in low dims: the planar grid kernel
+      (:func:`ffcl_spark.operators.knn_kernel.knn_join_grid`) with the
+      grid on the projected ``axes`` and the distance folded over
+      every dimension. The vector is flattened into double columns
+      first, so no array crosses Arrow; the projected ring-1 radius is
+      a valid full-metric termination bound (see module docstring),
+      and the queries it leaves open are scanned against every ref in
+      the kernel's broadcast pass. ``checkpoint`` is passed through."""
+    first = None
     if plan == "auto":
         if local_refs_limit and refs.count() <= local_refs_limit:
             plan = "local"
         else:
             first = refs.select(vec_col).first()
-            plan = "blocked" if first is not None and len(first[0]) > 4 else "ring"
+            plan = "blocked" if first is not None and len(first[0]) > 4 else "grid"
     if plan == "local":
         return _knn_nd_local_refs(queries, refs, k, vec_col, metric)
     if plan == "blocked":
         return knn_join_nd_blocked(queries, refs, k, vec_col, metric)
+    if plan != "grid":
+        raise ValueError(f"unknown plan {plan!r}")
     a0, a1 = axes
-    w = Window.partitionBy("q_id").orderBy("dist", "r_id")
+    if first is None:
+        first = refs.select(vec_col).first() or queries.select(vec_col).first()
+    dims = len(first[0]) if first is not None else max(a0, a1) + 1
+    # the grid axes are named x and y in place, so they ship once
+    names = ["x" if j == a0 else "y" if j == a1 else f"c{j}" for j in range(dims)]
 
-    r = _tag_nd(refs, "r", vec_col).withColumn(
-        "cell", C.cell_id(_proj(F.col("r_vec"), a0), _proj(F.col("r_vec"), a1), cfg)
-    ).persist()
+    def flat(df: DataFrame) -> DataFrame:
+        v = F.col(vec_col).cast("array<double>")
+        cols = [F.element_at(v, j + 1).alias(n) for j, n in enumerate(names)]
+        if a0 == a1:
+            cols.append(F.element_at(v, a1 + 1).alias("y"))
+        return df.select("id", *cols)
 
-    pending = _tag_nd(queries, "q", vec_col).withColumn(
-        "q_px", _proj(F.col("q_vec"), a0)
-    ).withColumn("q_py", _proj(F.col("q_vec"), a1)).withColumn(
-        "q_cell", C.cell_id(F.col("q_px"), F.col("q_py"), cfg)
+    return knn_join_grid(
+        flat(queries), flat(refs), k, cfg, checkpoint=checkpoint, metric=metric, coords=tuple(names)
     )
-    done_parts: list[DataFrame] = []
-    retained: list[DataFrame] = []  # persisted topk per round (checkpoint=False)
-    survivors: DataFrame | None = None
-    ring_lo = 0
-    ring_hi = start_ring
-    max_ring = cfg.grid_n
-
-    for _ in range(cfg.max_rounds):
-        probe = pending.withColumn(
-            "cell",
-            F.explode(
-                F.array_except(
-                    C.neighbor_cells(F.col("q_cell"), ring_hi, cfg),
-                    C.neighbor_cells(F.col("q_cell"), ring_lo - 1, cfg)
-                    if ring_lo > 0
-                    else F.array().cast("array<long>"),
-                )
-            ),
-        )
-        cand = (
-            probe.join(r, "cell")
-            .withColumn("dist", dist_nd(F.col("q_vec"), F.col("r_vec"), metric))
-            .select("q_id", "q_px", "q_py", "q_cell", "r_id", "dist")
-        )
-        if survivors is not None:
-            cand = cand.unionByName(survivors)
-        topk = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-        ).persist()
-
-        gr = C.guaranteed_radius(
-            F.col("q_px"), F.col("q_py"), F.col("q_cell"), ring_hi, cfg
-        )
-        covers_all = ring_hi >= max_ring
-        per_q = topk.groupBy("q_id", "q_px", "q_py", "q_cell").agg(
-            F.count(F.lit(1)).alias("n_cand"),
-            F.max("dist").alias("kth"),
-        )
-        done_q = per_q.where(
-            F.lit(covers_all) | ((F.col("n_cand") >= k) & (F.col("kth") < gr))
-        ).select("q_id")
-        done = topk.join(done_q, "q_id").select("q_id", "r_id", "dist", "rank")
-        if checkpoint:
-            done = done.localCheckpoint()
-        done_parts.append(done)
-        pend_q = pending.join(done_q, "q_id", "left_anti").persist()
-        if not checkpoint:
-            retained.append(topk)
-        n_pend = pend_q.count()
-        if n_pend == 0:
-            pend_q.unpersist()
-            if checkpoint:
-                topk.unpersist()
-            pending = None
-            break
-        survivors = topk.join(pend_q.select("q_id"), "q_id").select(
-            "q_id", "q_px", "q_py", "q_cell", "r_id", "dist"
-        ).localCheckpoint()
-        pending = pend_q.select(
-            "q_id", "q_vec", "q_px", "q_py", "q_cell"
-        ).localCheckpoint()
-        pend_q.unpersist()
-        if checkpoint:
-            topk.unpersist()
-        ring_lo = ring_hi + 1
-        ring_hi = min(max_ring, ring_hi * 2)
-
-    if pending is not None:
-        brute = (
-            pending.crossJoin(r.drop("cell"))
-            .withColumn("dist", dist_nd(F.col("q_vec"), F.col("r_vec"), metric))
-            .withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select("q_id", "r_id", "dist", "rank")
-            .localCheckpoint()
-        )
-        done_parts.append(brute)
-
-    r.unpersist()
-    out = done_parts[0]
-    for p in done_parts[1:]:
-        out = out.unionByName(p)
-    return out if checkpoint else carry(out, *retained)
 
 
 def core_distances_nd(
@@ -601,8 +502,6 @@ def core_distances_nd(
 ) -> DataFrame:
     """(id, core_distance) — n-D form of ``CoreDistances.hpp:39-54``
     (k-th NN distance, self counted)."""
-    from ffcl_spark.plans.cache import carry
-
     nn = knn_join_nd(points, points, k, cfg, vec_col, axes, metric, checkpoint=checkpoint)
     out = nn.groupBy("q_id").agg(F.max("dist").alias("core_distance")).select(
         F.col("q_id").alias("id"), "core_distance"

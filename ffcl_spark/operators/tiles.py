@@ -345,7 +345,7 @@ def rasterize(tiles: DataFrame, cfg: EngineConfig) -> DataFrame:
     s = cfg.cell_size
     x0, y0 = cfg.x0, cfg.y0
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf):
         ring = np.array([[v["x"], v["y"]] for v in pdf["ring"].iloc[0]])
         ix, iy = G.cell_ixy(pdf["cell"].to_numpy())
         # test the cell center and the 4 corners — inside if any hits

@@ -49,6 +49,13 @@ def test_dbscan_parallelism_invariance(spark):
     assert ma == mb
 
 
+@pytest.mark.filterwarnings("error::UserWarning")
+def test_dbscan_grouped_kernel_raises_no_warning(spark):
+    # applyInPandas warns "Cannot infer the eval type from type hints"
+    # on a partially hinted (key, pdf) kernel; the plan must build clean
+    _check(spark, "blobs", 2.0, 5, n=200)
+
+
 def test_dbscan_all_noise(spark, cfg):
     pdf = points_pdf("no_structure", 100)
     df = spark.createDataFrame(pdf)

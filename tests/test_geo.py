@@ -142,7 +142,7 @@ def test_geo_radius_antimeridian_and_pole(spark, world):
     assert len(pole_out) == 144
 
 
-@pytest.mark.parametrize("plan", ["sphere", "embed"])
+@pytest.mark.parametrize("plan", ["sphere", "embed", "grid"])
 def test_geo_knn_brute_parity(spark, world, plan):
     df, pdf = world
     k = 5

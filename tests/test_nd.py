@@ -52,10 +52,11 @@ def _oracle_knn(mat, ids, k, metric="euclidean"):
 
 
 @pytest.mark.parametrize("metric", ["euclidean", "manhattan"])
-@pytest.mark.parametrize("plan", ["local", "ring", "blocked"])
+@pytest.mark.parametrize("plan", ["local", "grid", "blocked"])
 def test_knn_nd_matches_oracle_bitwise(nd_points, nd_cfg, metric, plan):
-    # all three physical plans (closure-shipped refs, ring expansion,
-    # blocked brute) must match the oracle bitwise
+    # all three physical plans (closure-shipped refs, the grid kernel
+    # on the flattened vector, blocked brute) must match the oracle
+    # bitwise
     df, ids, mat = nd_points
     sdf = (
         SN.knn_join_nd(df, df, 4, nd_cfg, metric=metric, plan=plan)
@@ -70,6 +71,73 @@ def test_knn_nd_matches_oracle_bitwise(nd_points, nd_cfg, metric, plan):
     # bit-equality: the JVM fold and the NumPy fold share the IEEE
     # operation order
     assert np.array_equal(sdf["dist"].to_numpy(), odf["dist"].to_numpy())
+
+
+@pytest.mark.parametrize("metric", ["euclidean", "manhattan"])
+def test_knn_nd_grid_3d_matches_oracle_bitwise(spark, nd_cfg, metric):
+    # the low-dimension shape the grid plan serves (the sphere
+    # embedding is 3-D), with grid axes that are not the first two
+    # dimensions, so a non-grid coordinate sits between them
+    mat = _blob_matrix(dims=3, seed=4)
+    ids = np.arange(N, dtype=np.int64)
+    df = spark.createDataFrame(
+        pd.DataFrame({"id": ids, "features": [list(r) for r in mat]}),
+        "id long, features array<double>",
+    )
+    sdf = (
+        SN.knn_join_nd(df, df, 5, nd_cfg, axes=(0, 2), metric=metric, plan="grid")
+        .toPandas()
+        .sort_values(["q_id", "rank"])
+        .reset_index(drop=True)
+    )
+    odf = _oracle_knn(mat, ids, 5, metric)
+    for c in ("q_id", "r_id", "rank"):
+        assert (sdf[c].to_numpy() == odf[c].to_numpy()).all()
+    assert np.array_equal(sdf["dist"].to_numpy(), odf["dist"].to_numpy())
+
+
+def test_fold_dist_is_the_planar_and_sql_fold():
+    # one fold serves both callers: in 2-D it is the planar kernel's
+    # sqrt(dx*dx + dy*dy) / abs(dx) + abs(dy), and in n-D it equals the
+    # SQL fold that starts from 0.0
+    rng = np.random.default_rng(2)
+    q, r = rng.normal(0, 3, (40, 2)), rng.normal(0, 3, (50, 2))
+    dx = q[:, 0][:, None] - r[:, 0][None, :]
+    dy = q[:, 1][:, None] - r[:, 1][None, :]
+    assert np.array_equal(NK.fold_dist(q.T, r.T), np.sqrt(dx * dx + dy * dy))
+    assert np.array_equal(NK.fold_dist(q.T, r.T, "manhattan"), np.abs(dx) + np.abs(dy))
+    q, r = rng.normal(0, 3, (40, 5)), rng.normal(0, 3, (50, 5))
+    acc = np.zeros((40, 50))
+    for j in range(5):
+        d = q[:, j][:, None] - r[:, j][None, :]
+        acc = acc + d * d
+    assert np.array_equal(NK.pairwise_fold_nd(q, r), np.sqrt(acc))
+
+
+def test_local_refs_blocks_stay_within_pair_budget(monkeypatch):
+    # the closure plan scans query blocks against every ref; a block
+    # must hold at most PAIR_BUDGET distances whatever the ref count
+    # (a fixed 2048-row block against 50k refs peaked at 2.4 GB)
+    from ffcl_spark.operators.knn_kernel import PAIR_BUDGET
+
+    shapes = []
+
+    def spy(q, r, metric="euclidean"):
+        shapes.append((len(q), len(r)))
+        return NK.pairwise_fold_nd(q, r, metric)
+
+    monkeypatch.setattr(SN, "pairwise_fold_nd", spy)
+    rng = np.random.default_rng(0)
+    nr, nq = 50_000, 200
+    rmat, qmat = rng.normal(size=(nr, 3)), rng.normal(size=(nq, 3))
+    rids = np.arange(nr, dtype=np.int64)
+    out = pd.concat(list(SN._topk_blocks(qmat, np.arange(nq), rmat, rids, 2, "euclidean")))
+    assert len(out) == 2 * nq
+    assert sum(n for n, _ in shapes) == nq
+    assert max(n * m for n, m in shapes) <= PAIR_BUDGET
+    _, on_, od = NK.knn_nd(qmat, rmat, rids, 2)
+    assert (out["r_id"].to_numpy() == on_).all()
+    assert np.array_equal(out["dist"].to_numpy(), od)
 
 
 def test_knn_nd_parallelism_invariant(nd_points, nd_cfg):
@@ -270,16 +338,25 @@ def test_knn_nd_k_exceeds_refs(spark, nd_cfg):
         ]
     )
     df = spark.createDataFrame(pdf, schema)
-    for limit in (100_000, 0):  # both physical plans
-        out = SN.knn_join_nd(df, df, 10, nd_cfg, local_refs_limit=limit).toPandas()
+    for plan in ("local", "grid", "blocked"):
+        out = SN.knn_join_nd(df, df, 10, nd_cfg, plan=plan).toPandas()
         # min(k, n_refs) = 3 neighbors per query — FFCL result-set size
         assert len(out) == 9
         assert out.groupby("q_id")["rank"].max().eq(3).all()
 
 
+@pytest.mark.parametrize("plan", ["local", "grid", "blocked"])
+def test_knn_nd_empty_refs_returns_no_rows(nd_points, nd_cfg, plan):
+    # no ref, no neighbor: min(k, 0) = 0 rows per query (the closure
+    # plan divided its block size by the ref count)
+    df, _, _ = nd_points
+    assert SN.knn_join_nd(df, df.limit(0), 3, nd_cfg, plan=plan).count() == 0
+
+
 def test_knn_nd_out_of_domain_queries(nd_points, nd_cfg):
     # queries far outside the grid domain clamp to border cells and
-    # must still return exact results (ring path covers the whole grid)
+    # must still return exact results (the grid plan leaves them to
+    # its broadcast pass)
     df, ids, mat = nd_points
     far = np.full((3, DIMS), 50.0) + np.arange(3)[:, None]
     pdf = pd.DataFrame(
@@ -292,14 +369,14 @@ def test_knn_nd_out_of_domain_queries(nd_points, nd_cfg):
         ]
     )
     qdf = df.sparkSession.createDataFrame(pdf, schema)
-    for limit in (100_000, 0):
+    oq, on_, od = NK.knn_nd(far, mat, ids, 2)
+    for plan in ("local", "grid", "blocked"):
         got = (
-            SN.knn_join_nd(qdf, df, 2, nd_cfg, local_refs_limit=limit)
+            SN.knn_join_nd(qdf, df, 2, nd_cfg, plan=plan)
             .toPandas()
             .sort_values(["q_id", "rank"])
             .reset_index(drop=True)
         )
-        oq, on_, od = NK.knn_nd(far, mat, ids, 2)
         assert (got["r_id"].to_numpy() == on_).all()
         assert np.array_equal(got["dist"].to_numpy(), od)
 

@@ -310,31 +310,48 @@ def test_knn_with_memory_all_visited_returns_no_rows(spark, cfg, blobs):
     assert S.knn_with_memory(df, df, df.select("id"), 4, cfg).count() == 0
 
 
-def test_core_distances_checkpoint_leaves_nothing_behind(spark):
+def test_core_distances_checkpoint_leaves_nothing_behind(spark, monkeypatch):
     """Borůvka's contract for ``checkpoint=True``: after the call only
     the checkpointed rows the result reads are left; freeing those
-    leaves no persisted or checkpointed RDD from the call."""
+    leaves no persisted or checkpointed RDD from the call. 2-D points
+    run ``search.core_distances``; 3-D points run
+    ``search_nd.core_distances_nd`` on the same grid kernel."""
+    import functools
+
+    from ffcl_spark.operators import search_nd as SN
     from ffcl_spark.plans.stats import free_checkpoint_tree
 
-    rng = np.random.default_rng(3)
-    # a blob plus far outliers, so some queries need the straggler pass
-    xy = np.vstack([rng.normal(0.0, 1.0, (300, 2)), rng.uniform(-29, 29, (6, 2))])
-    pdf = pd.DataFrame({"id": np.arange(len(xy), dtype=np.int64), "x": xy[:, 0], "y": xy[:, 1]})
-    df = spark.createDataFrame(pdf)
+    # refs this few auto-pick the n-D closure plan; force the grid plan
+    monkeypatch.setattr(SN, "knn_join_nd", functools.partial(SN.knn_join_nd, plan="grid"))
 
     def persistent_ids():
         return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
 
-    id_floor = max(persistent_ids(), default=-1)
+    rng = np.random.default_rng(3)
+    cfg = EngineConfig(resolution=6)
     k = 4
-    out = S.core_distances(df, k, EngineConfig(resolution=6), checkpoint=True)
-    assert logical_rdd_leaves(out) >= 2  # the straggler pass ran
-    got = out.toPandas().set_index("id").core_distance.loc[pdf.id].to_numpy()
-    exp = K.core_distance(xy, pdf.id.to_numpy(), k)
-    assert (got == exp).all()
-    assert not getattr(out, "_ffcl_cached", [])
-    free_checkpoint_tree(out)
-    assert {i for i in persistent_ids() if i > id_floor} == set()
+    for dims in (2, 3):
+        # a blob plus far outliers, so some queries need the straggler pass
+        pts = np.vstack([rng.normal(0.0, 1.0, (300, dims)), rng.uniform(-29, 29, (6, dims))])
+        ids = np.arange(len(pts), dtype=np.int64)
+        if dims == 2:
+            df = spark.createDataFrame(pd.DataFrame({"id": ids, "x": pts[:, 0], "y": pts[:, 1]}))
+            core = functools.partial(S.core_distances, df, k, cfg, checkpoint=True)
+        else:
+            df = spark.createDataFrame(
+                pd.DataFrame({"id": ids, "features": [list(p) for p in pts]}),
+                "id long, features array<double>",
+            )
+            core = functools.partial(SN.core_distances_nd, df, k, cfg, checkpoint=True)
+        id_floor = max(persistent_ids(), default=-1)
+        out = core()
+        assert logical_rdd_leaves(out) >= 2  # the straggler pass ran
+        got = out.toPandas().set_index("id").core_distance.loc[ids].to_numpy()
+        _, _, od = K.knn_nd(pts, pts, ids, k)
+        assert (got == od.reshape(len(pts), k)[:, -1]).all()
+        assert not getattr(out, "_ffcl_cached", [])
+        free_checkpoint_tree(out)
+        assert {i for i in persistent_ids() if i > id_floor} == set()
 
 
 def test_radius_box_prune_sound_across_rounded_edge(spark):
