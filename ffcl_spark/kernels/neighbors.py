@@ -231,6 +231,26 @@ def topk_rows(d: np.ndarray, kk: int) -> tuple[np.ndarray, np.ndarray]:
     return part[:, :kk], dd[:, :kk]
 
 
+def topk_blocks(qids: np.ndarray, rids: np.ndarray, k: int, dist, budget: int):
+    """Exact top-k of every query against every ref, in query blocks
+    of at most ``budget`` distances, so a block stays the same size
+    however many refs there are. ``dist(s, e)`` returns the distance
+    matrix of queries ``s:e`` against every ref, its columns in
+    ``rids`` order, which must be ascending id order: :func:`topk_rows`
+    breaks exact ties by column. Yields flat ``(q_ids, r_ids, dists,
+    ranks)`` arrays per block, ``min(k, len(rids))`` rows per query,
+    ranks from 1. A NaN distance sorts after every number."""
+    kk = min(k, len(rids))
+    if kk == 0:
+        return
+    step = max(16, budget // len(rids))
+    ranks = np.arange(1, kk + 1, dtype="int32")
+    for s in range(0, len(qids), step):
+        e = min(s + step, len(qids))
+        part, dd = topk_rows(dist(s, e), kk)
+        yield np.repeat(qids[s:e], kk), rids[part.ravel()], dd.ravel(), np.tile(ranks, e - s)
+
+
 def radius_pairs(
     q_xy: np.ndarray,
     q_ids: np.ndarray,

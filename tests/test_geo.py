@@ -142,10 +142,16 @@ def test_geo_radius_antimeridian_and_pole(spark, world):
     assert len(pole_out) == 144
 
 
-@pytest.mark.parametrize("plan", ["sphere", "embed", "grid"])
-def test_geo_knn_brute_parity(spark, world, plan):
+@pytest.mark.parametrize("plan", ["sphere", "rounds", "embed", "grid"])
+def test_geo_knn_brute_parity(spark, world, plan, monkeypatch):
     df, pdf = world
     k = 5
+    if plan == "rounds":
+        # the sphere plan's radius rounds, which larger ref sets run
+        import ffcl_spark.operators.geo as G
+
+        monkeypatch.setattr(G, "SPHERE_CLOSURE_REFS", 0)
+        plan = "sphere"
     qs = df.where("id % 11 = 0")
     qpdf = pdf[pdf.id % 11 == 0].reset_index(drop=True)
     got = (

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ffcl_spark.kernels.geo import geo_brute_knn
+from ffcl_spark.operators import geo as G
 from ffcl_spark.operators.geo import sphere_knn_join
 from ffcl_spark.plans.cache import release
 
@@ -72,10 +73,12 @@ def test_tiered_local_start_matches_brute(spark, skewed_geo):
 
 
 @pytest.mark.parametrize("max_rounds", [1, 2])
-def test_round_budget_exhausted_searches_whole_sphere(spark, max_rounds):
+def test_round_budget_exhausted_searches_whole_sphere(spark, max_rounds, monkeypatch):
     """A start radius far below the neighbour spacing and a round
     budget too small to grow out of it: the last round must still
-    search the whole sphere and return k rows per query."""
+    search the whole sphere and return k rows per query. 300 refs
+    would take the closure plan, so the test turns it off."""
+    monkeypatch.setattr(G, "SPHERE_CLOSURE_REFS", 0)
     rng = np.random.default_rng(5)
     n = 300
     lat = np.degrees(np.arcsin(rng.uniform(-1, 1, n)))

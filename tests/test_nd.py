@@ -114,30 +114,31 @@ def test_fold_dist_is_the_planar_and_sql_fold():
     assert np.array_equal(NK.pairwise_fold_nd(q, r), np.sqrt(acc))
 
 
-def test_local_refs_blocks_stay_within_pair_budget(monkeypatch):
-    # the closure plan scans query blocks against every ref; a block
+def test_local_refs_blocks_stay_within_pair_budget():
+    # the closure plans scan query blocks against every ref; a block
     # must hold at most PAIR_BUDGET distances whatever the ref count
     # (a fixed 2048-row block against 50k refs peaked at 2.4 GB)
     from ffcl_spark.operators.knn_kernel import PAIR_BUDGET
 
-    shapes = []
-
-    def spy(q, r, metric="euclidean"):
-        shapes.append((len(q), len(r)))
-        return NK.pairwise_fold_nd(q, r, metric)
-
-    monkeypatch.setattr(SN, "pairwise_fold_nd", spy)
     rng = np.random.default_rng(0)
     nr, nq = 50_000, 200
     rmat, qmat = rng.normal(size=(nr, 3)), rng.normal(size=(nq, 3))
     rids = np.arange(nr, dtype=np.int64)
-    out = pd.concat(list(SN._topk_blocks(qmat, np.arange(nq), rmat, rids, 2, "euclidean")))
-    assert len(out) == 2 * nq
+    shapes = []
+
+    def dist(s, e):
+        shapes.append((e - s, nr))
+        return NK.pairwise_fold_nd(qmat[s:e], rmat)
+
+    blocks = list(NK.topk_blocks(np.arange(nq), rids, 2, dist, PAIR_BUDGET))
+    on = np.concatenate([r for _, r, _, _ in blocks])
+    dd = np.concatenate([d for _, _, d, _ in blocks])
+    assert len(on) == 2 * nq
     assert sum(n for n, _ in shapes) == nq
     assert max(n * m for n, m in shapes) <= PAIR_BUDGET
-    _, on_, od = NK.knn_nd(qmat, rmat, rids, 2)
-    assert (out["r_id"].to_numpy() == on_).all()
-    assert np.array_equal(out["dist"].to_numpy(), od)
+    _, want_n, want_d = NK.knn_nd(qmat, rmat, rids, 2)
+    assert (on == want_n).all()
+    assert np.array_equal(dd, want_d)
 
 
 def test_knn_nd_parallelism_invariant(nd_points, nd_cfg):
