@@ -253,22 +253,18 @@ def sphere_knn_join(
 
     Two plans; the ref count alone picks one, so chunking or batching
     the queries never changes the plan or its bits. ``n_refs`` is that
-    count when the caller knows it; otherwise the plan's exact
-    statistics give it (``plans.stats.exact_row_count``: a persisted
-    or local ref set), or else the closure plan's bounded refs collect
-    finds it, with a count job only when that collect comes back
-    full.
+    count when the caller knows it, and must then be exact; otherwise
+    the plan's exact statistics give it
+    (``plans.stats.exact_row_count``: a persisted or local ref set),
+    or else one count job.
 
     CLOSURE plan, ``n_refs ≤ SPHERE_CLOSURE_REFS``: the refs are
     collected once, sorted by id, and shipped in the task closure; one
     narrow ``mapInPandas`` pass over the queries computes the exact
     top-k (:func:`_sphere_knn_closure`). The refs collect is the only
-    job before return and reads at most ``SPHERE_CLOSURE_REFS + 1``
-    rows per partition; if more come back (a stale ``n_refs``, or an
-    unsized ref set that turns out larger), the call runs the round
-    plan. The result is lazy and carries nothing to release. Its
-    ``dist_m`` is ``kernels.geo.haversine_np``, bit-equal to
-    ``geo_brute_knn``.
+    job before return besides the sizing count. The result is lazy and
+    carries nothing to release. Its ``dist_m`` is
+    ``kernels.geo.haversine_np``, bit-equal to ``geo_brute_knn``.
 
     ROUND plan, larger ref sets: expanding radius over the spherical
     grid — the sphere's analogue of the planar ring expansion (a query
@@ -308,46 +304,28 @@ def sphere_knn_join(
     optimal there)."""
     spark = queries.sparkSession
     if n_refs is None:
-        n_refs = exact_row_count(refs)
+        n_refs = exact_row_count(refs) or refs.count()
     id_type = queries.schema[id_col].dataType.simpleString()
     out_schema = f"q_id {id_type}, r_id {id_type}, dist_m double, rank int"
     if n_refs == 0:
         return spark.createDataFrame([], out_schema)
-    if n_refs is None or n_refs <= SPHERE_CLOSURE_REFS:
 
-        def points(df: DataFrame) -> DataFrame:
-            return df.select(
-                F.col(id_col).alias("id"),
-                F.col(lat_col).cast("double").alias("lat"),
-                F.col(lon_col).cast("double").alias("lon"),
-            )
+    def points(df: DataFrame) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias("id"),
+            F.col(lat_col).cast("double").alias("lat"),
+            F.col(lon_col).cast("double").alias("lon"),
+        )
 
-        # at most SPHERE_CLOSURE_REFS + 1 rows of each partition: one
-        # narrow job (a limit would add a shuffle or more jobs). No
-        # partition was cut short if it returns no more than that, so
-        # it is the whole ref set and doubles as the sizing job
-        row_in_part = F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1))
-        rpdf = points(refs).where(row_in_part <= F.lit(SPHERE_CLOSURE_REFS)).toPandas()
-        if len(rpdf) <= SPHERE_CLOSURE_REFS:
-            return _sphere_knn_closure(points(queries), rpdf, k, earth_radius_m, out_schema)
-        if n_refs is None:
-            n_refs = refs.count()
+    q_pts, refs_n = points(queries), points(refs)
+    if n_refs <= SPHERE_CLOSURE_REFS:
+        return _sphere_knn_closure(q_pts, refs_n.toPandas(), k, earth_radius_m, out_schema)
     if init_radius_m is not None:
         local_start = False
     else:
         # expected in-cap count n·(r/2R)² ≈ 4k at this start radius
         init_radius_m = 4.0 * math.sqrt(k / n_refs) * earth_radius_m
         init_radius_m = max(init_radius_m, 1.0)
-    remaining = queries.select(
-        F.col(id_col).alias("id"),
-        F.col(lat_col).alias("lat"),
-        F.col(lon_col).alias("lon"),
-    )
-    refs_n = refs.select(
-        F.col(id_col).alias("id"),
-        F.col(lat_col).alias("lat"),
-        F.col(lon_col).alias("lon"),
-    )
     half_circ = math.pi * earth_radius_m
     handles: list[DataFrame] = []
     tiered: DataFrame | None = None
@@ -371,7 +349,7 @@ def sphere_knn_join(
             / F.lit(math.log(growth))
         ).cast("int")
         tiered = (
-            remaining.withColumn(
+            q_pts.withColumn(
                 "_c", S.sphere_cell(F.col("lat"), F.col("lon"), delta_loc)
             )
             .join(cnts, "_c", "left")
@@ -399,11 +377,7 @@ def sphere_knn_join(
                 entering if remaining is None else remaining.unionByName(entering)
             )
         elif remaining is None:
-            remaining = queries.select(
-                F.col(id_col).alias("id"),
-                F.col(lat_col).alias("lat"),
-                F.col(lon_col).alias("lon"),
-            )
+            remaining = q_pts
         more_tiers = tiered is not None and rnd + 1 < n_tiers
         last = (rnd == max_rounds + n_tiers - 2 or r_m >= half_circ) and not more_tiers
         # the last round must cover the whole sphere, however small

@@ -175,11 +175,11 @@ def _knn_nd_local_refs(
 
     This is the reference's own regime (FFCL is a single-node
     in-memory engine; ``KDTree.hpp`` holds the whole ref set), kept
-    for ref sets up to ``LOCAL_REFS_LIMIT`` (``LOW_DIM_LOCAL_REFS`` at
-    dims ≤ 4, see :func:`knn_join_nd`): in high dimensions the
-    projected-grid prune weakens (curse of dimensionality), and a
-    blocked brute scan of closure-sized refs is exact with no
-    shuffle."""
+    for ref sets up to ``LOCAL_REFS_LIMIT`` (and at dims ≤ 4 up to
+    ``LOW_DIM_LOCAL_PAIRS`` query-ref pairs, see :func:`knn_join_nd`):
+    in high dimensions the projected-grid prune weakens (curse of
+    dimensionality), and a blocked brute scan of closure-sized refs is
+    exact with no shuffle."""
     rpdf = (
         refs.select("id", F.col(vec_col).cast("array<double>").alias("v"))
         .toPandas()
@@ -215,13 +215,14 @@ def _knn_nd_local_refs(
 
 
 LOCAL_REFS_LIMIT = 100_000
-# At dims ≤ 4 the grid plan overtakes the closure plan far sooner. On
-# skewed 3-D sphere points (70 % in 20 blobs, self-join, k=5,
-# local[4], 4 cores) the closure plan took 1.3 s against the grid's
-# 2.9 s at 8k refs, 1.8 s against 1.9 s at 12k, 3.0 s against 1.5 s
-# at 16k and 4.4 s against 2.2 s at 20k.
-LOW_DIM_LOCAL_REFS = 12_000
-
+# At dims ≤ 4 the grid plan overtakes the closure plan once a call
+# holds about this many query-ref pairs. On skewed 3-D sphere points
+# (70 % in 20 blobs, self-join, k=5, local[4], 4 cores) the closure
+# plan took 1.3 s against the grid's 2.9 s at 8k points, 1.8 s against
+# 1.9 s at 12k, 3.0 s against 1.5 s at 16k and 4.4 s against 2.2 s at
+# 20k. Its cost is one distance per pair, so a few pending queries
+# against many refs (Borůvka's escalation) stay in the closure plan.
+LOW_DIM_LOCAL_PAIRS = 12_000 * 12_000
 
 def _blocked_inputs(
     queries: DataFrame,
@@ -437,10 +438,10 @@ def knn_join_nd(
     - ``"local"``, refs ≤ ``local_refs_limit``: closure-shipped refs,
       one narrow pass over queries (``_knn_nd_local_refs``) — the
       reference's own single-node regime, no shuffle. When
-      ``local_refs_limit`` is None the limit follows the dimension:
-      ``LOW_DIM_LOCAL_REFS`` at dims ≤ 4, where the grid plan wins
-      past it, and ``LOCAL_REFS_LIMIT`` above. An explicit value
-      overrides both; 0 turns the closure plan off;
+      ``local_refs_limit`` is None it is ``LOCAL_REFS_LIMIT``, and at
+      dims ≤ 4 the call must also hold at most ``LOW_DIM_LOCAL_PAIRS``
+      query-ref pairs, past which the grid plan wins. An explicit
+      value overrides both; 0 turns the closure plan off;
     - ``"blocked"``, larger refs with dims > 4: blocked brute cogroup
       (``knn_join_nd_blocked``) — in high dimensions the projected-
       grid prune admits nearly everything;
@@ -455,19 +456,20 @@ def knn_join_nd(
     first = None
     if plan == "auto":
         n_refs = exact_row_count(refs) or refs.count()
-        limit = local_refs_limit
-        if limit is None:
-            limit = LOW_DIM_LOCAL_REFS
-            if n_refs > limit:
-                first = refs.select(vec_col).first()
-                if first is not None and len(first[0]) > 4:
-                    limit = LOCAL_REFS_LIMIT
-        if limit and n_refs <= limit:
-            plan = "local"
+        if local_refs_limit is not None:
+            local = bool(local_refs_limit) and n_refs <= local_refs_limit
+        elif n_refs > LOCAL_REFS_LIMIT:
+            local = False
         else:
-            if first is None:
-                first = refs.select(vec_col).first()
-            plan = "blocked" if first is not None and len(first[0]) > 4 else "grid"
+            n_q = n_refs if queries is refs else exact_row_count(queries) or queries.count()
+            local = n_q * n_refs <= LOW_DIM_LOCAL_PAIRS
+        if not local:
+            first = refs.select(vec_col).first()
+        high_dim = first is not None and len(first[0]) > 4
+        if high_dim and local_refs_limit is None:
+            # the pair limit is for dims ≤ 4 only
+            local = n_refs <= LOCAL_REFS_LIMIT
+        plan = "local" if local else "blocked" if high_dim else "grid"
     if plan == "local":
         return _knn_nd_local_refs(queries, refs, k, vec_col, metric)
     if plan == "blocked":

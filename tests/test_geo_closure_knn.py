@@ -135,26 +135,48 @@ def _job_group(sc, name: str):
 
 def test_closure_plan_jobs_and_no_exchange(spark, monkeypatch):
     df = _frame(spark, world_pdf())
+    small = df.persist()
+    try:
+        small.count()
+        with _job_group(spark.sparkContext, "sphere_closure_sized") as jobs:
+            out = G.sphere_knn_join(df, small, K)
+            # the refs collect only
+            assert jobs() == 1
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan
+        assert "Window" not in plan
+    finally:
+        small.unpersist()
     refs = df.where("lat > -91")  # a plan that does not know its size
+    with _job_group(spark.sparkContext, "sphere_count_unsized") as jobs:
+        refs.count()
+        count_jobs = jobs()
     with _job_group(spark.sparkContext, "sphere_closure_unsized") as jobs:
-        out = G.sphere_knn_join(df, refs, K)
-        # the refs collect sizes the refs too: no count job
-        assert jobs() == 1
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
-    assert "Window" not in plan
-    # past the limit the collect comes back full and a count sizes the
-    # round plan; a persisted ref set knows its size and runs neither
+        G.sphere_knn_join(df, refs, K)
+        # the sizing count and the refs collect
+        assert jobs() == count_jobs + 1
+    # past the limit an unsized ref set runs its count and is never
+    # collected, however many partitions it has; a persisted ref set
+    # knows its size and runs no job before the rounds
     monkeypatch.setattr(G, "sphere_radius_join", _stop_at_rounds)
 
-    def big():
-        return spark.range(G.SPHERE_CLOSURE_REFS + 1).selectExpr(
+    def big(parts: int):
+        return spark.range(0, G.SPHERE_CLOSURE_REFS + 1, 1, parts).selectExpr(
             "id", "cast(id % 170 as double) - 85 as lat", "cast(id % 359 as double) - 179 as lon"
         )
 
-    assert _jobs_before_rounds(spark, df, big()) >= 2
+    unsized = big(16).where("lat > -91")
+
+    def no_collect(self):
+        raise AssertionError("refs collected past the closure limit")
+
+    with _job_group(spark.sparkContext, "sphere_count_big") as jobs:
+        unsized.count()
+        count_jobs = jobs()
+    monkeypatch.setattr(type(unsized), "toPandas", no_collect)
+    assert _jobs_before_rounds(spark, df, unsized) == count_jobs
     # persisted before its first action, so its plan reads the cache
-    sized = big().persist()
+    sized = big(2).persist()
     try:
         sized.count()
         assert _jobs_before_rounds(spark, df, sized) == 0
@@ -192,10 +214,12 @@ def test_knn_nd_auto_skips_count_on_persisted_refs(spark):
 
 
 def test_knn_nd_low_dim_closure_limit(spark, monkeypatch):
-    # at dims ≤ 4 the closure plan stops at LOW_DIM_LOCAL_REFS; above 4
-    # dims and under an explicit local_refs_limit it does not
+    # at dims ≤ 4 the closure plan stops at LOW_DIM_LOCAL_PAIRS
+    # query-ref pairs, so a few queries against many refs keep it;
+    # above 4 dims and under an explicit local_refs_limit the pair
+    # count does not matter
     picked = []
-    monkeypatch.setattr(SN, "LOW_DIM_LOCAL_REFS", 50)
+    monkeypatch.setattr(SN, "LOW_DIM_LOCAL_PAIRS", 50 * 50)
     monkeypatch.setattr(SN, "_knn_nd_local_refs", lambda *a: picked.append("local"))
     monkeypatch.setattr(SN, "knn_join_nd_blocked", lambda *a: picked.append("blocked"))
     monkeypatch.setattr(SN, "knn_join_grid", lambda *a, **kw: picked.append("grid"))
@@ -208,6 +232,41 @@ def test_knn_nd_low_dim_closure_limit(spark, monkeypatch):
     low, high = pts(80, 3), pts(80, 6)
     SN.knn_join_nd(low, low, K, G.GEO_CFG)
     SN.knn_join_nd(pts(40, 3), pts(40, 3), K, G.GEO_CFG)
+    SN.knn_join_nd(pts(10, 3), low, K, G.GEO_CFG)
     SN.knn_join_nd(high, high, K, G.GEO_CFG)
     SN.knn_join_nd(low, low, K, G.GEO_CFG, local_refs_limit=100)
-    assert picked == ["grid", "local", "local", "local"]
+    assert picked == ["grid", "local", "local", "local", "local"]
+
+
+def test_closure_plans_pass_the_pair_budget(spark, monkeypatch, tmp_path):
+    # both closure plans hand topk_blocks the kernel's PAIR_BUDGET, and
+    # every distance block they build stays within it; the spy runs in
+    # the Python workers, so it logs to a file
+    from ffcl_spark.kernels import neighbors as NK
+    from ffcl_spark.operators.geo import geo_points
+    from ffcl_spark.operators.knn_kernel import PAIR_BUDGET
+
+    log = str(tmp_path / "blocks")
+    real = NK.topk_blocks
+
+    def spy(qids, rids, k, dist, budget):
+        def logged(s, e):
+            d = dist(s, e)
+            with open(log, "a") as f:
+                f.write(f"{budget} {d.shape[0]} {d.shape[1]}\n")
+            return d
+
+        return real(qids, rids, k, logged, budget)
+
+    monkeypatch.setattr(NK, "topk_blocks", spy)
+    monkeypatch.setattr(SN, "topk_blocks", spy)
+    df = _frame(spark, world_pdf())
+    n = df.count()
+    emb = geo_points(df)
+    for out in (G.sphere_knn_join(df, df, K), SN.knn_join_nd(emb, emb, K, G.GEO_CFG, plan="local")):
+        open(log, "w").close()
+        assert out.count() == n * K
+        blocks = [tuple(map(int, line.split())) for line in open(log)]
+        assert {b for b, _, _ in blocks} == {PAIR_BUDGET}
+        assert sum(q for _, q, _ in blocks) == n
+        assert all(q * r <= PAIR_BUDGET for _, q, r in blocks)
