@@ -68,11 +68,11 @@ def fold_dist(q_cols, r_cols, metric: str = "euclidean") -> np.ndarray:
     ``t = abs(d)`` (manhattan), ``d = q - r``. Columns are 1-D float64
     arrays; the result has shape (len(q), len(r)).
 
-    The fold starts from the first term, not from 0.0: every term is
-    ≥ 0 or NaN, so ``0.0 + t == t`` and the result is bit-equal to the
-    SQL ``aggregate(zip_with(...), 0.0, acc + v)``. In 2-D it is exactly
-    ``sqrt(dx*dx + dy*dy)`` / ``abs(dx) + abs(dy)``, the planar SQL
-    distance expressions."""
+    The fold starts from the first term, as the SQL column fold of
+    ``search.radius_join`` does (a fold from 0.0 would give the same
+    bits: every term is ≥ 0 or NaN, so ``0.0 + t == t``). In 2-D it is
+    exactly ``sqrt(dx*dx + dy*dy)`` / ``abs(dx) + abs(dy)``, the planar
+    SQL distance expressions."""
     if metric not in ("euclidean", "manhattan"):
         raise ValueError(f"unknown metric {metric!r}")
     l1 = metric == "manhattan"
@@ -87,10 +87,9 @@ def fold_dist(q_cols, r_cols, metric: str = "euclidean") -> np.ndarray:
 def pairwise_fold_nd(q: np.ndarray, r: np.ndarray, metric: str = "euclidean") -> np.ndarray:
     """n-D distances in LEFT-FOLD accumulation order (:func:`fold_dist`
     over the matrix columns) — the identical IEEE operation sequence as
-    the engine's SQL expression
-    ``aggregate(zip_with(q, r, (a,b) -> (a-b)*(a-b)), 0.0, acc+v)``,
-    so the NumPy oracle and the SQL n-D path produce bit-equal
-    distances. Returns the final (sqrt'd for euclidean) distance
+    the engine's SQL fold over the flattened vector
+    (``search.radius_join(coords=...)``), so the NumPy oracle and the
+    SQL n-D path produce bit-equal distances. Returns the final (sqrt'd for euclidean) distance
     matrix, shape (len(q), len(r)).
 
     Reference n-features contract: ``KDTree.hpp:137`` (ctor takes

@@ -25,8 +25,9 @@ twins are exact too:
   (:func:`ffcl_spark.operators.search_nd.knn_join_nd` — its closure,
   grid-kernel and blocked plans, exact, ties by r_id preserved);
 - geodesic radius r == 3-D radius 2·sin(r/2R) over the embedding
-  (:func:`radius_join_nd` — a-priori Chebyshev cell cover, hot-cell
-  salting).
+  (:func:`radius_join_nd` — the planar radius join on the flattened
+  embedding: radius-matched a-priori Chebyshev cell cover, cell box
+  prune, refs-side build, hot-cell salting).
 
 Longitude wrap-around and pole adjacency come FREE: points straddling
 the ±180° meridian or clustered at a pole are near each other in the
@@ -51,7 +52,7 @@ from ffcl_spark.config import EngineConfig
 from ffcl_spark.functions import sphere as S
 from ffcl_spark.operators.search_nd import knn_join_nd, radius_join_nd
 from ffcl_spark.plans.cache import carry
-from ffcl_spark.plans.stats import exact_row_count, free_checkpoint, salt_hot_keys
+from ffcl_spark.plans.stats import free_checkpoint, row_count, salt_hot_keys
 
 # IUGG mean Earth radius, metres.
 EARTH_RADIUS_M = 6_371_008.8
@@ -254,9 +255,8 @@ def sphere_knn_join(
     Two plans; the ref count alone picks one, so chunking or batching
     the queries never changes the plan or its bits. ``n_refs`` is that
     count when the caller knows it, and must then be exact; otherwise
-    the plan's exact statistics give it
-    (``plans.stats.exact_row_count``: a persisted or local ref set),
-    or else one count job.
+    ``plans.stats.row_count`` reads it from the plan's exact statistics
+    (a persisted or local ref set) or else runs one count job.
 
     CLOSURE plan, ``n_refs ≤ SPHERE_CLOSURE_REFS``: the refs are
     collected once, sorted by id, and shipped in the task closure; one
@@ -304,7 +304,7 @@ def sphere_knn_join(
     optimal there)."""
     spark = queries.sparkSession
     if n_refs is None:
-        n_refs = exact_row_count(refs) or refs.count()
+        n_refs = row_count(refs)
     id_type = queries.schema[id_col].dataType.simpleString()
     out_schema = f"q_id {id_type}, r_id {id_type}, dist_m double, rank int"
     if n_refs == 0:

@@ -125,7 +125,8 @@ def knn_join_grid(
     ``metric``: 'euclidean' (``sqrt(dx*dx + dy*dy)``) or 'manhattan'
     (``abs(dx) + abs(dy)``, the reference's L1 dispatch for integral
     data, ``Distances.hpp:94-117``) — the same IEEE operations as the
-    SQL ``search.DIST``/``DIST_L1``, so distances are bit-equal.
+    SQL fold of :func:`ffcl_spark.operators.search.radius_join`, so
+    distances are bit-equal.
 
     ``coords``: the double columns the distance folds over, in
     dimension order (:func:`ffcl_spark.kernels.neighbors.fold_dist`).

@@ -11,7 +11,8 @@ upper levels; candidate generation mirrors its traversal:
   inclusive bounds ``LowerBoundAndUpperBound.hpp:76-78``.
 - radius join → queries explode to the Chebyshev-``ceil(r/s)`` cell
   neighborhood, equi-join on cell, strict ``dist < r`` post-filter.
-  Reference: ``Ball.hpp:91-97,208-216`` + traversal.
+  Reference: ``Ball.hpp:91-97,208-216`` + traversal. n-D runs it on
+  the flattened vector (``coords``, ``search_nd.radius_join_nd``).
 - kNN join and core distances → the cogrouped grid plan
   (:func:`ffcl_spark.operators.knn_kernel.knn_join_grid`) with the
   furthest-distance termination rule — the distributed form of the
@@ -27,7 +28,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ffcl_spark.config import EngineConfig
@@ -36,20 +37,6 @@ from ffcl_spark.operators.knn_kernel import knn_join_grid
 from ffcl_spark.plans.cache import carry
 from ffcl_spark.plans.stats import broadcast_threshold_bytes, plan_size_bytes, salt_hot_keys
 
-DIST = "sqrt((q_x - r_x) * (q_x - r_x) + (q_y - r_y) * (q_y - r_y))"
-# Manhattan — the reference's auto_distance dispatches L1 for integral
-# data (Distances.hpp:94-117, 261-300)
-DIST_L1 = "abs(q_x - r_x) + abs(q_y - r_y)"
-
-
-def dist_expr(metric: str) -> str:
-    if metric == "euclidean":
-        return DIST
-    if metric == "manhattan":
-        return DIST_L1
-    raise ValueError(f"unknown metric {metric!r}")
-
-
 def box_search(points: DataFrame, x_lo: float, y_lo: float, x_hi: float, y_hi: float) -> DataFrame:
     """All points inside the axis-aligned box, bounds inclusive."""
     return points.where(
@@ -57,12 +44,20 @@ def box_search(points: DataFrame, x_lo: float, y_lo: float, x_hi: float, y_hi: f
     )
 
 
-def _tag(df: DataFrame, prefix: str) -> DataFrame:
+def _tag(df: DataFrame, prefix: str, coords: tuple[str, ...]) -> DataFrame:
+    cols = ["x", "y", *(c for c in coords if c not in ("x", "y"))]
     return df.select(
-        F.col("id").alias(f"{prefix}_id"),
-        F.col("x").alias(f"{prefix}_x"),
-        F.col("y").alias(f"{prefix}_y"),
+        F.col("id").alias(f"{prefix}_id"), *(F.col(c).alias(f"{prefix}_{c}") for c in cols)
     )
+
+
+def _fold(coords: tuple[str, ...], term) -> Column:
+    # ((t0 + t1) + t2) + …, the order of kernels.neighbors.fold_dist
+    acc = None
+    for c in coords:
+        t = term(F.col(f"q_{c}") - F.col(f"r_{c}"))
+        acc = t if acc is None else acc + t
+    return acc
 
 
 def radius_join(
@@ -72,12 +67,20 @@ def radius_join(
     cfg: EngineConfig,
     salt_hot_cells: bool = True,
     metric: str = "euclidean",
+    coords: tuple[str, ...] = ("x", "y"),
 ) -> DataFrame:
     """All (q_id, r_id, dist) with dist < radius (strict).
 
     ``metric``: 'euclidean' (default) or 'manhattan'. The cell-cover
     bound is metric-safe: an L1 (or L2) ball of radius r fits inside
     the L∞ box of radius r, so the same Chebyshev ring cover applies.
+
+    ``coords``: the double columns the distance left-folds over in
+    dimension order (``(q_c - r_c) * (q_c - r_c)`` summed then
+    ``sqrt``, or ``abs(q_c - r_c)`` summed — the IEEE operations of
+    ``kernels.neighbors.fold_dist``). The cover, prune, salting and
+    join strategy use ``x`` and ``y``, a projection of ``coords``
+    whose distance never exceeds the full one.
 
     One shuffle on the cell key; the Chebyshev ring radius needed to
     cover an L2 radius r is ceil(r / cell_size), known a priori, so no
@@ -100,11 +103,12 @@ def radius_join(
       Sound in float: each box edge is moved out by
       ``cfg.edge_slack``, which covers the rounding of the edge and of
       the ref's cell assignment, and the gap is one rounded
-      subtraction from that edge. Correctly-rounded ops are
-      monotone, so fl(gap²·sum) ≤ fl(dx²+dy²) for every ref in the
-      cell (domain-clamped edge cells treat the clamped side as
-      unbounded). Cuts candidates ≈2-3× on top of the resolution
-      match.
+      subtraction from that edge, so 0 ≤ gx ≤ |dx| for every ref in
+      the cell (domain-clamped edge cells treat the clamped side as
+      unbounded). Correctly-rounded ops are monotone and fold terms
+      are ≥ 0, so fl(gx² + gy²) ≤ the full fold over ``coords`` and
+      fl(gx + gy) ≤ the L1 fold. Cuts candidates ≈2-3× on top of
+      the resolution match.
     - *deliberate join strategy*: broadcast the (unexploded) refs side
       when Catalyst's own estimate fits the broadcast threshold —
       never the exploded query side, whose post-Generate estimate is
@@ -123,11 +127,13 @@ def radius_join(
     job is skipped when the refs' exact row count is at or below the
     threshold.
     """
+    if metric not in ("euclidean", "manhattan"):
+        raise ValueError(f"unknown metric {metric!r}")
     if radius > 0:
         res_star = max(0, min(14, math.ceil(math.log2(cfg.domain / radius))))
         cfg = cfg.with_resolution(res_star)
     rings = max(1, math.ceil(radius / cfg.cell_size))
-    q = _tag(queries, "q").withColumn(
+    q = _tag(queries, "q", coords).withColumn(
         "cell",
         F.explode(
             C.neighbor_cells(C.cell_id(F.col("q_x"), F.col("q_y"), cfg), rings, cfg)
@@ -166,7 +172,7 @@ def radius_join(
         q = q.where(gx + gy < radius)  # fl(gx+gy) ≤ fl(|dx|+|dy|) < r
     else:
         q = q.where(gx * gx + gy * gy <= radius * radius)
-    r = _tag(refs, "r").withColumn(
+    r = _tag(refs, "r", coords).withColumn(
         "cell", C.cell_id(F.col("r_x"), F.col("r_y"), cfg)
     )
     keys = ["cell"]
@@ -181,9 +187,8 @@ def radius_join(
     else:
         joined = q.join(r.hint("shuffle_hash"), keys)
     if metric == "euclidean":
-        d2 = "(q_x - r_x) * (q_x - r_x) + (q_y - r_y) * (q_y - r_y)"
         out = (
-            joined.withColumn("d2", F.expr(d2))
+            joined.withColumn("d2", _fold(coords, lambda d: d * d))
             # non-strict superset prefilter: dist < r ⟹ d2 ≤ fl(r·r)
             # (the only double in [fl(r²), r²) is fl(r²) itself, and a
             # pair there can still round its sqrt below r)
@@ -191,7 +196,9 @@ def radius_join(
             .withColumn("dist", F.sqrt(F.col("d2")))
         )
     else:
-        out = joined.withColumn("dist", F.expr(dist_expr(metric)))
+        # Manhattan — the reference's auto_distance dispatches L1 for
+        # integral data (Distances.hpp:94-117, 261-300)
+        out = joined.withColumn("dist", _fold(coords, F.abs))
     return out.where(F.col("dist") < radius).select("q_id", "r_id", "dist")
 
 

@@ -12,8 +12,7 @@ same physical plans to ``(id, features: array<double>)`` inputs:
   available via :func:`select_axes`) — the distributed analogue of the
   kd-tree's top-level split axes;
 - DISTANCE is the full n-D metric as a sequential fold over the
-  dimensions: JVM-side ``aggregate(zip_with(q, r, (a,b)->(a-b)*(a-b)),
-  0.0, acc+v)`` in the radius join, NumPy-side
+  dimensions: a JVM column fold in the radius join, NumPy-side
   ``kernels.neighbors.fold_dist`` in the kNN plans — bit-equal to the
   oracle ``kernels.neighbors.pairwise_fold_nd``.
 
@@ -29,10 +28,10 @@ Correctness of the projection pruning (both metrics): the projected
     answer — the queries it leaves open go to the grid kernel's
     broadcast pass against every ref.
 
-Scale shape: the low-dimension kNN plan flattens each vector into
-scalar double columns before it reaches the grid kernel
-(:func:`ffcl_spark.operators.knn_kernel.knn_join_grid`), so no array
-crosses Arrow; the blocked plans' merge windows run on
+Scale shape: the radius join and the low-dimension kNN plan flatten
+each vector into double columns and run the planar plans on them
+(``search.radius_join``, ``knn_kernel.knn_join_grid``), so no array
+crosses Arrow or a join; the blocked plans' merge windows run on
 (id, id, dist) scalars.
 """
 
@@ -47,30 +46,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ffcl_spark.config import EngineConfig
-from ffcl_spark.functions import cells as C
 from ffcl_spark.kernels.neighbors import pairwise_fold_nd, pairwise_sq, topk_blocks, topk_rows
 from ffcl_spark.operators.knn_kernel import PAIR_BUDGET, knn_join_grid
+from ffcl_spark.operators.search import radius_join
 from ffcl_spark.plans.cache import carry
-from ffcl_spark.plans.stats import exact_row_count, salt_hot_keys
-
-
-def dist_nd(q: Column, r: Column, metric: str = "euclidean") -> Column:
-    """Full n-D distance as a JVM fold (no Python per row)."""
-    if metric == "euclidean":
-        return F.sqrt(
-            F.aggregate(
-                F.zip_with(q, r, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        )
-    if metric == "manhattan":
-        return F.aggregate(
-            F.zip_with(q, r, lambda a, b: F.abs(a - b)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    raise ValueError(f"unknown metric {metric!r}")
+from ffcl_spark.plans.stats import row_count
 
 
 def select_axes(
@@ -98,13 +78,26 @@ def _proj(vec: Column, axis: int) -> Column:
     return F.element_at(vec, axis + 1).cast("double")
 
 
-def _tag_nd(df: DataFrame, prefix: str, vec_col: str) -> DataFrame:
-    # cast to array<double> up front: float32 inputs (e.g. parquet
-    # embeddings) must not run the distance fold in float32 arithmetic
-    return df.select(
-        F.col("id").alias(f"{prefix}_id"),
-        F.col(vec_col).cast("array<double>").alias(f"{prefix}_vec"),
-    )
+def _flatten(queries: DataFrame, refs: DataFrame, vec_col: str, axes: tuple[int, int], first=None):
+    """Both sides as ``(id, one double column per dimension)`` and the
+    names in dimension order, for the planar plans' ``coords``. The
+    grid axes are ``x`` and ``y`` in place, the rest ``c{j}``. Cast to
+    double first: float32 vectors must not fold in float32. The length
+    comes from ``first`` (a row) or one ``first()`` job."""
+    a0, a1 = axes
+    if first is None:
+        first = refs.select(vec_col).first() or queries.select(vec_col).first()
+    dims = len(first[0]) if first is not None else max(a0, a1) + 1
+    names = tuple("x" if j == a0 else "y" if j == a1 else f"c{j}" for j in range(dims))
+
+    def flat(df: DataFrame) -> DataFrame:
+        v = F.col(vec_col).cast("array<double>")
+        cols = [F.element_at(v, j + 1).alias(n) for j, n in enumerate(names)]
+        if a0 == a1:
+            cols.append(F.element_at(v, a1 + 1).alias("y"))
+        return df.select("id", *cols)
+
+    return flat(queries), flat(refs), names
 
 
 def box_search_nd(
@@ -129,36 +122,13 @@ def radius_join_nd(
     metric: str = "euclidean",
     salt_hot_cells: bool = True,
 ) -> DataFrame:
-    """All (q_id, r_id, dist) with full n-D dist < radius (strict).
-    One shuffle on the projected cell key; same a-priori Chebyshev
-    cover as the 2-D plan, and the same hot-cell salting
-    (:func:`ffcl_spark.plans.stats.salt_hot_keys`: cells above
-    ``cfg.hot_cell_rows`` refs spread over ``cfg.salt_buckets``
-    sub-keys)."""
-    a0, a1 = axes
-    rings = max(1, math.ceil(radius / cfg.cell_size))
-    q = _tag_nd(queries, "q", vec_col).withColumn(
-        "cell",
-        F.explode(
-            C.neighbor_cells(
-                C.cell_id(_proj(F.col("q_vec"), a0), _proj(F.col("q_vec"), a1), cfg),
-                rings,
-                cfg,
-            )
-        ),
-    )
-    r = _tag_nd(refs, "r", vec_col).withColumn(
-        "cell", C.cell_id(_proj(F.col("r_vec"), a0), _proj(F.col("r_vec"), a1), cfg)
-    )
-    keys = ["cell"]
-    if salt_hot_cells:
-        q, r, keys = salt_hot_keys(q, r, cfg)
-    joined = q.join(r, keys)
-    return (
-        joined.withColumn("dist", dist_nd(F.col("q_vec"), F.col("r_vec"), metric))
-        .where(F.col("dist") < radius)
-        .select("q_id", "r_id", "dist")
-    )
+    """All (q_id, r_id, dist) with full n-D dist < radius (strict):
+    :func:`ffcl_spark.operators.search.radius_join` on the flattened
+    vector, grid on the projected ``axes`` — its radius-matched
+    resolution (not ``cfg.resolution``), box prune, build side and
+    hot-cell salting. The vector length costs one ``first()`` job."""
+    q, r, names = _flatten(queries, refs, vec_col, axes)
+    return radius_join(q, r, radius, cfg, salt_hot_cells, metric, coords=names)
 
 
 def _knn_nd_local_refs(
@@ -239,8 +209,8 @@ def _blocked_inputs(
     query block with one ref block."""
     # exact cache statistics replace the sizing count jobs when known
     # (persisted inputs — the common iterative-caller shape)
-    nq = exact_row_count(queries) or queries.count()
-    nr = exact_row_count(refs) or refs.count()
+    nq = row_count(queries)
+    nr = row_count(refs)
     n_rb = max(1, math.ceil(nr / ref_block_rows))
     n_qb = max(1, math.ceil(nq / query_block_rows))
     # scale-adaptive parallelism floor (guide §2): the cogroup gets
@@ -455,13 +425,13 @@ def knn_join_nd(
       the kernel's broadcast pass. ``checkpoint`` is passed through."""
     first = None
     if plan == "auto":
-        n_refs = exact_row_count(refs) or refs.count()
+        n_refs = row_count(refs)
         if local_refs_limit is not None:
             local = bool(local_refs_limit) and n_refs <= local_refs_limit
         elif n_refs > LOCAL_REFS_LIMIT:
             local = False
         else:
-            n_q = n_refs if queries is refs else exact_row_count(queries) or queries.count()
+            n_q = n_refs if queries is refs else row_count(queries)
             local = n_q * n_refs <= LOW_DIM_LOCAL_PAIRS
         if not local:
             first = refs.select(vec_col).first()
@@ -476,23 +446,8 @@ def knn_join_nd(
         return knn_join_nd_blocked(queries, refs, k, vec_col, metric)
     if plan != "grid":
         raise ValueError(f"unknown plan {plan!r}")
-    a0, a1 = axes
-    if first is None:
-        first = refs.select(vec_col).first() or queries.select(vec_col).first()
-    dims = len(first[0]) if first is not None else max(a0, a1) + 1
-    # the grid axes are named x and y in place, so they ship once
-    names = ["x" if j == a0 else "y" if j == a1 else f"c{j}" for j in range(dims)]
-
-    def flat(df: DataFrame) -> DataFrame:
-        v = F.col(vec_col).cast("array<double>")
-        cols = [F.element_at(v, j + 1).alias(n) for j, n in enumerate(names)]
-        if a0 == a1:
-            cols.append(F.element_at(v, a1 + 1).alias("y"))
-        return df.select("id", *cols)
-
-    return knn_join_grid(
-        flat(queries), flat(refs), k, cfg, checkpoint=checkpoint, metric=metric, coords=tuple(names)
-    )
+    q, r, names = _flatten(queries, refs, vec_col, axes, first)
+    return knn_join_grid(q, r, k, cfg, checkpoint=checkpoint, metric=metric, coords=names)
 
 
 def core_distances_nd(

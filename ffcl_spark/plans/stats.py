@@ -9,6 +9,10 @@ optimized logical plan without running a job:
 - :func:`plan_size_bytes` — Catalyst's size estimate, used to choose
   a join's build side against :func:`broadcast_threshold_bytes`.
 
+Both read a fresh projection's plan (:func:`_fresh_plan`): a frame's
+own QueryExecution memoizes its plan, so one read before ``persist()``
+would never see the cache. :func:`row_count` is the sizing count.
+
 Skew: :func:`hot_keys` finds the join keys holding more rows than a
 threshold; :func:`salt_hot_keys` spreads the refs of those keys over
 sub-keys (hash of id) and fans the queries of those keys out to all
@@ -48,6 +52,11 @@ _PLAN_API_MAJORS = (3, 4)
 _PLAN_WALKS = int(pyspark.__version__.split(".")[0]) in _PLAN_API_MAJORS
 
 
+def _fresh_plan(df: DataFrame):
+    # a new QueryExecution, planned against the cache as it is now
+    return df.select("*")._jdf.queryExecution().optimizedPlan()
+
+
 def exact_row_count(df: DataFrame) -> int | None:
     """The number of rows of ``df`` when its plan knows it exactly;
     None otherwise. Never runs a job.
@@ -62,7 +71,7 @@ def exact_row_count(df: DataFrame) -> int | None:
     if not _PLAN_WALKS:
         return None
     try:
-        node = df._jdf.queryExecution().optimizedPlan()
+        node = _fresh_plan(df)
         name = node.getClass().getSimpleName()
         while name in _ROW_PRESERVING and node.children().size() == 1:
             node = node.children().apply(0)
@@ -85,9 +94,20 @@ def plan_size_bytes(df: DataFrame) -> int:
     if not _PLAN_WALKS:
         return 1 << 62
     try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        return int(_fresh_plan(df).stats().sizeInBytes())
     except Py4JError:  # pragma: no cover - py4j edge
         return 1 << 62
+
+
+def row_count(df: DataFrame) -> int:
+    """Rows of ``df``: :func:`exact_row_count`, else a count of a fresh
+    ``lit(1)`` projection's RDD, which reads a persisted frame's cache.
+    On a one-stage frame under AQE that is 1 job and 1 stage, where
+    ``DataFrame.count()`` runs 2 jobs and 3 stages."""
+    if not _PLAN_WALKS:
+        return df.count()
+    n = exact_row_count(df)
+    return n if n is not None else int(df.select(F.lit(1))._jdf.queryExecution().toRdd().count())
 
 
 def broadcast_threshold_bytes(df: DataFrame) -> int:

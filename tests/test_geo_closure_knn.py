@@ -15,6 +15,7 @@ from ffcl_spark.kernels.geo import geo_brute_knn
 from ffcl_spark.operators import geo as G
 from ffcl_spark.operators import search_nd as SN
 from ffcl_spark.plans.cache import release
+from ffcl_spark.plans.stats import row_count
 from tests.test_geo import world_pdf
 
 K = 5
@@ -149,7 +150,7 @@ def test_closure_plan_jobs_and_no_exchange(spark, monkeypatch):
         small.unpersist()
     refs = df.where("lat > -91")  # a plan that does not know its size
     with _job_group(spark.sparkContext, "sphere_count_unsized") as jobs:
-        refs.count()
+        row_count(refs)  # the sizing count the plan runs
         count_jobs = jobs()
     with _job_group(spark.sparkContext, "sphere_closure_unsized") as jobs:
         G.sphere_knn_join(df, refs, K)
@@ -171,7 +172,7 @@ def test_closure_plan_jobs_and_no_exchange(spark, monkeypatch):
         raise AssertionError("refs collected past the closure limit")
 
     with _job_group(spark.sparkContext, "sphere_count_big") as jobs:
-        unsized.count()
+        row_count(unsized)
         count_jobs = jobs()
     monkeypatch.setattr(type(unsized), "toPandas", no_collect)
     assert _jobs_before_rounds(spark, df, unsized) == count_jobs

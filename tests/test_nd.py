@@ -165,11 +165,23 @@ def test_knn_nd_selected_axes(nd_points, nd_cfg):
     assert (sdf["r_id"].to_numpy() == odf["r_id"].to_numpy()).all()
 
 
-def test_radius_nd_matches_oracle(nd_points, nd_cfg):
+@pytest.mark.parametrize("metric", ["euclidean", "manhattan"])
+@pytest.mark.parametrize(
+    "axes,dtype",
+    [((0, 1), "double"), ((0, 2), "double"), ((0, 1), "float")],
+    ids=["axes01", "axes02", "axes01-float32"],
+)
+def test_radius_nd_matches_oracle(nd_points, nd_cfg, metric, axes, dtype):
+    """Rows and distance bits equal the fold-order oracle, for both
+    metrics, grid axes other than the first two, and float32 vectors
+    (the join folds their double values, never float32 arithmetic)."""
     df, ids, mat = nd_points
+    if dtype == "float":
+        df = df.select("id", F.col("features").cast("array<float>").alias("features"))
+        mat = mat.astype(np.float32).astype(np.float64)
     r = 2.5
-    sdf = SN.radius_join_nd(df, df, r, nd_cfg).toPandas()
-    a, b, d = NK.radius_pairs_nd(mat, ids, mat, ids, r)
+    sdf = SN.radius_join_nd(df, df, r, nd_cfg, axes=axes, metric=metric).toPandas()
+    a, b, d = NK.radius_pairs_nd(mat, ids, mat, ids, r, metric)
     assert len(sdf) == len(a)
     assert set(zip(sdf["q_id"], sdf["r_id"])) == set(zip(a.tolist(), b.tolist()))
     sd = sdf.sort_values(["q_id", "r_id"])["dist"].to_numpy()

@@ -354,19 +354,36 @@ def test_core_distances_checkpoint_leaves_nothing_behind(spark, monkeypatch):
         assert {i for i in persistent_ids() if i > id_floor} == set()
 
 
-def test_radius_box_prune_sound_across_rounded_edge(spark):
+@pytest.mark.parametrize("plan", ["planar", "nd"])
+def test_radius_box_prune_sound_across_rounded_edge(spark, plan):
     """The cell edge x0 + ix*s rounds up to 0.45 while a ref at the
     double just below it still floors into cell 3. The query's true
     distance is below r, but its gap to the rounded edge is above r:
-    the prune must not drop that cell."""
+    the prune must not drop that cell. ``nd`` runs the same pair as
+    3-D vectors with the grid on axes (0, 2)."""
     cfg = EngineConfig(x0=-0.3, y0=-0.3, domain=1.0)
     r = 0.3  # the join re-cells at resolution 2: s = 0.25
     q = pd.DataFrame({"id": [0], "x": [0.15], "y": [0.0]})
     refs = pd.DataFrame({"id": [1], "x": [0.44999999999999996], "y": [0.0]})
-    got = S.radius_join(spark.createDataFrame(q), spark.createDataFrame(refs), r, cfg).toPandas()
-    oa, ob, od = K.radius_pairs(
-        q[["x", "y"]].to_numpy(), q.id.to_numpy(), refs[["x", "y"]].to_numpy(), refs.id.to_numpy(), r
-    )
+    if plan == "planar":
+        qm, rm = q[["x", "y"]].to_numpy(), refs[["x", "y"]].to_numpy()
+        got = S.radius_join(spark.createDataFrame(q), spark.createDataFrame(refs), r, cfg)
+    else:
+        from ffcl_spark.operators.search_nd import radius_join_nd
+
+        qm = np.column_stack([q.x, np.full(1, 0.25), q.y])
+        rm = np.column_stack([refs.x, np.full(1, 0.25), refs.y])
+
+        def vecs(ids, m):
+            return spark.createDataFrame(
+                [(int(i), [float(v) for v in row]) for i, row in zip(ids, m)],
+                "id long, features array<double>",
+            )
+
+        got = radius_join_nd(vecs(q.id, qm), vecs(refs.id, rm), r, cfg, axes=(0, 2))
+    got = got.toPandas()
+    oracle = K.radius_pairs if plan == "planar" else K.radius_pairs_nd
+    oa, ob, od = oracle(qm, q.id.to_numpy(), rm, refs.id.to_numpy(), r)
     assert len(oa) == 1
     assert set(zip(got.q_id, got.r_id)) == set(zip(oa, ob))
     assert (got.dist.to_numpy() == od).all()

@@ -167,4 +167,47 @@ def test_plan_walks_off_on_unknown_spark_major(spark, monkeypatch):
     assert ckpt.count() == 10  # blocks were left alone
     # same answer, from the detection job instead of the exact count
     assert stats.hot_keys(cached.withColumnRenamed("id", "k"), "k", 10) == []
+    assert stats.row_count(cached) == 10  # DataFrame.count()
     cached.unpersist()
+
+
+def test_plan_statistics_see_cache_added_after_first_read(spark):
+    """A frame's QueryExecution memoizes its plan on first read. The
+    statistics must still see a cache added after that read."""
+    from ffcl_spark.plans import stats
+
+    frame = spark.range(0, 2049, 1, 4).selectExpr("id", "id * 2 AS v")
+    assert stats.exact_row_count(frame) is None
+    stats.plan_size_bytes(frame)
+    frame.persist()
+    try:
+        frame.count()
+        assert stats.exact_row_count(frame) == 2049
+        twin = spark.range(0, 2049, 1, 4).selectExpr("id", "id * 2 AS v")
+        cached_size = int(twin._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        assert stats.plan_size_bytes(frame) == cached_size
+    finally:
+        frame.unpersist()
+    local = spark.sql("SELECT * FROM VALUES (1), (2), (3) AS t(id)")
+    assert stats.exact_row_count(local) == 3
+
+
+def test_row_count_one_job_and_reads_cache(spark):
+    from ffcl_spark.plans import stats
+
+    sc = spark.sparkContext
+    frame = spark.range(0, 5000, 1, 8).where("id % 3 = 0")
+    sc.setJobGroup("row_count_jobs", "row_count_jobs")
+    try:
+        n = stats.row_count(frame)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert n == frame.count() == 1667
+    assert len(sc.statusTracker().getJobIdsForGroup("row_count_jobs")) == 1
+    # an unfilled cache is filled by the count, then read exactly
+    cached = frame.persist()
+    try:
+        assert stats.row_count(cached) == 1667
+        assert stats.exact_row_count(cached) == 1667
+    finally:
+        cached.unpersist()
