@@ -28,7 +28,7 @@ REPS = int(sys.argv[1]) if len(sys.argv) > 1 else 2
 
 JOB = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[2])  # the launching checkout
 from pyspark.sql import functions as F
 from ffcl_spark import get_spark
 from ffcl_spark.sources.docs import synth_docs
@@ -89,7 +89,7 @@ spark.stop()
 
 def run_once(cpus: int) -> dict:
     out = subprocess.run(
-        [sys.executable, "-c", JOB, str(cpus)],
+        [sys.executable, "-c", JOB, str(cpus), REPO],
         capture_output=True, text=True, timeout=7200,
     )
     lines = [l for l in out.stdout.splitlines() if l.startswith("{")]

@@ -25,7 +25,7 @@ REPS = int(sys.argv[1]) if len(sys.argv) > 1 else 2
 
 JOB = r"""
 import json, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[2])  # the launching checkout
 from pyspark.sql import functions as F
 from ffcl_spark import get_spark
 from ffcl_spark.sources.docs import synth_docs
@@ -65,7 +65,7 @@ def run(cpus: int) -> dict:
     raw = []
     for _ in range(REPS):
         p = subprocess.run(
-            [sys.executable, "-c", JOB, str(cpus)],
+            [sys.executable, "-c", JOB, str(cpus), REPO],
             capture_output=True, text=True, cwd=REPO,
         )
         line = [ln for ln in p.stdout.splitlines() if ln.startswith("{")][-1]

@@ -40,11 +40,21 @@ Distributed form — exact, with the reference's prune translated:
   (``UnionFind.hpp`` semantics). Components at least halve per round →
   O(log n) rounds.
 - the id → component map is a *persisted DataFrame*, never collected.
+  The bootstrap and both merges relabel it through one rule: each
+  merged group takes its minimum member (``UnionFind.canonical`` on
+  the driver, a per-group min DataFrame-side), joined in by
+  ``_relabel``.
+- one weighting (``_weigh``) serves the bootstrap and every pass;
+  core distances are the per-query max of the MST's own kNN call.
+- every intermediate (cached frame or localCheckpoint) is freed once
+  nothing reads it; the chosen-edge checkpoints ride the output.
 
-Output: the MST edge DataFrame (src, dst, w) — n−1 rows. Dendrogram
-post-processing (``kernels.hierarchy``) collects it driver-side by
-declared contract (the dendrogram is O(n), ≪ data); at scales where
-n−1 driver rows is itself too big, consume the DataFrame directly.
+Output: the MST edge DataFrame (src, dst, w) — n−1 rows, carrying
+the checkpoints it reads (free them with ``plans.cache.release``).
+Dendrogram post-processing (``kernels.hierarchy``) collects it
+driver-side by declared contract (the dendrogram is O(n), ≪ data); at
+scales where n−1 driver rows is itself too big, consume the DataFrame
+directly.
 
 Edge weights: Euclidean distance, or mutual reachability
 ``max(core_a, core_b, dist)`` (``BoruvkasAlgorithm.hpp:307-308``) when
@@ -64,15 +74,17 @@ from pyspark.sql import functions as F
 from ffcl_spark.config import EngineConfig
 from ffcl_spark.operators.dbscan import UnionFind
 from ffcl_spark.operators.knn_kernel import knn_join_grid
-from ffcl_spark.operators.search import core_distances
+from ffcl_spark.plans.cache import carry, release
+from ffcl_spark.plans.stats import free_checkpoint_tree
 
 DRIVER_CUTOFF = 100_000  # switch to driver union-find below this many components
-# max n·k0 candidate rows the Kruskal bootstrap may collect (same O(n)
+# max n·K0 candidate rows the Kruskal bootstrap may collect (same O(n)
 # driver-contract position as the dendrogram). At the cap, tracemalloc
 # on 2M synthetic rows (250k points × 8 distinct neighbours): the dicts
 # kth, core_of and edge_w keep ~333 MiB; ingesting the collected Rows
 # (~756 MiB) peaks at ~971 MiB.
 BOOTSTRAP_EDGE_LIMIT = 2_000_000
+K0 = 8  # base k-NN list length of the rounds and the bootstrap
 
 
 def mst_edges_local(edges_df: DataFrame) -> list[tuple]:
@@ -97,7 +109,6 @@ def minimum_spanning_tree(
     points: DataFrame,
     cfg: EngineConfig,
     core_k: int | None = None,
-    k0: int = 8,
     local_cutoff: int = 0,
     features_col: str | None = None,
     axes: tuple[int, int] = (0, 1),
@@ -105,7 +116,9 @@ def minimum_spanning_tree(
     ckpt_dir: str | None = None,
     stop_after_rounds: int | None = None,
 ) -> DataFrame:
-    """Exact MST edges as a DataFrame (src, dst, w) — n−1 rows.
+    """Exact MST edges as a DataFrame (src, dst, w) — n−1 rows. The
+    checkpointed rounds it reads ride the result: call
+    ``plans.cache.release`` when done.
 
     ``local_cutoff``: inputs at or below this size skip the distributed
     rounds and run the identical-semantics local Prim kernel — the
@@ -153,33 +166,31 @@ def minimum_spanning_tree(
         # knn call (round-3 ADVICE)
         _hot: dict = {}
 
-        def _knn(q, r_, k_):
+        def _knn(q, k_):
             if "hot" not in _hot:
                 _hot["hot"] = hot_coarse_groups(pts, cfg)
             # checkpoint=True: iterative caller — every escalation
             # round must leave no cached partitions behind
             return knn_join_grid(
-                q, r_, k_, cfg, checkpoint=True, hot_groups=_hot["hot"]
+                q, pts, k_, cfg, checkpoint=True, hot_groups=_hot["hot"]
             )
-
-        def _core(p, k_):
-            return core_distances(p, k_, cfg, checkpoint=True)
 
         def _matrix(pdf):
             return pdf[["x", "y"]].to_numpy()
     else:
-        from ffcl_spark.operators.search_nd import core_distances_nd, knn_join_nd
+        from ffcl_spark.operators.search_nd import knn_join_nd
 
         pts = points.select("id", F.col(features_col).alias("features")).persist()
 
-        def _knn(q, r_, k_):
-            return knn_join_nd(q, r_, k_, cfg, "features", axes, checkpoint=True)
-
-        def _core(p, k_):
-            return core_distances_nd(p, k_, cfg, "features", axes, checkpoint=True)
+        def _knn(q, k_):
+            return knn_join_nd(q, pts, k_, cfg, "features", axes, checkpoint=True)
 
         def _matrix(pdf):
             return np.array(pdf["features"].tolist(), dtype=np.float64)
+
+    def _cross_knn(q, k_):
+        """k_-NN lists of ``q`` over every point, self pairs dropped."""
+        return _knn(q, k_).where(F.col("q_id") != F.col("r_id"))
 
     n = pts.count()
     if n <= 1:
@@ -195,8 +206,26 @@ def minimum_spanning_tree(
 
     core = None
     if core_k is not None:
-        core = _core(pts, core_k).persist()
+        # core distance = k-th NN distance, self counted
+        # (``CoreDistances.hpp:39-54``)
+        core_nn = _knn(pts, core_k)
+        core = core_nn.groupBy("q_id").agg(F.max("dist").alias("core_q")).persist()
         core.count()
+        _free(core_nn)
+
+    def _weigh(nn):
+        """``nn`` (q_id, r_id, dist, …) plus the edge weight ``w`` —
+        distance, or mutual reachability ``max(core_q, core_r, dist)``
+        (``BoruvkasAlgorithm.hpp:307-308``) — and the query's core
+        distance ``core_q`` (0.0 without ``core_k``)."""
+        if core is None:
+            return nn.withColumn("w", F.col("dist")).withColumn("core_q", F.lit(0.0))
+        return (
+            nn.join(core, "q_id")
+            .join(core.select(F.col("q_id").alias("r_id"), F.col("core_q").alias("core_r")), "r_id")
+            .withColumn("w", F.greatest("core_q", "core_r", "dist"))
+            .drop("core_r")
+        )
 
     # distributed component map (id -> comp), never collected. Plain
     # (non-hinted) joins everywhere it is used: AQE broadcasts it while
@@ -206,7 +235,7 @@ def minimum_spanning_tree(
     comp_df.count()
     n_comp = n
     edge_parts: list[DataFrame] = []  # per-round edges (non-ckpt mode)
-    base_nn = None  # k0-NN lists, shared across rounds
+    base_nn = None  # K0-NN lists, shared across rounds
     round_no = 0
     if ckpt_dir is not None:
         last = _ckpt_last_round(spark, ckpt_dir)
@@ -220,15 +249,15 @@ def minimum_spanning_tree(
     # tiny inputs (e.g. distributed-plan gates): all-pairs lists cost
     # n² ≤ 64k rows once and remove every escalation pass — strictly
     # cheaper than 2+ extra kNN rounds of per-job latency
-    k_base = n if n <= 256 else min(k0, n)
+    k_base = n if n <= 256 else min(K0, n)
 
     # ------------------------------------------------------------------
     # r6: kNN-graph Kruskal bootstrap (round-latency fix, VERDICT #4).
-    # The base k0-NN candidate edges contain the vast majority of the
+    # The base K0-NN candidate edges contain the vast majority of the
     # MST; running the first O(log n) Borůvka rounds through them as
     # Spark jobs is pure scheduler latency (measured: 647 jobs /
     # 245 s for one 14 k-point geodesic MST). When the candidate edge
-    # set is driver-bounded (n·k0 rows — the same O(n) driver-contract
+    # set is driver-bounded (n·K0 rows — the same O(n) driver-contract
     # position as the dendrogram), sweep it ONCE ascending with the
     # coverage-bound safety rule:
     #
@@ -254,7 +283,7 @@ def minimum_spanning_tree(
     # Skipped when the caller FORCES fully-distributed merges
     # (driver_cutoff == 0 — the plan-exercising tests/gates), for the
     # tiny all-pairs case (k_base == n), in resumable-checkpoint mode,
-    # and whenever n·k0 exceeds the driver bound at scale.
+    # and whenever n·K0 exceeds the driver bound at scale.
     if (
         driver_cutoff > 0
         and k_base < n
@@ -262,38 +291,18 @@ def minimum_spanning_tree(
         and ckpt_dir is None
         and n_comp == n
     ):
-        base_nn = (
-            _knn(pts, pts, k_base).where(F.col("q_id") != F.col("r_id")).persist()
-        )
+        base_nn = _cross_knn(pts, k_base).persist()
         base_nn.count()
-        nnb = base_nn.select("q_id", "r_id", "dist")
-        if core is not None:
-            nnb = (
-                nnb.join(
-                    core.select(F.col("id").alias("q_id"), F.col("core_distance").alias("core_q")),
-                    "q_id",
-                )
-                .join(
-                    core.select(F.col("id").alias("r_id"), F.col("core_distance").alias("core_r")),
-                    "r_id",
-                )
-                .select(
-                    "q_id",
-                    "r_id",
-                    "dist",
-                    F.greatest("core_q", "core_r", "dist").alias("w"),
-                    "core_q",
-                )
-            )
-        else:
-            nnb = nnb.select(
-                "q_id", "r_id", "dist", F.col("dist").alias("w"), F.lit(0.0).alias("core_q")
-            )
         kth: dict = {}
         core_of: dict = {}
         edge_w: dict = {}
 
-        def _ingest(rows, reset_ids=None):
+        def _ingest(nn, reset_ids=None):
+            # exactly these five columns reach the driver — the memory
+            # stated at BOOTSTRAP_EDGE_LIMIT
+            rows = _weigh(nn.select("q_id", "r_id", "dist")).select(
+                "q_id", "r_id", "dist", "w", "core_q"
+            ).collect()
             if reset_ids:
                 for p in reset_ids:
                     kth[p] = -1.0
@@ -307,31 +316,7 @@ def minimum_spanning_tree(
                 if prev is None or w < prev:
                     edge_w[key] = w
 
-        def _with_w(nn_df):
-            b_ = nn_df.select("q_id", "r_id", "dist")
-            if core is not None:
-                return (
-                    b_.join(
-                        core.select(F.col("id").alias("q_id"), F.col("core_distance").alias("core_q")),
-                        "q_id",
-                    )
-                    .join(
-                        core.select(F.col("id").alias("r_id"), F.col("core_distance").alias("core_r")),
-                        "r_id",
-                    )
-                    .select(
-                        "q_id",
-                        "r_id",
-                        "dist",
-                        F.greatest("core_q", "core_r", "dist").alias("w"),
-                        "core_q",
-                    )
-                )
-            return b_.select(
-                "q_id", "r_id", "dist", F.col("dist").alias("w"), F.lit(0.0).alias("core_q")
-            )
-
-        _ingest(nnb.collect())
+        _ingest(base_nn)
         bound = {q: max(core_of[q], kth[q]) for q in kth}
 
         def _sweep():
@@ -397,35 +382,22 @@ def minimum_spanning_tree(
             pend_df = spark.createDataFrame(
                 [(p,) for p in pend_ids], schema=f"id {id_sql}"
             ).join(pts, "id")
-            nn2 = _knn(pend_df, pts, k_next).where(F.col("q_id") != F.col("r_id"))
-            _ingest(_with_w(nn2).collect(), reset_ids=pend_ids)
+            nn2 = _cross_knn(pend_df, k_next)
+            _ingest(nn2, reset_ids=pend_ids)
+            _free(nn2)
             for p in pend_ids:
                 bound[p] = (
                     inf if k_next >= n else max(core_of[p], kth[p])
                 )
             k_cur = k_next
         if picked:
-            touched = {e[0] for e in picked} | {e[1] for e in picked}
-            canon: dict = {}
-            for p in touched:
-                r0 = uf.find(p)
-                if r0 not in canon or p < canon[r0]:
-                    canon[r0] = p
-            mapping = [
-                (p, canon[uf.find(p)]) for p in touched if canon[uf.find(p)] != p
-            ]
+            # at the bootstrap every comp is its own id
+            mapping = uf.canonical({p for e in picked for p in e[:2]})
             if mapping:
-                relabel = spark.createDataFrame(
-                    mapping, schema=f"id {id_sql}, newc {id_sql}"
+                comp_df = _relabel(
+                    comp_df,
+                    spark.createDataFrame(mapping, schema=f"comp {id_sql}, newc {id_sql}"),
                 )
-                new_comp = (
-                    comp_df.join(relabel, "id", "left")
-                    .select("id", F.coalesce("newc", "comp").alias("comp"))
-                    .persist()
-                )
-                new_comp.count()
-                comp_df.unpersist()
-                comp_df = new_comp
             edge_parts.append(spark.createDataFrame(picked, edge_schema))
             n_comp -= len(picked)
 
@@ -436,44 +408,29 @@ def minimum_spanning_tree(
         k = k_base
         pend = pts
         best_df: DataFrame | None = None  # (q_comp, e{w, a, b, ca, cb})
-        first_pass = True
+        # superseded pass state (kNN rows, best_df checkpoints): the
+        # lazy `pend` may read any of it until the round's passes end
+        spent: list[DataFrame] = []
         while True:
-            if first_pass:
+            if best_df is None:
                 # the base k-NN lists are component-independent — computed
                 # once before round 1 and reused every round
                 if base_nn is None:
-                    base_nn = (
-                        _knn(pts, pts, k)
-                        .where(F.col("q_id") != F.col("r_id"))
-                        .persist()
-                    )
+                    base_nn = _cross_knn(pts, k).persist()
                     base_nn.count()
                 nn = base_nn
             else:
-                nn = _knn(pend, pts, k).where(F.col("q_id") != F.col("r_id"))
-            first_pass = False
-            nn = (
+                nn = _cross_knn(pend, k)
+                spent.append(nn)
+            nn = _weigh(
                 nn.join(
                     comp_df.select(F.col("id").alias("q_id"), F.col("comp").alias("q_comp")),
                     "q_id",
-                )
-                .join(
+                ).join(
                     comp_df.select(F.col("id").alias("r_id"), F.col("comp").alias("r_comp")),
                     "r_id",
                 )
             )
-            if core is not None:
-                nn = (
-                    nn.join(
-                        core.select(F.col("id").alias("q_id"), F.col("core_distance").alias("core_q")), "q_id"
-                    )
-                    .join(
-                        core.select(F.col("id").alias("r_id"), F.col("core_distance").alias("core_r")), "r_id"
-                    )
-                    .withColumn("w", F.greatest("core_q", "core_r", "dist"))
-                )
-            else:
-                nn = nn.withColumn("w", F.col("dist"))
             # one materialization per pass: the best-edge aggregation,
             # the prune aggregation, and the pending check all read nn
             nn = nn.persist()
@@ -518,7 +475,7 @@ def minimum_spanning_tree(
                 )
             new_best = new_best.localCheckpoint()  # ≤ n_comp rows, truncates pass lineage
             if best_df is not None:
-                best_df.unpersist()
+                spent.append(best_df)
             best_df = new_best
 
             if k >= n:
@@ -530,7 +487,7 @@ def minimum_spanning_tree(
             per_q = nn.groupBy("q_id", "q_comp").agg(
                 F.max("dist").alias("kth"),
                 F.max(F.when(F.col("q_comp") != F.col("r_comp"), 1).otherwise(0)).alias("has_cross"),
-                F.max(F.col("core_q") if core is not None else F.lit(0.0)).alias("core_q"),
+                F.max("core_q").alias("core_q"),
             )
             per_q = per_q.join(
                 best_df.select("q_comp", F.col("e.w").alias("comp_best")),
@@ -558,36 +515,23 @@ def minimum_spanning_tree(
             if pend_empty:
                 break
             k = min(n, k * 2)
+        _free(*spent)
 
-        if best_df is None:
-            break
         if n_comp > driver_cutoff:
             new_edges, relabel, n_merges = _merge_distributed(best_df)
-            if n_merges == 0:
-                best_df.unpersist()
-                break
         else:
             rows = best_df.select("q_comp", "e.*").collect()
-            new_edges_l, mapping, n_merges = _merge_driver(rows)
-            if n_merges == 0:
-                best_df.unpersist()
-                break
+            new_edges_l, mapping = _merge_driver(rows)
+            n_merges = len(new_edges_l)
             new_edges = spark.createDataFrame(new_edges_l, edge_schema)
-            relabel = (
-                spark.createDataFrame(mapping, schema=f"comp {id_sql}, newc {id_sql}")
-                if mapping
-                else None
-            )
+            relabel = spark.createDataFrame(
+                mapping, schema=f"comp {id_sql}, newc {id_sql}"
+            ) if mapping else None
+        _free(best_df)
+        if n_merges == 0:
+            break
         if relabel is not None:
-            new_comp = (
-                comp_df.join(relabel, "comp", "left")
-                .select("id", F.coalesce("newc", "comp").alias("comp"))
-                .persist()
-            )
-            new_comp.count()
-            comp_df.unpersist()
-            comp_df = new_comp
-        best_df.unpersist()
+            comp_df = _relabel(comp_df, relabel)
         n_comp -= n_merges
         if ckpt_dir is not None:
             # round state THEN the commit marker: a crash between the
@@ -595,6 +539,7 @@ def minimum_spanning_tree(
             new_edges.write.mode("overwrite").parquet(
                 f"{ckpt_dir}/edges/round={round_no}"
             )
+            release(new_edges)
             comp_df.write.mode("overwrite").parquet(
                 f"{ckpt_dir}/comp/round={round_no}"
             )
@@ -610,8 +555,7 @@ def minimum_spanning_tree(
     pts.unpersist()
     if core is not None:
         core.unpersist()
-    if base_nn is not None:
-        base_nn.unpersist()
+    _free(base_nn)
     if ckpt_dir is not None:
         if round_no == 0:
             return spark.createDataFrame([], edge_schema)
@@ -619,7 +563,32 @@ def minimum_spanning_tree(
     out = spark.createDataFrame([], edge_schema)
     for p in edge_parts:
         out = out.unionByName(p)
-    return out
+    # the distributed merges' chosen-edge checkpoints ride the result
+    return carry(out, *(p for p in edge_parts if hasattr(p, "_ffcl_cached")))
+
+
+def _free(*dfs: DataFrame | None) -> None:
+    """Drop intermediates nothing reads any more: their caches and the
+    checkpoints they select rows from."""
+    for df in dfs:
+        if df is not None:
+            df.unpersist()
+            free_checkpoint_tree(df, selection_only=True)
+
+
+def _relabel(comp_df: DataFrame, relabel: DataFrame) -> DataFrame:
+    """The component map with every ``comp`` of ``relabel`` (comp,
+    newc) renamed to ``newc`` — persisted and materialized; the old map
+    and ``relabel`` are freed."""
+    new_comp = (
+        comp_df.join(relabel, "comp", "left")
+        .select("id", F.coalesce("newc", "comp").alias("comp"))
+        .persist()
+    )
+    new_comp.count()
+    comp_df.unpersist()
+    _free(relabel)
+    return new_comp
 
 
 def _ckpt_last_round(spark, ckpt_dir: str) -> tuple[int, int] | None:
@@ -637,33 +606,25 @@ def _ckpt_last_round(spark, ckpt_dir: str) -> tuple[int, int] | None:
     return int(last["round"]), int(last["n_comp"])
 
 
-def _merge_driver(rows) -> tuple[list[tuple], list[tuple], int]:
+def _merge_driver(rows) -> tuple[list[tuple], list[tuple]]:
     """Union-find merge of collected per-COMPONENT best edges (≤
     driver_cutoff rows — bounded by the component count, never by the
-    point count). Returns (new MST edges, comp-relabel mapping,
-    merge count) — reference ``UnionFind.hpp`` / merge step
+    point count). Returns (new MST edges, comp-relabel mapping) —
+    reference ``UnionFind.hpp`` / merge step
     ``BoruvkasAlgorithm.hpp:140-176``."""
     round_edges = {(r["w"], r["a"], r["b"], r["ca"], r["cb"]) for r in rows}
     uf = UnionFind()
     edges: list[tuple] = []
-    n_merges = 0
     for w, a, b, ca, cb in sorted(round_edges):
         if uf.find(ca) != uf.find(cb):
             uf.merge(ca, cb)
             edges.append((a, b, w))
-            n_merges += 1
     # canonical new label per merged group = min old comp label
-    touched = {c for *_, ca, cb in round_edges for c in (ca, cb)}
-    canon: dict = {}
-    for c in touched:
-        r = uf.find(c)
-        if r not in canon or c < canon[r]:
-            canon[r] = c
-    mapping = [(c, canon[uf.find(c)]) for c in touched if canon[uf.find(c)] != c]
-    return edges, mapping, n_merges
+    mapping = uf.canonical({c for *_, ca, cb in round_edges for c in (ca, cb)})
+    return edges, mapping
 
 
-def _merge_distributed(best_df: DataFrame) -> tuple[DataFrame, DataFrame, int]:
+def _merge_distributed(best_df: DataFrame) -> tuple[DataFrame | None, DataFrame | None, int]:
     """DataFrame-side Borůvka merge — no driver state at any size.
 
     The distinct canonical chosen edges are cycle-free (module
@@ -671,28 +632,33 @@ def _merge_distributed(best_df: DataFrame) -> tuple[DataFrame, DataFrame, int]:
     connected components of the chosen-edge graph: each component
     points at its chosen partner; the only cycles are mutual pairs
     (rooted at their smaller label); pointer doubling then converges in
-    ≤ log2(n_comp) self-joins. Returns (edge DataFrame (src, dst, w),
-    relabel DataFrame (comp, newc), number of merges)."""
+    ≤ log2(n_comp) self-joins. Returns (edge DataFrame (src, dst, w)
+    carrying its checkpoint, relabel checkpoint (comp, newc), number of
+    merges); (None, None, 0) when nothing merges.
+
+    Kept over ``components.connected_components``: swapping it in gave
+    equal weights but more Spark jobs on every measured fixture."""
     chosen = (
         best_df.select("e.w", "e.a", "e.b", "e.ca", "e.cb").distinct().localCheckpoint()
     )
     n_merges = chosen.count()
     if n_merges == 0:
-        return chosen.select(
-            F.col("a").alias("src"), F.col("b").alias("dst"), "w"
-        ), None, 0
-    new_edges = chosen.select(F.col("a").alias("src"), F.col("b").alias("dst"), "w")
-    parent = best_df.select(
+        _free(chosen)
+        return None, None, 0
+    new_edges = carry(
+        chosen.select(F.col("a").alias("src"), F.col("b").alias("dst"), "w"), chosen
+    )
+    pointer = best_df.select(
         "q_comp",
         F.when(F.col("e.ca") == F.col("q_comp"), F.col("e.cb"))
         .otherwise(F.col("e.ca"))
         .alias("parent"),
     ).localCheckpoint()
     # root mutual pairs at their smaller label
-    p2 = parent.select(
+    p2 = pointer.select(
         F.col("q_comp").alias("parent"), F.col("parent").alias("gparent")
     )
-    parent = parent.join(p2, "parent", "left").select(
+    parent = pointer.join(p2, "parent", "left").select(
         "q_comp",
         F.when(
             (F.col("gparent") == F.col("q_comp")) & (F.col("q_comp") < F.col("parent")),
@@ -701,6 +667,7 @@ def _merge_distributed(best_df: DataFrame) -> tuple[DataFrame, DataFrame, int]:
         .otherwise(F.col("parent"))
         .alias("parent"),
     ).localCheckpoint()
+    _free(pointer)
     # pointer doubling to the roots
     for _ in range(64):  # ≥ log2 of any feasible component count
         hop = parent.select(
@@ -715,7 +682,7 @@ def _merge_distributed(best_df: DataFrame) -> tuple[DataFrame, DataFrame, int]:
             .where(F.col("n.parent") != F.col("p.parent"))
         )
         done = changed.isEmpty()
-        parent.unpersist()
+        _free(parent)
         parent = nxt
         if done:
             break
@@ -733,5 +700,5 @@ def _merge_distributed(best_df: DataFrame) -> tuple[DataFrame, DataFrame, int]:
         .select(F.col("q_comp").alias("comp"), "newc")
         .localCheckpoint()
     )
-    parent.unpersist()
+    _free(parent)
     return new_edges, relabel, n_merges

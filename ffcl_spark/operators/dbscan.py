@@ -71,6 +71,18 @@ class UnionFind:
             self.rank[ra] += 1
         return ra
 
+    def canonical(self, keys) -> list[tuple]:
+        """(key, min member of key's set) for every key of ``keys``
+        that is not its set's minimum — the engine's canonical
+        min-member relabel. Set minima are taken over ``keys``, so a
+        set's minimum need not be a union root."""
+        root = {k: self.find(k) for k in keys}
+        low: dict = {}
+        for k, r in root.items():
+            if r not in low or k < low[r]:
+                low[r] = k
+        return [(k, low[r]) for k, r in root.items() if low[r] != k]
+
 
 def dbscan(
     points: DataFrame,
@@ -204,16 +216,7 @@ def _dbscan_from_pairs(
     uf = UnionFind()
     for row in comp_edges:
         uf.merge(row["q_comp"], row["r_comp"])
-    roots: dict = {}
-    canon: dict = {}
-    for row in comp_edges:
-        for c in (row["q_comp"], row["r_comp"]):
-            roots[c] = uf.find(c)
-    for c, r in roots.items():
-        m = canon.get(r)
-        if m is None or c < m:
-            canon[r] = c
-    mapping = [(c, canon[roots[c]]) for c in roots]
+    mapping = uf.canonical({c for row in comp_edges for c in row})
 
     spark = points.sparkSession
     if mapping:

@@ -670,8 +670,9 @@ def geo_mst(
         pts, GEO_CFG, core_k=core_k, local_cutoff=local_cutoff,
         features_col="features", ckpt_dir=ckpt_dir,
     )
-    return edges.select(
-        "src", "dst", arc_of_chord_m(F.col("w"), earth_radius_m).alias("w")
+    return carry(
+        edges.select("src", "dst", arc_of_chord_m(F.col("w"), earth_radius_m).alias("w")),
+        edges,
     )
 
 
@@ -692,26 +693,14 @@ def geo_single_linkage_cut(
     member id), components below ``min_cluster_size`` are noise 0.
     Fully distributed: the cut at λ is the connected components of the
     strict ``w < λ`` subset of the metre-weighted MST."""
-    from ffcl_spark.operators.components import connected_components
+    from ffcl_spark.operators.hdbscan import _cut_labels
 
-    ids = points.select(F.col(id_col).alias("id"))
     edges_m = geo_mst(
         points, local_cutoff=local_cutoff, id_col=id_col,
         lat_col=lat_col, lon_col=lon_col, earth_radius_m=earth_radius_m,
-    ).persist()
-    kept = edges_m.where(F.col("w") < cut_m).select("src", "dst")
-    comp = connected_components(ids, kept)
-    edges_m.unpersist()
-    id_type = points.schema[id_col].dataType
-    noise = F.lit(0).cast(id_type)
-    sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("csize"))
-    return comp.join(sizes, "comp").select(
-        "id",
-        F.when(F.col("csize") >= min_cluster_size, F.col("comp"))
-        .otherwise(noise)
-        .alias("label"),
-        (F.col("csize") < min_cluster_size).alias("is_noise"),
     )
+    ids = points.select(F.col(id_col).alias("id"))
+    return _cut_labels(ids, edges_m, cut_m, min_cluster_size)
 
 
 def geo_hdbscan(
@@ -737,25 +726,15 @@ def geo_hdbscan(
     (λ = 1/level, ``CondensedClusterNode.hpp:83-88``) is not invariant
     under reparameterizing the weight axis, so selecting clusters on
     chord weights would answer a different (chord-metric) question."""
-    from ffcl_spark.kernels.hierarchy import hdbscan_partition
-    from ffcl_spark.operators.boruvka import mst_edges_local
-    from ffcl_spark.operators.hdbscan import _emit_labels
+    from ffcl_spark.operators.hdbscan import _hdbscan_labels
 
     core_k = k_nearest_neighbors if k_nearest_neighbors > 1 else None
     edges_m = geo_mst(
         points, core_k=core_k, local_cutoff=local_cutoff, id_col=id_col,
         lat_col=lat_col, lon_col=lon_col, earth_radius_m=earth_radius_m,
-    ).persist()
-    edges = mst_edges_local(edges_m)
-    ids = sorted({e[0] for e in edges} | {e[1] for e in edges})
-    removed, sel_labels = hdbscan_partition(
-        ids, edges, min_cluster_size, allow_single_cluster
     )
-    out = _emit_labels(
-        points.select(F.col(id_col).alias("id")), edges_m, removed, sel_labels
-    )
-    edges_m.unpersist()
-    return out
+    ids = points.select(F.col(id_col).alias("id"))
+    return _hdbscan_labels(ids, edges_m, min_cluster_size, allow_single_cluster)
 
 
 def geo_closest_pair(

@@ -30,6 +30,7 @@ from ffcl_spark.config import EngineConfig
 from ffcl_spark.kernels.hierarchy import hdbscan_partition
 from ffcl_spark.operators.boruvka import minimum_spanning_tree, mst_edges_local
 from ffcl_spark.operators.components import connected_components
+from ffcl_spark.plans.cache import carry, release
 
 # above this many removed edges, skip the forced broadcast and let AQE
 # choose (the driver upload itself remains the declared O(n) worst-case
@@ -58,16 +59,31 @@ def hdbscan(
     edges_df = minimum_spanning_tree(
         points, cfg, core_k=core_k, local_cutoff=local_cutoff,
         features_col=features_col, ckpt_dir=ckpt_dir,
-    ).persist()
-    # dendrogram build = the O(n) driver contract; the PLAN it returns
-    # is cluster-count/noise-count sized, not point-count sized
-    edges = mst_edges_local(edges_df)
-    ids = sorted({e[0] for e in edges} | {e[1] for e in edges})
-    removed, sel_labels = hdbscan_partition(
-        ids, edges, min_cluster_size, allow_single_cluster
     )
-    out = _emit_labels(points, edges_df, removed, sel_labels)
+    return _hdbscan_labels(
+        points.select("id"), edges_df, min_cluster_size, allow_single_cluster
+    )
+
+
+def _hdbscan_labels(
+    ids: DataFrame,
+    edges_df: DataFrame,
+    min_cluster_size: int,
+    allow_single_cluster: bool,
+) -> DataFrame:
+    """(id, label, is_noise) of the points ``ids`` from their MST edges
+    (src, dst, w), which are released here. The dendrogram build is the
+    O(n) driver contract; the PLAN it returns is cluster-count/noise-
+    count sized, not point-count sized."""
+    edges_df = edges_df.persist()
+    edges = mst_edges_local(edges_df)
+    node_ids = sorted({e[0] for e in edges} | {e[1] for e in edges})
+    removed, sel_labels = hdbscan_partition(
+        node_ids, edges, min_cluster_size, allow_single_cluster
+    )
+    out = _emit_labels(ids, edges_df, removed, sel_labels)
     edges_df.unpersist()
+    release(edges_df)
     return out
 
 
@@ -103,14 +119,12 @@ def _emit_labels(
         [(l,) for l in selected_labels], f"sel_label {id_sql}"
     )
     noise = F.lit(0).cast(id_type)
-    return (
-        comp.join(F.broadcast(sel), comp["comp"] == sel["sel_label"], "left")
-        .select(
-            "id",
-            F.coalesce("sel_label", noise).alias("label"),
-            F.col("sel_label").isNull().alias("is_noise"),
-        )
+    out = comp.join(F.broadcast(sel), comp["comp"] == sel["sel_label"], "left").select(
+        "id",
+        F.coalesce("sel_label", noise).alias("label"),
+        F.col("sel_label").isNull().alias("is_noise"),
     )
+    return carry(out, comp)
 
 
 def slt_tree_json(
@@ -135,6 +149,7 @@ def slt_tree_json(
         points, cfg, local_cutoff=local_cutoff, features_col=features_col
     )
     edges = mst_edges_local(edges_df)
+    release(edges_df)
     ids = sorted({e[0] for e in edges} | {e[1] for e in edges})
     root = single_linkage_tree(ids, edges)
     return json.dumps(slt_to_json(root, max_depth=max_depth), sort_keys=True)
@@ -156,19 +171,30 @@ def single_linkage_cut(
     fully merged strictly below λ), with components smaller than
     ``min_cluster_size`` as noise — no driver pass over edges or
     labels at any point."""
-    edges_df = minimum_spanning_tree(
-        points, cfg, local_cutoff=local_cutoff
-    ).persist()
+    edges_df = minimum_spanning_tree(points, cfg, local_cutoff=local_cutoff)
+    return _cut_labels(points.select("id"), edges_df, cut_level, min_cluster_size)
+
+
+def _cut_labels(
+    ids: DataFrame, edges_df: DataFrame, cut_level: float, min_cluster_size: int
+) -> DataFrame:
+    """(id, label, is_noise) of the single-linkage cut at ``cut_level``
+    over the MST edges (src, dst, w) of the points ``ids``; the edges
+    are released here. Clusters are the components of the strict
+    ``w < cut_level`` edges; components below ``min_cluster_size`` are
+    noise 0."""
+    edges_df = edges_df.persist()
     kept = edges_df.where(F.col("w") < cut_level).select("src", "dst")
-    comp = connected_components(points.select("id"), kept)
+    comp = connected_components(ids, kept)
     edges_df.unpersist()
-    id_type = points.schema["id"].dataType
-    noise = F.lit(0).cast(id_type)
+    release(edges_df)
+    noise = F.lit(0).cast(ids.schema["id"].dataType)
     sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("csize"))
-    return comp.join(sizes, "comp").select(
+    out = comp.join(sizes, "comp").select(
         "id",
         F.when(F.col("csize") >= min_cluster_size, F.col("comp"))
         .otherwise(noise)
         .alias("label"),
         (F.col("csize") < min_cluster_size).alias("is_noise"),
     )
+    return carry(out, comp)

@@ -189,7 +189,7 @@ def free_checkpoint(df: DataFrame) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
-def free_checkpoint_tree(df: DataFrame) -> None:
+def free_checkpoint_tree(df: DataFrame, selection_only: bool = False) -> None:
     """Deterministically unpersist EVERY localCheckpoint in ``df``'s
     analyzed plan — a union of checkpointed levels (the grid kNN's
     grid and straggler passes, the expanding-radius joins) holds several
@@ -197,14 +197,26 @@ def free_checkpoint_tree(df: DataFrame) -> None:
     cannot reach. For epoch-scoped results a streaming handler has
     already written out: the caller must own every checkpoint in the
     plan, and the frame is not collectable afterwards (truncated
-    lineage)."""
+    lineage).
+
+    ``selection_only``: free nothing unless ``df`` only selects rows of
+    its checkpoints (Union, Project and Filter above LogicalRDD
+    leaves). For kNN results that are either checkpointed (the grid
+    plan) or a lazy plan over the caller's input (the n-D closure and
+    blocked plans), whose checkpoints are not the caller's to free."""
     if not _PLAN_WALKS:
         return
+    leaves = []
     stack = [df._jdf.queryExecution().analyzed()]
     while stack:
         node = stack.pop()
-        if node.getClass().getName().endswith(".LogicalRDD"):
-            node.rdd().unpersist(False)
+        name = node.getClass().getSimpleName()
+        if name == "LogicalRDD":
+            leaves.append(node)
+        elif selection_only and name not in ("Union", "Filter", *_ROW_PRESERVING):
+            return
         kids = node.children()
         for i in range(kids.size()):
             stack.append(kids.apply(i))
+    for leaf in leaves:
+        leaf.rdd().unpersist(False)

@@ -5,6 +5,7 @@ values. Reports per-query PASS/FAIL + timing."""
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -12,7 +13,8 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# this checkout, not whichever copy is installed or first on the path
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as E  # noqa: E402
 from ffcl_spark import get_spark  # noqa: E402
