@@ -46,8 +46,12 @@ Distributed form — exact, with the reference's prune translated:
   ``_relabel``.
 - one weighting (``_weigh``) serves the bootstrap and every pass;
   core distances are the per-query max of the MST's own kNN call.
-- every intermediate (cached frame or localCheckpoint) is freed once
-  nothing reads it; the chosen-edge checkpoints ride the output.
+- every kNN result is released (``plans.cache.release``) once its
+  pass is done: Borůvka checkpoints only its own small per-pass state
+  (the pending ids and the best-edge table), so no lazy plan reaches
+  a freed kNN. Every other intermediate (cached frame or
+  localCheckpoint) is freed once nothing reads it; the chosen-edge
+  checkpoints ride the output.
 
 Output: the MST edge DataFrame (src, dst, w) — n−1 rows, carrying
 the checkpoints it reads (free them with ``plans.cache.release``).
@@ -75,7 +79,7 @@ from ffcl_spark.config import EngineConfig
 from ffcl_spark.operators.dbscan import UnionFind
 from ffcl_spark.operators.knn_kernel import knn_join_grid
 from ffcl_spark.plans.cache import carry, release
-from ffcl_spark.plans.stats import free_checkpoint_tree
+from ffcl_spark.plans.stats import free_checkpoint
 
 DRIVER_CUTOFF = 100_000  # switch to driver union-find below this many components
 # max n·K0 candidate rows the Kruskal bootstrap may collect (same O(n)
@@ -169,11 +173,7 @@ def minimum_spanning_tree(
         def _knn(q, k_):
             if "hot" not in _hot:
                 _hot["hot"] = hot_coarse_groups(pts, cfg)
-            # checkpoint=True: iterative caller — every escalation
-            # round must leave no cached partitions behind
-            return knn_join_grid(
-                q, pts, k_, cfg, checkpoint=True, hot_groups=_hot["hot"]
-            )
+            return knn_join_grid(q, pts, k_, cfg, hot_groups=_hot["hot"])
 
         def _matrix(pdf):
             return pdf[["x", "y"]].to_numpy()
@@ -183,14 +183,16 @@ def minimum_spanning_tree(
         pts = points.select("id", F.col(features_col).alias("features")).persist()
 
         def _knn(q, k_):
-            return knn_join_nd(q, pts, k_, cfg, "features", axes, checkpoint=True)
+            return knn_join_nd(q, pts, k_, cfg, "features", axes)
 
         def _matrix(pdf):
             return np.array(pdf["features"].tolist(), dtype=np.float64)
 
     def _cross_knn(q, k_):
-        """k_-NN lists of ``q`` over every point, self pairs dropped."""
-        return _knn(q, k_).where(F.col("q_id") != F.col("r_id"))
+        """k_-NN lists of ``q`` over every point, self pairs dropped,
+        carrying the kNN's intermediates."""
+        nn = _knn(q, k_)
+        return carry(nn.where(F.col("q_id") != F.col("r_id")), nn)
 
     n = pts.count()
     if n <= 1:
@@ -407,10 +409,8 @@ def minimum_spanning_tree(
         round_no += 1
         k = k_base
         pend = pts
+        pend_ids: DataFrame | None = None  # checkpointed ids of `pend`
         best_df: DataFrame | None = None  # (q_comp, e{w, a, b, ca, cb})
-        # superseded pass state (kNN rows, best_df checkpoints): the
-        # lazy `pend` may read any of it until the round's passes end
-        spent: list[DataFrame] = []
         while True:
             if best_df is None:
                 # the base k-NN lists are component-independent — computed
@@ -418,12 +418,11 @@ def minimum_spanning_tree(
                 if base_nn is None:
                     base_nn = _cross_knn(pts, k).persist()
                     base_nn.count()
-                nn = base_nn
+                knn = base_nn
             else:
-                nn = _cross_knn(pend, k)
-                spent.append(nn)
+                knn = _cross_knn(pend, k)
             nn = _weigh(
-                nn.join(
+                knn.join(
                     comp_df.select(F.col("id").alias("q_id"), F.col("comp").alias("q_comp")),
                     "q_id",
                 ).join(
@@ -474,12 +473,11 @@ def minimum_spanning_tree(
                     .agg(F.min("e").alias("e"))
                 )
             new_best = new_best.localCheckpoint()  # ≤ n_comp rows, truncates pass lineage
-            if best_df is not None:
-                spent.append(best_df)
+            _free(best_df)
             best_df = new_best
 
             if k >= n:
-                nn.unpersist()
+                _free(nn, pend_ids, None if knn is base_nn else knn)
                 break
             # escalation: points whose unseen-neighbor lower bound could
             # still beat their component's best (per-point rows never
@@ -508,14 +506,16 @@ def minimum_spanning_tree(
                 pend_cond = (F.col("has_cross") == 0) & (
                     F.col("comp_best").isNull() | (F.col("kth") < F.col("comp_best"))
                 )
-            pend_ids = per_q.where(pend_cond).select(F.col("q_id").alias("id"))
-            pend = pts.join(F.broadcast(pend_ids), "id", "left_semi")
-            pend_empty = pend.isEmpty()
-            nn.unpersist()
-            if pend_empty:
+            # checkpointed, so the next pass's kNN over `pend` reads
+            # neither this pass's rows nor its kNN: both are freed here
+            next_ids = per_q.where(pend_cond).select(F.col("q_id").alias("id")).localCheckpoint()
+            _free(nn, pend_ids, None if knn is base_nn else knn)
+            pend_ids = next_ids
+            if pend_ids.isEmpty():
+                _free(pend_ids)
                 break
+            pend = pts.join(F.broadcast(pend_ids), "id", "left_semi")
             k = min(n, k * 2)
-        _free(*spent)
 
         if n_comp > driver_cutoff:
             new_edges, relabel, n_merges = _merge_distributed(best_df)
@@ -568,12 +568,13 @@ def minimum_spanning_tree(
 
 
 def _free(*dfs: DataFrame | None) -> None:
-    """Drop intermediates nothing reads any more: their caches and the
-    checkpoints they select rows from."""
+    """Drop intermediates nothing reads any more: their own cache or
+    checkpoint and the intermediates they carry."""
     for df in dfs:
         if df is not None:
             df.unpersist()
-            free_checkpoint_tree(df, selection_only=True)
+            release(df)
+            free_checkpoint(df)
 
 
 def _relabel(comp_df: DataFrame, relabel: DataFrame) -> DataFrame:

@@ -66,6 +66,14 @@ GEO_CFG = EngineConfig(x0=-1.024, y0=-1.024, domain=2.048, resolution=4)
 # local[2] on a 4-core host); below it the closure plan also saves the
 # round plan's fixed cost of about 2 s per call.
 SPHERE_CLOSURE_REFS = 2048
+# The round plan's schedule: the start radius in metres (None: sized
+# from the ref density, and each query's tier from its own cell's; a
+# pinned radius starts every query there), the radius factor between
+# rounds, and the rounds after the last tier, the final one searching
+# the whole sphere.
+SPHERE_INIT_RADIUS_M: float | None = None
+SPHERE_GROWTH = 3.0
+SPHERE_MAX_ROUNDS = 10
 
 
 def haversine_m(
@@ -242,11 +250,7 @@ def sphere_knn_join(
     lat_col: str = "lat",
     lon_col: str = "lon",
     earth_radius_m: float = EARTH_RADIUS_M,
-    init_radius_m: float | None = None,
-    growth: float = 3.0,
-    max_rounds: int = 10,
     n_refs: int | None = None,
-    local_start: bool = True,
 ) -> DataFrame:
     """Exact geodesic kNN join (q_id, r_id, dist_m, rank): each query's
     ``min(k, n_refs)`` nearest refs by great-circle distance, ties by
@@ -272,9 +276,9 @@ def sphere_knn_join(
     those candidates, because every point at distance < r is a
     candidate). Its ``dist_m`` is the SQL :func:`haversine_m`, which
     differs from ``haversine_np`` only in the last bits (a relative
-    2.5e-15 at most over 2.25M measured pairs). ``init_radius_m``,
-    ``growth``, ``max_rounds`` and ``local_start`` are round-plan
-    options; the closure plan ignores them.
+    2.5e-15 at most over 2.25M measured pairs). Its schedule is
+    ``SPHERE_INIT_RADIUS_M``, ``SPHERE_GROWTH`` and
+    ``SPHERE_MAX_ROUNDS``.
 
     Rounds: strict radius join at r → per-query window rank by
     (dist_m, r_id) → queries with ≥ k in-radius candidates resolve;
@@ -285,8 +289,8 @@ def sphere_knn_join(
     are localCheckpointed (bounded rounds, scalar rows) and carried on
     the result for ``plans.cache.release``.
 
-    Start radius: with ``local_start`` (default) each query enters the
-    loop at a radius sized from its own cell's ref density — one
+    Start radius: unless ``SPHERE_INIT_RADIUS_M`` pins one, each query
+    enters the loop at a radius sized from its own cell's ref density — one
     ref-count aggregation on an equal-area spherical grid (~64
     refs/cell), broadcast-joined to the queries — targeting an
     expected ~4k in-cap count locally. Queries are processed in radius
@@ -299,7 +303,7 @@ def sphere_knn_join(
     covers. A per-query start radius cannot change the result: the
     resolution rule (≥ k candidates strictly inside the searched cap,
     exact cover) yields the true top-k at ANY radius that satisfies
-    it. Callers pinning ``init_radius_m`` keep the single-entry
+    it. A pinned ``SPHERE_INIT_RADIUS_M`` keeps the single-entry
     behaviour; ref sets ≤ 4096 rows skip the density pass (one tier is
     optimal there)."""
     spark = queries.sparkSession
@@ -320,9 +324,9 @@ def sphere_knn_join(
     q_pts, refs_n = points(queries), points(refs)
     if n_refs <= SPHERE_CLOSURE_REFS:
         return _sphere_knn_closure(q_pts, refs_n.toPandas(), k, earth_radius_m, out_schema)
-    if init_radius_m is not None:
-        local_start = False
-    else:
+    init_radius_m = SPHERE_INIT_RADIUS_M
+    local_start = init_radius_m is None
+    if local_start:
         # expected in-cap count n·(r/2R)² ≈ 4k at this start radius
         init_radius_m = 4.0 * math.sqrt(k / n_refs) * earth_radius_m
         init_radius_m = max(init_radius_m, 1.0)
@@ -346,7 +350,7 @@ def sphere_knn_join(
         r_q_m = F.radians(r_q_deg) * F.lit(earth_radius_m)
         tier = F.ceil(
             F.log(F.greatest(r_q_m, F.lit(1.0)) / F.lit(float(init_radius_m)))
-            / F.lit(math.log(growth))
+            / F.lit(math.log(SPHERE_GROWTH))
         ).cast("int")
         tiered = (
             q_pts.withColumn(
@@ -364,9 +368,9 @@ def sphere_knn_join(
         n_tiers = max(1, int(rng["hi"]) - t_lo + 1)
     parts: list[DataFrame] = []
     prev_remaining: DataFrame | None = None
-    r_m = float(init_radius_m) * (growth ** t_lo)
+    r_m = float(init_radius_m) * (SPHERE_GROWTH ** t_lo)
     remaining = None
-    for rnd in range(max_rounds + n_tiers - 1):
+    for rnd in range(SPHERE_MAX_ROUNDS + n_tiers - 1):
         t = t_lo + rnd
         if tiered is not None and rnd < n_tiers:
             entering = tiered.where(F.col("_t") <= F.lit(t)) if rnd == 0 else (
@@ -379,7 +383,7 @@ def sphere_knn_join(
         elif remaining is None:
             remaining = q_pts
         more_tiers = tiered is not None and rnd + 1 < n_tiers
-        last = (rnd == max_rounds + n_tiers - 2 or r_m >= half_circ) and not more_tiers
+        last = (rnd == SPHERE_MAX_ROUNDS + n_tiers - 2 or r_m >= half_circ) and not more_tiers
         # the last round must cover the whole sphere, however small
         # the radius is when the round budget runs out
         cand = sphere_radius_join(
@@ -417,7 +421,7 @@ def sphere_knn_join(
         remaining = nxt
         if not more_tiers and remaining.isEmpty():
             break
-        r_m *= growth
+        r_m *= SPHERE_GROWTH
     if prev_remaining is not None:
         free_checkpoint(prev_remaining)
     out = parts[0]

@@ -21,7 +21,9 @@ points projected onto two grid axes
   rest are scanned against every ref in one broadcast pass.
 
 ``search.knn_join``, ``search.core_distances`` and the low-dimension
-plan of ``search_nd.knn_join_nd`` run on it.
+plan of ``search_nd.knn_join_nd`` run on it. Its result carries the
+persisted kernel output; every caller, one-shot or iterative, frees it
+with ``plans.cache.release`` (one hand-off, ``plans.cache``).
 ``knn_join_kernel``, the former fine-cell cogroup plan, is an alias:
 the grouping decides which task scans a fine cell, never which rows
 the scan returns.
@@ -98,7 +100,6 @@ def knn_join_grid(
     k: int,
     cfg: EngineConfig,
     group_delta: int = 2,
-    checkpoint: bool = False,
     hot_group_rows: int | None = 2_000_000,
     hot_groups: list[int] | None = None,
     metric: str = "euclidean",
@@ -160,11 +161,10 @@ def knn_join_grid(
     :func:`hot_coarse_groups` — iterative callers with a fixed ref set
     pass it to skip the per-call detection scan (round-3 ADVICE).
 
-    ``checkpoint``: cache hand-off mode (see ``plans.cache``) — False
-    (default, one-shot callers) returns a view over the persisted
-    kernel output, no second materialization; True (iterative callers
-    like Borůvka) checkpoints the grid pass's and the straggler pass's
-    final rows and releases every intermediate before returning.
+    The result is a view over the persisted kernel output, which rides
+    on it (``plans.cache``): the caller's action reads the cache, with
+    no second materialization, and ``plans.cache.release(out)`` frees
+    it once the caller is done.
     """
     if metric not in ("euclidean", "manhattan"):
         raise ValueError(f"unknown metric {metric!r}")
@@ -178,30 +178,20 @@ def knn_join_grid(
 
     grouped = _grid_pass(queries, refs, k, cfg, group_delta, hot, metric, coords).persist()
     out = grouped.where(F.col("done")).select("q_id", "r_id", "dist", "rank")
-    if checkpoint:
-        # iterative callers: checkpoint final rows off the cached
-        # kernel output, then drop the cache — Borůvka calls this per
-        # escalation round and must not accumulate cached partitions
-        out = out.localCheckpoint()
     # every query is represented in `grouped` (placeholders for the
     # candidate-less case), so the pending check is a cached scan, no
     # join — the common case returns here. This isEmpty is the action
-    # that materializes the kernel output into the cache; the one-shot
-    # caller's own action then reads the cache (the r1-floor plan —
-    # the unconditional localCheckpoint cost the headline join ~1.5x
-    # in round 2).
+    # that materializes the kernel output into the cache; the caller's
+    # own action then reads the cache (the r1-floor plan — an
+    # unconditional localCheckpoint cost the headline join ~1.5x in
+    # round 2).
     not_done = grouped.where(~F.col("done")).select(F.col("q_id").alias("id"))
     if not not_done.isEmpty():
         pend = queries.join(not_done.distinct(), "id", "left_semi").select("id", *coords)
         tail = _broadcast_pass(
             pend.toPandas(), queries.schema["id"].dataType, refs, k, metric, coords
         )
-        if checkpoint:
-            tail = tail.localCheckpoint()
         out = out.unionByName(tail)
-    if checkpoint:
-        grouped.unpersist()
-        return out
     return carry(out, grouped)
 
 

@@ -208,7 +208,6 @@ def knn_join(
     k: int,
     cfg: EngineConfig,
     metric: str = "euclidean",
-    checkpoint: bool = False,
 ) -> DataFrame:
     """k nearest refs per query: (q_id, r_id, dist, rank) — the grid
     plan :func:`ffcl_spark.operators.knn_kernel.knn_join_grid` under
@@ -217,24 +216,21 @@ def knn_join(
     Semantics: k smallest distances, ties broken by r_id (deterministic
     engine tie-break; reference keeps first-encountered,
     ``StaticBuffer.hpp:169``); self included when queries ⊆ refs.
-    ``metric``: 'euclidean' or 'manhattan'. ``checkpoint``: the cache
-    hand-off mode of ``plans.cache`` (True for iterative callers)."""
-    return knn_join_grid(queries, refs, k, cfg, checkpoint=checkpoint, metric=metric)
+    ``metric``: 'euclidean' or 'manhattan'. Free the result's carried
+    intermediates with ``plans.cache.release``."""
+    return knn_join_grid(queries, refs, k, cfg, metric=metric)
 
 
-def core_distances(
-    points: DataFrame, k: int, cfg: EngineConfig, checkpoint: bool = False
-) -> DataFrame:
+def core_distances(points: DataFrame, k: int, cfg: EngineConfig) -> DataFrame:
     """(id, core_distance): distance to the k-th NN, self counted —
     reference ``CoreDistances.hpp:39-54``. The self-pair contributes
     distance 0, so this is the max distance of the self-kNN(k) set.
-    With ``checkpoint=True`` every intermediate is released before
-    return; the result reads only the checkpointed kNN rows."""
-    nn = knn_join_grid(points, points, k, cfg, checkpoint=checkpoint)
+    The kNN's intermediates ride the result (``plans.cache.release``)."""
+    nn = knn_join_grid(points, points, k, cfg)
     out = nn.groupBy("q_id").agg(F.max("dist").alias("core_distance")).select(
         F.col("q_id").alias("id"), "core_distance"
     )
-    return out if checkpoint else carry(out, nn)
+    return carry(out, nn)
 
 
 def mutual_reachability(

@@ -396,7 +396,6 @@ def knn_join_nd(
     axes: tuple[int, int] = (0, 1),
     metric: str = "euclidean",
     local_refs_limit: int | None = None,
-    checkpoint: bool = False,
     plan: str = "auto",
 ) -> DataFrame:
     """Exact n-D kNN join (q_id, r_id, dist, rank) — FFCL result-set
@@ -422,7 +421,11 @@ def knn_join_nd(
       first, so no array crosses Arrow; the projected ring-1 radius is
       a valid full-metric termination bound (see module docstring),
       and the queries it leaves open are scanned against every ref in
-      the kernel's broadcast pass. ``checkpoint`` is passed through."""
+      the kernel's broadcast pass.
+
+    The grid plan's result carries its persisted kernel output; the
+    closure and blocked plans persist nothing and carry nothing. Free
+    any result with ``plans.cache.release``."""
     first = None
     if plan == "auto":
         n_refs = row_count(refs)
@@ -447,7 +450,7 @@ def knn_join_nd(
     if plan != "grid":
         raise ValueError(f"unknown plan {plan!r}")
     q, r, names = _flatten(queries, refs, vec_col, axes, first)
-    return knn_join_grid(q, r, k, cfg, checkpoint=checkpoint, metric=metric, coords=names)
+    return knn_join_grid(q, r, k, cfg, metric=metric, coords=names)
 
 
 def core_distances_nd(
@@ -457,12 +460,12 @@ def core_distances_nd(
     vec_col: str = "features",
     axes: tuple[int, int] = (0, 1),
     metric: str = "euclidean",
-    checkpoint: bool = False,
 ) -> DataFrame:
     """(id, core_distance) — n-D form of ``CoreDistances.hpp:39-54``
-    (k-th NN distance, self counted)."""
-    nn = knn_join_nd(points, points, k, cfg, vec_col, axes, metric, checkpoint=checkpoint)
+    (k-th NN distance, self counted). The kNN's intermediates ride the
+    result (``plans.cache.release``)."""
+    nn = knn_join_nd(points, points, k, cfg, vec_col, axes, metric)
     out = nn.groupBy("q_id").agg(F.max("dist").alias("core_distance")).select(
         F.col("q_id").alias("id"), "core_distance"
     )
-    return out if checkpoint else carry(out, nn)
+    return carry(out, nn)

@@ -1,18 +1,15 @@
-"""Cache hand-off between operators and one-shot callers.
+"""Cache hand-off between operators and their callers.
 
-Operators whose physical plan materializes an intermediate (the
-cogrouped kernel output of the kNN joins) have two kinds of callers:
-
-- ITERATIVE callers (Borůvka's escalation rounds) pass
-  ``checkpoint=True``: intermediates are locally checkpointed and
-  unpersisted before return, so repeated calls never accumulate cached
-  partitions — at the cost of one extra materialization per call.
-- ONE-SHOT callers (bench stages, gate queries) take the default
-  ``checkpoint=False``: the intermediate stays persisted and the
-  returned DataFrame reads it; the caller's single action is a cache
-  read, with no second materialization. The persisted handles ride on
-  the returned DataFrame — call :func:`release` when done (benchmark
-  reps must, so rep 2 measures the operator, not the cache).
+One rule: an operator whose plan materializes an intermediate (the
+kNN joins' persisted kernel output, a localCheckpointed round)
+returns a view over it, and the intermediate rides on the returned
+DataFrame (:func:`carry`). The caller's action reads the cache, with
+no second materialization; when the caller is done with the result it
+calls :func:`release`, which frees every carried intermediate, cached
+frames and checkpoints alike. Iterative callers (Borůvka's passes,
+per-epoch stream handlers, per-chunk pipelines) release each result
+once nothing they still read derives from it. A released frame must
+not be collected again.
 """
 
 from __future__ import annotations
@@ -24,7 +21,8 @@ from ffcl_spark.plans.stats import free_checkpoint, is_checkpointed
 
 def carry(out: DataFrame, *cached: DataFrame) -> DataFrame:
     """Attach persisted upstream handles to ``out`` for later release.
-    Handles already carried by the inputs are merged in.
+    Handles already carried by the inputs are merged in; a frame that
+    is neither cached nor localCheckpointed is not attached.
 
     localCheckpointed frames are attached too: their RDD-level persist
     is invisible to ``DataFrame.storageLevel`` (it consults only the

@@ -22,10 +22,10 @@ instead of one straggler task. The hot set is per-key metadata
 and applied as a literal ``isin`` — no extra join, no cached lineage.
 Salting changes the physical grouping only, never the result.
 
-Checkpoint release: :func:`is_checkpointed`, :func:`free_checkpoint`
-and :func:`free_checkpoint_tree` find the ``LogicalRDD`` leaves that
-``localCheckpoint`` leaves in a plan and unpersist their RDDs at once,
-instead of waiting on GC and the ContextCleaner.
+Checkpoint release: :func:`is_checkpointed` and :func:`free_checkpoint`
+find the persisted ``LogicalRDD`` a ``localCheckpoint`` leaves as a
+frame's plan and unpersist its RDD at once, instead of waiting on GC
+and the ContextCleaner.
 
 Every reader here walks Spark's JVM plan classes through py4j. Their
 names and accessors are those of Spark 3 and 4 (``_PLAN_API_MAJORS``).
@@ -165,13 +165,20 @@ def salt_hot_keys(
 
 
 def is_checkpointed(df: DataFrame) -> bool:
-    """True when ``df`` is a localCheckpointed frame (its analyzed plan
-    is a ``LogicalRDD``). Its RDD-level persist is invisible to
-    ``DataFrame.storageLevel``, which consults only the CacheManager."""
+    """True when ``df`` is a localCheckpointed frame: its analyzed plan
+    is a ``LogicalRDD`` whose RDD is persisted (a local checkpoint
+    keeps its blocks at ``disk, memory, deserialized``). A frame built
+    from local rows (``createDataFrame`` over a list or pandas) is a
+    ``LogicalRDD`` too, but its RDD has no storage level. The RDD-level
+    persist is invisible to ``DataFrame.storageLevel``, which consults
+    only the CacheManager."""
     if not _PLAN_WALKS:
         return False
     plan = df._jdf.queryExecution().analyzed()
-    return plan.getClass().getName().endswith(".LogicalRDD")
+    if not plan.getClass().getName().endswith(".LogicalRDD"):
+        return False
+    level = plan.rdd().getStorageLevel()
+    return level.useMemory() or level.useDisk()
 
 
 def free_checkpoint(df: DataFrame) -> None:
@@ -187,36 +194,3 @@ def free_checkpoint(df: DataFrame) -> None:
     No-op for non-checkpointed frames."""
     if is_checkpointed(df):
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-
-
-def free_checkpoint_tree(df: DataFrame, selection_only: bool = False) -> None:
-    """Deterministically unpersist EVERY localCheckpoint in ``df``'s
-    analyzed plan — a union of checkpointed levels (the grid kNN's
-    grid and straggler passes, the expanding-radius joins) holds several
-    LogicalRDD leaves, which single-frame :func:`free_checkpoint`
-    cannot reach. For epoch-scoped results a streaming handler has
-    already written out: the caller must own every checkpoint in the
-    plan, and the frame is not collectable afterwards (truncated
-    lineage).
-
-    ``selection_only``: free nothing unless ``df`` only selects rows of
-    its checkpoints (Union, Project and Filter above LogicalRDD
-    leaves). For kNN results that are either checkpointed (the grid
-    plan) or a lazy plan over the caller's input (the n-D closure and
-    blocked plans), whose checkpoints are not the caller's to free."""
-    if not _PLAN_WALKS:
-        return
-    leaves = []
-    stack = [df._jdf.queryExecution().analyzed()]
-    while stack:
-        node = stack.pop()
-        name = node.getClass().getSimpleName()
-        if name == "LogicalRDD":
-            leaves.append(node)
-        elif selection_only and name not in ("Union", "Filter", *_ROW_PRESERVING):
-            return
-        kids = node.children()
-        for i in range(kids.size()):
-            stack.append(kids.apply(i))
-    for leaf in leaves:
-        leaf.rdd().unpersist(False)

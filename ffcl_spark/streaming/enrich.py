@@ -68,31 +68,25 @@ def knn_enrich_stream(
     cost in the loop.
     """
     from ffcl_spark.operators.knn_kernel import hot_coarse_groups, knn_join_grid
-    from ffcl_spark.plans.stats import free_checkpoint_tree
+    from ffcl_spark.plans.cache import release
     from ffcl_spark.sources.points import media_points
 
     # the reference side is static across every micro-batch: detect hot
     # coarse groups ONCE here instead of paying a full ref-count
-    # aggregation per epoch (the run_pipeline.py:95 discipline)
+    # aggregation per epoch (the run_pipeline.py discipline)
     hot = hot_coarse_groups(refs, cfg)
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
         qs = media_points(batch_df)
-        # checkpoint=True: iterative caller — the kernel's persisted
-        # intermediates are released before return, so a long-running
-        # stream never accumulates cached partitions across epochs
-        # (round-4 ADVICE: the default leaves them for the caller to
-        # release, which a fire-and-forget handler never does)
-        out = knn_join_grid(qs, refs, k, cfg, checkpoint=True, hot_groups=hot)
+        out = knn_join_grid(qs, refs, k, cfg, hot_groups=hot)
         out.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
-        # the returned rows are themselves localCheckpointed (one or
-        # more LogicalRDD leaves after escalation rounds); drop their
-        # blocks deterministically now that the epoch is on disk —
-        # GC + ContextCleaner timing is not a release strategy for an
-        # unbounded stream (the streaming-dedup discipline)
-        free_checkpoint_tree(out)
+        # the epoch is on disk: free the kernel's carried intermediates
+        # now, so an unbounded stream never accumulates cached
+        # partitions across epochs (GC + ContextCleaner timing is not a
+        # release strategy)
+        release(out)
 
     q = (
         docs_stream.writeStream.foreachBatch(handle)

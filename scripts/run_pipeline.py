@@ -45,6 +45,16 @@ from ffcl_spark.sources.docs import synth_docs  # noqa: E402
 from ffcl_spark.sources.points import media_points, with_cell  # noqa: E402
 
 
+def knn_stage(refs, k: int, cfg: EngineConfig):
+    """Stage 2's per-chunk op: the chunk's points kNN-joined against
+    every point of ``refs``. The refs' hot coarse groups are found once
+    here, not rescanned per chunk (round-3 ADVICE). Each chunk's result
+    carries the kernel output it reads; ``run_checkpointed`` releases
+    it after the chunk's write."""
+    hot = hot_coarse_groups(refs, cfg)
+    return lambda d: knn_join_grid(d.select("id", "x", "y"), refs, k, cfg, hot_groups=hot)
+
+
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--docs", required=True, help="input dir: documents.parquet (interleaved docs or synthesis source)")
@@ -112,18 +122,9 @@ def main(argv: list[str] | None = None) -> None:
     )
     # stage 2: exact kNN self-join per chunk of QUERIES (refs = full set:
     # result rows of a query depend only on the query's chunk, so chunked
-    # execution is exact and resumable). checkpoint=True + a precomputed
-    # hot-group list: per-chunk calls are the iterative-caller pattern —
-    # without them each of up to --n-chunks iterations would leave its
-    # kernel output persisted and rescan the refs for hot groups
-    # (round-3 ADVICE)
-    hot = hot_coarse_groups(pts_xy, cfg)
+    # execution is exact and resumable)
     run_checkpointed(
-        spark, pts_xy,
-        lambda d: knn_join_grid(
-            d.select("id", "x", "y"), pts_xy, args.k, cfg,
-            checkpoint=True, hot_groups=hot,
-        ),
+        spark, pts_xy, knn_stage(pts_xy, args.k, cfg),
         F.col("cell"), args.n_chunks, f"{out}/knn", ck, job_id=f"{args.job_id}:knn",
     )
     # stage 3: PIP tile assignment

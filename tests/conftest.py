@@ -7,6 +7,9 @@ from ffcl_spark.datagen import make_points
 
 
 _JVM_PEAK = pytest.StashKey[str]()
+# per-test persistent-RDD leak listing (report only, never a failure)
+_RDDS_BEFORE = pytest.StashKey[set]()
+_RDDS_LEFT = pytest.StashKey[dict]()
 
 
 def _jvm_status(pid: int, key: str) -> str | None:
@@ -34,10 +37,47 @@ def spark(request):
     s.stop()
 
 
+def _persistent_rdd_ids() -> set[int] | None:
+    """Ids in the running SparkContext's ``getPersistentRDDs()`` (cached
+    frames and localCheckpoints), or None while no context is up."""
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return None
+    return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+@pytest.hookimpl(hookwrapper=True)
+def pytest_runtest_call(item):
+    # the baseline is taken after setup, so session fixtures that cache
+    # their inputs on first use are not charged to that test
+    ids = _persistent_rdd_ids()
+    if ids is not None:
+        item.stash[_RDDS_BEFORE] = ids
+    yield
+
+
+@pytest.hookimpl(hookwrapper=True)
+def pytest_runtest_teardown(item, nextitem):
+    yield
+    before = item.stash.get(_RDDS_BEFORE, None)
+    after = _persistent_rdd_ids()
+    if before is not None and after:
+        left = len(after - before)
+        if left:
+            item.config.stash.setdefault(_RDDS_LEFT, {})[item.nodeid] = left
+
+
 def pytest_terminal_summary(terminalreporter, config):
     peak = config.stash.get(_JVM_PEAK, None)
     if peak is not None:
         terminalreporter.write_line(f"test JVM peak RSS (VmHWM): {peak}")
+    # RDDs a test's call persisted and its teardown left behind
+    left = config.stash.get(_RDDS_LEFT, {})
+    terminalreporter.write_line(f"tests that left persistent RDDs behind: {len(left)}")
+    for nodeid, n in sorted(left.items(), key=lambda kv: (-kv[1], kv[0])):
+        terminalreporter.write_line(f"  {n:4d}  {nodeid}")
 
 
 @pytest.fixture(scope="session")

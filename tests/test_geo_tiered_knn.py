@@ -79,13 +79,15 @@ def test_round_budget_exhausted_searches_whole_sphere(spark, max_rounds, monkeyp
     search the whole sphere and return k rows per query. 300 refs
     would take the closure plan, so the test turns it off."""
     monkeypatch.setattr(G, "SPHERE_CLOSURE_REFS", 0)
+    monkeypatch.setattr(G, "SPHERE_INIT_RADIUS_M", 1000.0)
+    monkeypatch.setattr(G, "SPHERE_MAX_ROUNDS", max_rounds)
     rng = np.random.default_rng(5)
     n = 300
     lat = np.degrees(np.arcsin(rng.uniform(-1, 1, n)))
     lon = rng.uniform(-180.0, 180.0, n)
     rows = [(int(i), float(a), float(b)) for i, (a, b) in enumerate(zip(lat, lon))]
     df = spark.createDataFrame(rows, "id long, lat double, lon double")
-    out = sphere_knn_join(df, df, K, init_radius_m=1000.0, max_rounds=max_rounds)
+    out = sphere_knn_join(df, df, K)
     got = out.toPandas().sort_values(["q_id", "rank"])
     release(out)
     assert len(got) == n * K

@@ -222,6 +222,50 @@ def test_mst_nd_matches_prim(nd_points, nd_cfg):
     assert np.allclose([e[2] for e in ge], [e[2] for e in pe], rtol=0, atol=0)
 
 
+def test_mst_nd_runs_each_pass_knn_once(spark, nd_points, nd_cfg, monkeypatch):
+    """Borůvka keeps only its own per-pass state (the pending ids, the
+    best-edge table) and releases each pass's kNN, so no later pass
+    recomputes an earlier one: every query of every kNN call is scanned
+    once. An accumulator keyed by (call, q_id) counts the rows the
+    closure-plan kernel emits; a recomputed call shows 2·k rows."""
+    from pyspark.accumulators import AccumulatorParam
+
+    from ffcl_spark.operators.boruvka import minimum_spanning_tree, mst_edges_local
+
+    class CountsParam(AccumulatorParam):
+        def zero(self, value):
+            return {}
+
+        def addInPlace(self, a, b):
+            for key, v in b.items():
+                a[key] = a.get(key, 0) + v
+            return a
+
+    rows = spark.sparkContext.accumulator({}, CountsParam())
+    calls = []
+    knn_join_nd = SN.knn_join_nd
+
+    def tallied(q, r, k, *a, **kw):
+        c = len(calls)
+        calls.append(min(k, N))
+        out = knn_join_nd(q, r, k, *a, **kw)
+
+        def tally(batches):
+            for pdf in batches:
+                rows.add({(c, int(i)): int(m) for i, m in pdf.q_id.value_counts().items()})
+                yield pdf
+
+        return out.mapInPandas(tally, out.schema)
+
+    monkeypatch.setattr(SN, "knn_join_nd", tallied)
+    df, ids, mat = nd_points
+    edges = mst_edges_local(minimum_spanning_tree(df, nd_cfg, features_col="features"))
+    assert abs(sum(e[2] for e in edges) - sum(e[2] for e in prim_mst(mat, ids))) < 1e-9
+    assert len(calls) >= 3
+    assert {c for c, _ in rows.value} == set(range(len(calls)))
+    assert {key: m for key, m in rows.value.items() if m != calls[key[0]]} == {}
+
+
 def test_mst_nd_mreach_matches_prim(nd_points, nd_cfg):
     from ffcl_spark.operators.boruvka import minimum_spanning_tree, mst_edges_local
 

@@ -1,6 +1,8 @@
 """Distributed result sets == NumPy brute force — the reference's own
 oracle-test pattern (SearchTest.cpp:954-995)."""
 
+import functools
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -9,6 +11,8 @@ from pyspark.sql import functions as F
 from ffcl_spark import EngineConfig
 from ffcl_spark.kernels import neighbors as K
 from ffcl_spark.operators import search as S
+from ffcl_spark.operators import search_nd as SN
+from ffcl_spark.plans.cache import release
 
 
 def knn_sets(pdf):
@@ -251,14 +255,21 @@ def brute_knn(qpdf, rpdf, k, metric):
     return pd.DataFrame(rows, columns=["q_id", "r_id", "dist", "rank"])
 
 
-def logical_rdd_leaves(df):
+def plan_nodes(df, name):
+    """Nodes of ``df``'s analyzed plan whose class is ``name``."""
     stack, n = [df._jdf.queryExecution().analyzed()], 0
     while stack:
         node = stack.pop()
-        n += node.getClass().getName().endswith(".LogicalRDD")
+        n += node.getClass().getSimpleName() == name
         kids = node.children()
         stack += [kids.apply(i) for i in range(kids.size())]
     return n
+
+
+def straggler_pass_ran(df):
+    # the grid pass is a cogroup; the broadcast straggler pass is the
+    # one mapInPandas in a grid kNN plan
+    return plan_nodes(df, "MapInPandas") >= 1
 
 
 @pytest.mark.parametrize("metric", ["euclidean", "manhattan"])
@@ -281,16 +292,16 @@ def test_knn_grid_straggler_levels_exact(spark, res, metric):
     k = 5
     out = knn_join_grid(
         spark.createDataFrame(qpdf), spark.createDataFrame(rpdf), k,
-        EngineConfig(resolution=res), checkpoint=True, metric=metric,
+        EngineConfig(resolution=res), metric=metric,
     )
+    assert straggler_pass_ran(out)
     got = out.toPandas().sort_values(["q_id", "rank"]).reset_index(drop=True)
+    release(out)
     exp = brute_knn(qpdf, rpdf, k, metric)
     assert (got.q_id.to_numpy() == exp.q_id.to_numpy()).all()
     assert (got.r_id.to_numpy() == exp.r_id.to_numpy()).all()
     assert (got["rank"].to_numpy() == exp["rank"].to_numpy()).all()
     assert (got.dist.to_numpy() == exp.dist.to_numpy()).all()
-    # one checkpointed part per pass: the grid pass and the straggler pass
-    assert logical_rdd_leaves(out) == 2
 
 
 @pytest.mark.parametrize("res", [0, 3])
@@ -301,8 +312,10 @@ def test_knn_grid_no_refs_returns_no_rows(spark, res):
 
     q = spark.createDataFrame(pd.DataFrame({"id": [1, 2], "x": [0.5, -3.0], "y": [0.5, 2.0]}))
     refs = q.where("id < 0")
-    got = knn_join_grid(q, refs, 3, EngineConfig(resolution=res), checkpoint=True)
+    got = knn_join_grid(q, refs, 3, EngineConfig(resolution=res))
+    assert straggler_pass_ran(got)
     assert got.count() == 0
+    release(got)
 
 
 def test_knn_with_memory_all_visited_returns_no_rows(spark, cfg, blobs):
@@ -310,48 +323,90 @@ def test_knn_with_memory_all_visited_returns_no_rows(spark, cfg, blobs):
     assert S.knn_with_memory(df, df, df.select("id"), 4, cfg).count() == 0
 
 
-def test_core_distances_checkpoint_leaves_nothing_behind(spark, monkeypatch):
-    """Borůvka's contract for ``checkpoint=True``: after the call only
-    the checkpointed rows the result reads are left; freeing those
-    leaves no persisted or checkpointed RDD from the call. 2-D points
-    run ``search.core_distances``; 3-D points run
-    ``search_nd.core_distances_nd`` on the same grid kernel."""
-    import functools
+def _straggler_points(dims):
+    """A blob plus far outliers (ids 0..305), so some queries need the
+    grid kernel's straggler pass."""
+    rng = np.random.default_rng(3)
+    return np.vstack([rng.normal(0.0, 1.0, (300, dims)), rng.uniform(-29, 29, (6, dims))])
 
-    from ffcl_spark.operators import search_nd as SN
-    from ffcl_spark.plans.stats import free_checkpoint_tree
 
-    # refs this few auto-pick the n-D closure plan; force the grid plan
-    monkeypatch.setattr(SN, "knn_join_nd", functools.partial(SN.knn_join_nd, plan="grid"))
+def _frame(spark, pts):
+    ids = np.arange(len(pts), dtype=np.int64)
+    if pts.shape[1] == 2:
+        return spark.createDataFrame(pd.DataFrame({"id": ids, "x": pts[:, 0], "y": pts[:, 1]}))
+    return spark.createDataFrame(
+        pd.DataFrame({"id": ids, "features": [list(p) for p in pts]}),
+        "id long, features array<double>",
+    )
+
+
+def _pipeline_knn_stage(spark, df, k, cfg, tmp_path):
+    """``scripts/run_pipeline.py`` stage 2: its per-chunk op under
+    ``run_checkpointed``, three chunks. Returns the written rows."""
+    from ffcl_spark.plans.checkpoint import read_output, run_checkpointed
+    from ffcl_spark.sources.points import with_cell
+    from scripts.run_pipeline import knn_stage
+
+    pts = with_cell(df, cfg).persist()
+    run_checkpointed(
+        spark, pts, knn_stage(pts, k, cfg), F.col("cell"), 3,
+        str(tmp_path / "knn"), str(tmp_path / "ckpt"), job_id="t:knn",
+    )
+    pts.unpersist()
+    return read_output(spark, str(tmp_path / "knn"))
+
+
+KNN_PLANS = {
+    "grid": lambda df, k, cfg: S.knn_join(df, df, k, cfg),
+    "core_distances": lambda df, k, cfg: S.core_distances(df, k, cfg),
+    "nd_local": lambda df, k, cfg: SN.knn_join_nd(df, df, k, cfg, plan="local"),
+    "nd_grid": lambda df, k, cfg: SN.knn_join_nd(df, df, k, cfg, plan="grid"),
+    "nd_blocked": lambda df, k, cfg: SN.knn_join_nd(df, df, k, cfg, plan="blocked"),
+    "core_distances_nd": lambda df, k, cfg: SN.core_distances_nd(df, k, cfg),
+    "pipeline_knn_stage": None,
+}
+
+
+@pytest.mark.parametrize("plan", list(KNN_PLANS))
+def test_knn_release_leaves_no_rdd_behind(spark, plan, tmp_path, monkeypatch):
+    """One hand-off for every kNN plan: the result carries what it
+    persisted, and after ``release(out)`` ``getPersistentRDDs()`` holds
+    no RDD the call created. 2-D points run the planar plans with the
+    straggler pass forced; 3-D points run the three n-D plans and
+    ``core_distances_nd`` (on the grid plan, which persists its kernel
+    output). The last case is run_pipeline's stage 2 over three chunks,
+    which releases each chunk's result after its write."""
+    if plan == "core_distances_nd":
+        # refs this few auto-pick the n-D closure plan; force the grid plan
+        monkeypatch.setattr(SN, "knn_join_nd", functools.partial(SN.knn_join_nd, plan="grid"))
 
     def persistent_ids():
         return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
 
-    rng = np.random.default_rng(3)
-    cfg = EngineConfig(resolution=6)
-    k = 4
-    for dims in (2, 3):
-        # a blob plus far outliers, so some queries need the straggler pass
-        pts = np.vstack([rng.normal(0.0, 1.0, (300, dims)), rng.uniform(-29, 29, (6, dims))])
-        ids = np.arange(len(pts), dtype=np.int64)
-        if dims == 2:
-            df = spark.createDataFrame(pd.DataFrame({"id": ids, "x": pts[:, 0], "y": pts[:, 1]}))
-            core = functools.partial(S.core_distances, df, k, cfg, checkpoint=True)
-        else:
-            df = spark.createDataFrame(
-                pd.DataFrame({"id": ids, "features": [list(p) for p in pts]}),
-                "id long, features array<double>",
-            )
-            core = functools.partial(SN.core_distances_nd, df, k, cfg, checkpoint=True)
-        id_floor = max(persistent_ids(), default=-1)
-        out = core()
-        assert logical_rdd_leaves(out) >= 2  # the straggler pass ran
-        got = out.toPandas().set_index("id").core_distance.loc[ids].to_numpy()
-        _, _, od = K.knn_nd(pts, pts, ids, k)
-        assert (got == od.reshape(len(pts), k)[:, -1]).all()
-        assert not getattr(out, "_ffcl_cached", [])
-        free_checkpoint_tree(out)
-        assert {i for i in persistent_ids() if i > id_floor} == set()
+    cfg, k = EngineConfig(resolution=6), 4
+    pts = _straggler_points(3 if plan.startswith("nd_") or plan.endswith("_nd") else 2)
+    n = len(pts)
+    df = _frame(spark, pts)
+    id_floor = max(persistent_ids(), default=-1)
+    if plan == "pipeline_knn_stage":
+        got = _pipeline_knn_stage(spark, df, k, cfg, tmp_path).toPandas()
+    else:
+        out = KNN_PLANS[plan](df, k, cfg)
+        if plan in ("grid", "core_distances", "nd_grid", "core_distances_nd"):
+            assert straggler_pass_ran(out)
+        got = out.toPandas()
+        release(out)
+    assert {i for i in persistent_ids() if i > id_floor} == set()
+    ids = np.arange(n, dtype=np.int64)
+    oq, on, od = K.knn_nd(pts, pts, ids, k)
+    if plan.startswith("core_distances"):
+        core = got.set_index("id").core_distance.loc[ids].to_numpy()
+        assert (core == od.reshape(n, k)[:, -1]).all()
+    else:
+        got = got.sort_values(["q_id", "rank"])
+        assert list(got.q_id) == list(ids[oq])
+        assert list(got.r_id) == list(on)
+        assert (got.dist.to_numpy() == od).all()
 
 
 @pytest.mark.parametrize("plan", ["planar", "nd"])

@@ -163,12 +163,37 @@ def test_plan_walks_off_on_unknown_spark_major(spark, monkeypatch):
     assert stats.plan_size_bytes(cached) == 1 << 62
     assert not stats.is_checkpointed(ckpt)
     stats.free_checkpoint(ckpt)
-    stats.free_checkpoint_tree(ckpt)
     assert ckpt.count() == 10  # blocks were left alone
     # same answer, from the detection job instead of the exact count
     assert stats.hot_keys(cached.withColumnRenamed("id", "k"), "k", 10) == []
     assert stats.row_count(cached) == 10  # DataFrame.count()
     cached.unpersist()
+
+
+def test_local_frame_is_not_a_checkpoint(spark):
+    """A frame built from local rows is a ``LogicalRDD`` like a
+    localCheckpoint, but nothing of it is persisted: ``carry`` attaches
+    no release handle for it. A localCheckpoint is still detected,
+    carried and freed by ``release``."""
+    from ffcl_spark.plans import stats
+    from ffcl_spark.plans.cache import carry, release
+
+    local = spark.createDataFrame([(1, 2, 0.5)], "src long, dst long, w double")
+    assert not stats.is_checkpointed(local)
+    out = carry(local.select("src"), local)
+    assert out._ffcl_cached == []
+
+    def persistent_ids():
+        return {int(i) for i in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+    floor = max(persistent_ids(), default=-1)
+    ckpt = spark.range(10).localCheckpoint()
+    assert stats.is_checkpointed(ckpt)
+    out = carry(ckpt.where("id > 4"), ckpt, local)
+    assert out._ffcl_cached == [ckpt]
+    assert out.count() == 5
+    release(out)
+    assert {i for i in persistent_ids() if i > floor} == set()
 
 
 def test_plan_statistics_see_cache_added_after_first_read(spark):

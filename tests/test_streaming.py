@@ -181,9 +181,9 @@ def test_knn_enrich_stream_matches_batch(spark, tmp_path):
 
 
 def test_knn_enrich_stream_no_cache_growth(spark, tmp_path):
-    # round-4 ADVICE: the per-batch handler called knn_join_grid with
-    # checkpoint=False and never released the carried intermediates, so
-    # cached partitions accumulated for the life of the stream. Drive
+    # round-4 ADVICE: the per-batch handler once called knn_join_grid
+    # and never released the carried intermediates, so cached
+    # partitions accumulated for the life of the stream. Drive
     # ≥10 single-file epochs through the handler and assert the
     # session's persistent-RDD set does not grow.
     from ffcl_spark.config import EngineConfig
@@ -232,9 +232,10 @@ def test_knn_enrich_stream_no_cache_growth(spark, tmp_path):
         for p in spark.read.parquet(f"{out}/epoch=*").inputFiles()
     }
     assert len(epochs) >= 10
-    # localCheckpoint handles (the checkpoint=True return rows) are
-    # released by the ContextCleaner once the epoch's DataFrame is
-    # GC'd — asynchronous, so force GC and poll for the settle. The
+    # the handler releases the kernel output each epoch's result
+    # carries; anything else a batch persisted is released by the
+    # ContextCleaner once the epoch's DataFrame is GC'd — asynchronous,
+    # so force GC and poll for the settle. The
     # leak this guards against is O(epochs) persisted kernel
     # intermediates, which no amount of GC would remove (they were
     # carried, never released).
