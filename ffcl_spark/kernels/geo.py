@@ -139,6 +139,14 @@ def geo_brute_knn(
     return out
 
 
+def _dot3(p: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """Row dot products ``p @ x`` (p [n, 3]) folded elementwise in one
+    stated order, ``(px*x0 + py*x1) + pz*x2``. A BLAS matrix-vector
+    product rounds a row by its place in the batch, which would make a
+    per-point distance depend on how the rows were batched."""
+    return (p[:, 0] * x[0] + p[:, 1] * x[1]) + p[:, 2] * x[2]
+
+
 def arc_boundary_distance_np(
     p: np.ndarray, ring_latlon: np.ndarray, closed: bool = True
 ) -> np.ndarray:
@@ -156,7 +164,8 @@ def arc_boundary_distance_np(
     endpoint distance. atan2(|p×q|, p·q) is used for endpoint angles
     (robust near 0 and π where acos loses precision). Points at the
     great circle's pole (|p·n̂| → 1, foot undefined) fall through to
-    the endpoint branch, whose value π/2 is then exact."""
+    the endpoint branch, whose value π/2 is then exact. Each point's
+    value is independent of the other rows of ``p`` (:func:`_dot3`)."""
     ring = np.asarray(ring_latlon, dtype=np.float64)
     v = unit_vector_np(ring[:, 0], ring[:, 1])
     if closed:
@@ -178,19 +187,19 @@ def arc_boundary_distance_np(
             d_ct = np.full(len(p), np.inf)
         else:
             ni = ni / nn
-            dt = p @ ni
+            dt = _dot3(p, ni)
             g = p - dt[:, None] * ni
             gn = np.linalg.norm(g, axis=1)
             safe = gn > 1e-12
             g = np.where(safe[:, None], g / np.where(safe, gn, 1.0)[:, None], g)
             on = (
                 safe
-                & ((np.cross(np.broadcast_to(ai, p.shape), g) @ ni) >= 0)
-                & ((np.cross(g, np.broadcast_to(bi, p.shape)) @ ni) >= 0)
+                & (_dot3(np.cross(np.broadcast_to(ai, p.shape), g), ni) >= 0)
+                & (_dot3(np.cross(g, np.broadcast_to(bi, p.shape)), ni) >= 0)
             )
             d_ct = np.abs(np.arcsin(np.clip(dt, -1.0, 1.0)))
-        d_a = np.arctan2(np.linalg.norm(np.cross(p, ai), axis=1), p @ ai)
-        d_b = np.arctan2(np.linalg.norm(np.cross(p, bi), axis=1), p @ bi)
+        d_a = np.arctan2(np.linalg.norm(np.cross(p, ai), axis=1), _dot3(p, ai))
+        d_b = np.arctan2(np.linalg.norm(np.cross(p, bi), axis=1), _dot3(p, bi))
         d = np.where(on, d_ct, np.minimum(d_a, d_b))
         best = np.minimum(best, d)
     return best

@@ -44,6 +44,7 @@ float-boundary contract as every planar radius join in the engine.
 from __future__ import annotations
 
 import math
+from typing import Any, NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -902,6 +903,14 @@ GEO_RING_TYPE = (
 )
 
 
+def _latlon(pts):
+    """One ``GEO_RING_TYPE`` value (ring or path) as a float64 [n, 2]
+    array of (lat, lon) rows."""
+    import numpy as np
+
+    return np.array([[v["lat"], v["lon"]] for v in pts], dtype=np.float64)
+
+
 def sphere_tile_rings(n_tiles: int = 12) -> list[tuple[str, list[tuple[float, float]]]]:
     """Deterministic convex spherical tile fixture: ``n_tiles`` cap
     polygons (vertices on a small circle around a center → convex on
@@ -1004,6 +1013,21 @@ def sphere_tiles_shifted(
     return spark.createDataFrame(rows, f"tile_id string, ring {GEO_RING_TYPE}")
 
 
+def _deg_of_unit(c) -> tuple[float, float]:
+    """(lat, lon) degrees of the unit vector ``c``."""
+    lat = math.degrees(math.asin(max(-1.0, min(1.0, float(c[2])))))
+    return lat, math.degrees(math.atan2(float(c[1]), float(c[0])))
+
+
+def _tile_cap_cells(c, cap_deg: float, delta_deg: float, m_table: list[int]):
+    """Cell cover of a tile's bounding cap (centre ``c``, radius
+    ``cap_deg``), padded so rounding never drops a covered cell."""
+    clat, clon = _deg_of_unit(c)
+    return S.cover_cells_py(
+        clat, clon, cap_deg * (1 + 1e-9) + 1e-9, delta_deg, m_table
+    )
+
+
 def _tile_locals(tiles_rows, delta_deg: float, m_table: list[int]):
     """Collected tile rows → per-tile closure payload: (tile_id,
     gnomonic frame, projected ring, padded spherical cell cover)."""
@@ -1013,16 +1037,9 @@ def _tile_locals(tiles_rows, delta_deg: float, m_table: list[int]):
 
     local = []
     for row in tiles_rows:
-        ring = np.array(
-            [[v["lat"], v["lon"]] for v in row["ring"]], dtype=np.float64
-        )
-        c, e1, e2, ring_xy, cap_deg = tile_frame_np(ring)
-        clat = math.degrees(math.asin(max(-1.0, min(1.0, float(c[2])))))
-        clon = math.degrees(math.atan2(float(c[1]), float(c[0])))
-        r_deg = cap_deg * (1 + 1e-9) + 1e-9
+        c, e1, e2, ring_xy, cap_deg = tile_frame_np(_latlon(row["ring"]))
         cover = np.fromiter(
-            S.cover_cells_py(clat, clon, r_deg, delta_deg, m_table),
-            dtype=np.int64,
+            _tile_cap_cells(c, cap_deg, delta_deg, m_table), dtype=np.int64
         )
         local.append((row["tile_id"], c, e1, e2, ring_xy, cover))
     return local
@@ -1148,11 +1165,7 @@ def geo_pip_join(
                 continue
             outs = []
             for tile_id, grp in pdf.groupby("tile_id", sort=False):
-                ring = np.array(
-                    [[v["lat"], v["lon"]] for v in grp["ring"].iloc[0]],
-                    dtype=np.float64,
-                )
-                c, e1, e2, ring_xy, _ = tile_frame_np(ring)
+                c, e1, e2, ring_xy, _ = tile_frame_np(_latlon(grp["ring"].iloc[0]))
                 p = unit_vector_np(
                     grp["lat"].to_numpy(), grp["lon"].to_numpy()
                 )
@@ -1240,9 +1253,7 @@ def nearest_tile_locals(tiles: DataFrame) -> list[tuple]:
     )
     local = []
     for row in rows:
-        ring = np.array(
-            [[v["lat"], v["lon"]] for v in row["ring"]], dtype=np.float64
-        )
+        ring = _latlon(row["ring"])
         c, e1, e2, ring_xy, cap_deg = tile_frame_np(ring)
         local.append(
             (row["tile_id"], c, e1, e2, ring_xy, ring, np.radians(cap_deg))
@@ -1409,20 +1420,13 @@ def sphere_cell_rollup(
 def polyline_locals(lines: DataFrame) -> list[tuple]:
     """Collect a (bounded) polyline table — (line_id, path:
     array<struct<lat, lon>>) — into the per-line closure payload
-    :func:`geo_nearest_polyline` ships to tasks, sorted by line_id
-    (the tie order). Streaming/iterative callers compute this ONCE."""
-    import numpy as np
-
+    :func:`geo_nearest_polyline` and :func:`geo_map_match` ship to
+    tasks, sorted by line_id (the tie order). Iterative callers of
+    :func:`geo_map_match` compute this ONCE (``line_locals=``)."""
     rows = sorted(
         lines.select("line_id", "path").collect(), key=lambda r: r["line_id"]
     )
-    return [
-        (
-            row["line_id"],
-            np.array([[v["lat"], v["lon"]] for v in row["path"]], dtype=np.float64),
-        )
-        for row in rows
-    ]
+    return [(row["line_id"], _latlon(row["path"])) for row in rows]
 
 
 def geo_nearest_polyline(
@@ -1436,7 +1440,6 @@ def geo_nearest_polyline(
     lat_col: str = "lat",
     lon_col: str = "lon",
     earth_radius_m: float = EARTH_RADIUS_M,
-    line_locals: list[tuple] | None = None,
 ) -> DataFrame:
     """Snap each point to its nearest great-circle polyline (route,
     coastline, transmission line): (id, line_id, dist_m), ties by
@@ -1479,7 +1482,7 @@ def geo_nearest_polyline(
     if plan != "closure":
         raise ValueError(f"unknown plan {plan!r}")
 
-    local = line_locals if line_locals is not None else polyline_locals(lines)
+    local = polyline_locals(lines)
 
     pts = points.select(
         F.col(id_col).alias("id"),
@@ -1564,52 +1567,30 @@ def _nearest_polyline_cover(
         + 1e-9
     )
 
-    cov_schema = f"line_id string, path {GEO_RING_TYPE.replace(': ', ' ')}, cell long"
-
-    def cover_kernel(batches):
-        for pdf in batches:
-            outs = []
-            for _, row in pdf.iterrows():
-                path = np.array(
-                    [[v["lat"], v["lon"]] for v in row["path"]], dtype=np.float64
+    def route_cells(path) -> set[int]:
+        v = unit_vector_np(path[:, 0], path[:, 1])
+        cells: set[int] = set()
+        for a, b in zip(v[:-1], v[1:]):
+            ang = _math.atan2(float(np.linalg.norm(np.cross(a, b))), float(a @ b))
+            m = max(2, _math.ceil(ang / step_rad) + 1)
+            ts = np.linspace(0.0, 1.0, m)
+            if ang < 1e-12:
+                s = np.broadcast_to(a, (m, 3)).copy()
+            else:
+                s = (
+                    np.sin((1 - ts) * ang)[:, None] * a
+                    + np.sin(ts * ang)[:, None] * b
+                ) / _math.sin(ang)
+                s /= np.linalg.norm(s, axis=1)[:, None]
+            lats = np.degrees(np.arcsin(np.clip(s[:, 2], -1.0, 1.0)))
+            lons = np.degrees(np.arctan2(s[:, 1], s[:, 0]))
+            for la, lo in zip(lats, lons):
+                cells |= S.cover_cells_py(
+                    float(la), float(lo), pad_deg, delta_deg, m_table
                 )
-                v = unit_vector_np(path[:, 0], path[:, 1])
-                cells: set[int] = set()
-                for a, b in zip(v[:-1], v[1:]):
-                    ang = _math.atan2(
-                        float(np.linalg.norm(np.cross(a, b))), float(a @ b)
-                    )
-                    m = max(2, _math.ceil(ang / step_rad) + 1)
-                    ts = np.linspace(0.0, 1.0, m)
-                    if ang < 1e-12:
-                        s = np.broadcast_to(a, (m, 3)).copy()
-                    else:
-                        s = (
-                            np.sin((1 - ts) * ang)[:, None] * a
-                            + np.sin(ts * ang)[:, None] * b
-                        ) / _math.sin(ang)
-                        s /= np.linalg.norm(s, axis=1)[:, None]
-                    lats = np.degrees(np.arcsin(np.clip(s[:, 2], -1.0, 1.0)))
-                    lons = np.degrees(np.arctan2(s[:, 1], s[:, 0]))
-                    for la, lo in zip(lats, lons):
-                        cells |= S.cover_cells_py(
-                            float(la), float(lo), pad_deg, delta_deg, m_table
-                        )
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "line_id": row["line_id"],
-                            "path": [row["path"]] * len(cells),
-                            "cell": np.fromiter(cells, dtype=np.int64),
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+        return cells
 
-    line_cov = lines.select("line_id", "path").mapInPandas(
-        cover_kernel, cov_schema
-    )
+    line_cov = _cover_rows(lines, "line_id", "path", route_cells)
 
     pts = points.select(
         F.col(id_col).alias("id"),
@@ -1639,10 +1620,7 @@ def _nearest_polyline_cover(
                 continue
             outs = []
             for line_id, grp in pdf.groupby("line_id", sort=False):
-                path = np.array(
-                    [[v["lat"], v["lon"]] for v in grp["path"].iloc[0]],
-                    dtype=np.float64,
-                )
+                path = _latlon(grp["path"].iloc[0])
                 p = unit_vector_np(grp["lat"].to_numpy(), grp["lon"].to_numpy())
                 d = arc_boundary_distance_np(p, path, closed=False) * earth_radius_m
                 keep = d <= max_dist_m
@@ -1678,41 +1656,46 @@ def sphere_rasterize(
     generation contract; the planar twin is ``tiles.rasterize``).
     Covers are computed DISTRIBUTED in an Arrow batch kernel, so a
     million-tile table never funnels through the driver."""
-    import numpy as np
-    import pandas as pd
-
     from ffcl_spark.kernels.geo import tile_frame_np
 
     if m_table is None:
         m_table = S.band_m_table(delta_deg)
-    cov_schema = "tile_id string, ring {rt}, cell long".format(rt=GEO_RING_TYPE)
+
+    def tile_cells(ring) -> set[int]:
+        c, _, _, _, cap_deg = tile_frame_np(ring)
+        return _tile_cap_cells(c, cap_deg, delta_deg, m_table)
+
+    return _cover_rows(tiles, "tile_id", "ring", tile_cells)
+
+
+def _cover_rows(geoms: DataFrame, id_col: str, geom_col: str, cells_fn) -> DataFrame:
+    """(``id_col``, ``geom_col``, cell) rows: each geometry repeated
+    over the cell set ``cells_fn`` returns for its (lat, lon) vertex
+    array — the distributed Arrow kernel behind every raster and cover
+    candidate generator (a million-row table never reaches the
+    driver)."""
+    import numpy as np
+    import pandas as pd
 
     def cover_kernel(batches):
         for pdf in batches:
             outs = []
-            for _, row in pdf.iterrows():
-                ring = np.array(
-                    [[v["lat"], v["lon"]] for v in row["ring"]], dtype=np.float64
-                )
-                c, _, _, _, cap_deg = tile_frame_np(ring)
-                clat = math.degrees(math.asin(max(-1.0, min(1.0, float(c[2])))))
-                clon = math.degrees(math.atan2(float(c[1]), float(c[0])))
-                cov = S.cover_cells_py(
-                    clat, clon, cap_deg * (1 + 1e-9) + 1e-9, delta_deg, m_table
-                )
+            for gid, geom in zip(pdf[id_col], pdf[geom_col]):
+                cells = cells_fn(_latlon(geom))
                 outs.append(
                     pd.DataFrame(
                         {
-                            "tile_id": row["tile_id"],
-                            "ring": [row["ring"]] * len(cov),
-                            "cell": np.fromiter(cov, dtype=np.int64),
+                            id_col: gid,
+                            geom_col: [geom] * len(cells),
+                            "cell": np.fromiter(cells, dtype=np.int64),
                         }
                     )
                 )
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-    return tiles.select("tile_id", "ring").mapInPandas(cover_kernel, cov_schema)
+    schema = f"{id_col} string, {geom_col} {GEO_RING_TYPE}, cell long"
+    return geoms.select(id_col, geom_col).mapInPandas(cover_kernel, schema)
 
 
 def sphere_tile_raster(
@@ -1807,7 +1790,6 @@ def sphere_overlay_join(
     same-great-circle overlap branch, and mutual vertex containment
     via the gnomonic kernel). Poles and the antimeridian are not
     special cases. Self-pairs appear when both sides are one table."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -1832,13 +1814,7 @@ def sphere_overlay_join(
                 continue
             keep_a, keep_b = [], []
             for row in pdf.itertuples(index=False):
-                ra = np.array(
-                    [[v["lat"], v["lon"]] for v in row.ring_a], dtype=np.float64
-                )
-                rb = np.array(
-                    [[v["lat"], v["lon"]] for v in row.ring_b], dtype=np.float64
-                )
-                if sphere_polys_intersect(ra, rb):
+                if sphere_polys_intersect(_latlon(row.ring_a), _latlon(row.ring_b)):
                     keep_a.append(row.a_id)
                     keep_b.append(row.b_id)
             if keep_a:
@@ -1849,38 +1825,118 @@ def sphere_overlay_join(
     )
 
 
-def line_tile_locals(tiles: DataFrame) -> list[tuple]:
-    """Collect a (bounded) tile table into :func:`geo_line_tile_join`'s
-    closure payload: (tile_id, vertex ring [m, 2], cap center unit
-    vector, cap radius rad), sorted by tile_id. Static-tile callers
-    compute this once and pass ``tile_locals=`` (the hoisting
-    discipline shared with :func:`nearest_tile_locals`)."""
+class _Chain(NamedTuple):
+    """One vertex chain (route, or tile ring) as the polyline family's
+    pair kernels see it: its (lat, lon) rows, their unit vectors and
+    its bounding cap (:func:`_chain_cap`)."""
+
+    latlon: Any
+    v: Any
+    c: Any
+    r: float
+
+
+def _chain_cap(v) -> tuple[Any, float]:
+    """Bounding cap of the unit vectors ``v`` [n, 3]: (centre, radius
+    rad) — the normalised vertex mean and the largest arc from it, or
+    radius π (no usable cap) when the mean vanishes."""
     import numpy as np
 
+    c = v.mean(axis=0)
+    nrm = float(np.linalg.norm(c))
+    if not nrm > 0:
+        return c, float(np.pi)
+    c = c / nrm
+    return c, float(np.arccos(np.clip(v @ c, -1.0, 1.0)).max())
+
+
+def _chain(pts) -> _Chain:
+    """A ``GEO_RING_TYPE`` value as a :class:`_Chain` record."""
     from ffcl_spark.kernels.geo import unit_vector_np
 
-    rows = sorted(
-        tiles.select("tile_id", "ring").collect(), key=lambda r: r["tile_id"]
-    )
-    local = []
-    for row in rows:
-        ring = np.array(
-            [[v["lat"], v["lon"]] for v in row["ring"]], dtype=np.float64
-        )
-        v = unit_vector_np(ring[:, 0], ring[:, 1])
-        c = v.mean(axis=0)
-        c = c / np.linalg.norm(c)
-        cap = float(np.arccos(np.clip(v @ c, -1.0, 1.0)).max())
-        local.append((row["tile_id"], ring, c, cap))
-    return local
+    latlon = _latlon(pts)
+    v = unit_vector_np(latlon[:, 0], latlon[:, 1])
+    return _Chain(latlon, v, *_chain_cap(v))
 
 
-def geo_line_tile_join(
-    lines: DataFrame,
-    tiles: DataFrame | None,
+def _ang(u, w) -> float:
+    """Great-circle angle (rad) between the unit vectors ``u`` and ``w``."""
+    import numpy as np
+
+    return float(np.arctan2(np.linalg.norm(np.cross(u, w)), float(u @ w)))
+
+
+def _caps_apart(a: _Chain, b: _Chain) -> bool:
+    """True when two chains provably share no point because their caps
+    are apart. Only caps of radius ≤ π/2 prove it: such a cap is
+    geodesically convex, so it holds every minor arc between its
+    vertices, while a chain spanning more than a hemisphere has arcs
+    that leave its vertex cap."""
+    import numpy as np
+
+    if not (a.r <= np.pi / 2 and b.r <= np.pi / 2):
+        return False
+    return float(np.arccos(np.clip(a.c @ b.c, -1.0, 1.0))) > a.r + b.r + 1e-9
+
+
+def _line_pair_join(
+    stream: DataFrame,
+    bounded: DataFrame,
+    pair_fn,
     *,
-    tile_locals: list[tuple] | None = None,
+    self_join: bool = False,
+    id_col: str = "line_id",
+    geom_col: str = "path",
+    other_col: str = "other_id",
+    value_fields: tuple[str, ...] = (),
 ) -> DataFrame:
+    """The polyline family's pair join: (line_id, ``other_col``,
+    *``value_fields``) for every streamed (line_id, path) chain ``a``
+    and bounded (``id_col``, ``geom_col``) chain ``b`` for which
+    ``pair_fn(a, b)`` returns a tuple of doubles (empty for a plain
+    match) rather than None. Both arguments are :class:`_Chain`
+    records, so the pair kernel can prune on the caps before its exact
+    test; ``other_col`` takes the bounded id's type.
+
+    MAP-ONLY plan: the bounded side is collected once, sorted by id,
+    and rides the task closure (the bounded-table contract of the
+    closure family); the streamed side is one Arrow pass, no join, no
+    shuffle. Self-join form (``self_join``, ``bounded`` being the
+    streamed table): each unordered pair once, line_id < other id."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    rows = sorted(
+        bounded.select(id_col, geom_col).collect(), key=lambda r: r[id_col]
+    )
+    local = [(row[id_col], _chain(row[geom_col])) for row in rows]
+    out_schema = T.StructType(
+        [
+            T.StructField("line_id", stream.schema["line_id"].dataType),
+            T.StructField(other_col, bounded.schema[id_col].dataType),
+        ]
+        + [T.StructField(f, T.DoubleType()) for f in value_fields]
+    )
+    names = out_schema.fieldNames()
+
+    def kernel(batches):
+        for pdf in batches:
+            out = []
+            for lid, path in zip(pdf["line_id"], pdf["path"]):
+                a = _chain(path)
+                for oid, b in local:
+                    if self_join and not lid < oid:
+                        continue
+                    vals = pair_fn(a, b)
+                    if vals is not None:
+                        out.append((lid, oid, *vals))
+            if out:
+                yield pd.DataFrame(out, columns=names)
+
+    return stream.select("line_id", "path").mapInPandas(kernel, out_schema)
+
+
+def geo_line_tile_join(lines: DataFrame, tiles: DataFrame) -> DataFrame:
     """Polyline ↔ tile crossing join: (line_id, tile_id) for every
     route whose open great-circle vertex chain meets the tile —
     interior passage or boundary touch (the routes-crossing-zones
@@ -1894,66 +1950,19 @@ def geo_line_tile_join(
     no small-angle or planar approximation; antimeridian-crossing and
     polar routes are not special cases.
 
-    MAP-ONLY plan mirroring :func:`geo_nearest_tile`: tiles ride the
-    task closure (bounded tile-table contract), lines scale out — one
-    Arrow pass, no join, no shuffle. Per batch the bounding-cap
-    prune (chain cap vs tile cap, caps ≤ a hemisphere are
-    geodesically convex so a cap covering the vertices covers every
-    minor arc between them) rejects far pairs before the exact
-    kernel; the prune is conservative, never dropping a touching
-    pair."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+    Plan: :func:`_line_pair_join` with the tiles as the bounded side;
+    pairs whose caps are apart (:func:`_caps_apart`) skip the exact
+    kernel, never a touching pair."""
+    from ffcl_spark.kernels.geo import sphere_chain_poly_intersect
 
-    from ffcl_spark.kernels.geo import (
-        sphere_chain_poly_intersect,
-        unit_vector_np,
+    def pair(a: _Chain, t: _Chain):
+        if _caps_apart(a, t) or not sphere_chain_poly_intersect(a.latlon, t.latlon):
+            return None
+        return ()
+
+    return _line_pair_join(
+        lines, tiles, pair, id_col="tile_id", geom_col="ring", other_col="tile_id"
     )
-
-    local = tile_locals if tile_locals is not None else line_tile_locals(tiles)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("line_id", lines.schema["line_id"].dataType),
-            T.StructField("tile_id", T.StringType()),
-        ]
-    )
-
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keep_l, keep_t = [], []
-            for row in pdf.itertuples(index=False):
-                chain = np.array(
-                    [[v["lat"], v["lon"]] for v in row.path], dtype=np.float64
-                )
-                vc = unit_vector_np(chain[:, 0], chain[:, 1])
-                cc = vc.mean(axis=0)
-                nrm = float(np.linalg.norm(cc))
-                if nrm > 0:
-                    cc = cc / nrm
-                    cr = float(np.arccos(np.clip(vc @ cc, -1.0, 1.0)).max())
-                else:  # antipodal degenerate chain: no usable cap
-                    cr = float(np.pi)
-                for tid, ring, tc, tr in local:
-                    # cap prune only when BOTH caps are geodesically
-                    # convex (radius ≤ π/2) — a chain spanning more
-                    # than a hemisphere has arcs that can leave its
-                    # non-convex vertex cap, so pruning on it could
-                    # drop a truly touching pair (r6, round-5 ADVICE)
-                    if nrm > 0 and cr <= np.pi / 2 and tr <= np.pi / 2:
-                        gap = float(np.arccos(np.clip(cc @ tc, -1.0, 1.0)))
-                        if gap > cr + tr + 1e-9:
-                            continue
-                    if sphere_chain_poly_intersect(chain, ring):
-                        keep_l.append(row.line_id)
-                        keep_t.append(tid)
-            if keep_l:
-                yield pd.DataFrame({"line_id": keep_l, "tile_id": keep_t})
-
-    return lines.select("line_id", "path").mapInPandas(kernel, out_schema)
 
 
 def sphere_vectorize(
@@ -2002,7 +2011,6 @@ def sphere_tile_measures(
     normalized vertex mean — the anchor every other geo-tile operator
     uses, not the mass centroid). MAP-ONLY Arrow pass over the tile
     table — no join, no shuffle."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -2025,19 +2033,11 @@ def sphere_tile_measures(
                 continue
             rows = []
             for row in pdf.itertuples(index=False):
-                ring = np.array(
-                    [[v["lat"], v["lon"]] for v in row.ring], dtype=np.float64
-                )
+                ring = _latlon(row.ring)
                 omega, per = sphere_ring_measures(ring)
                 c, *_ = tile_frame_np(ring)
                 rows.append(
-                    (
-                        row.tile_id,
-                        omega * r2,
-                        per * earth_radius_m,
-                        math.degrees(math.asin(max(-1.0, min(1.0, float(c[2]))))),
-                        math.degrees(math.atan2(float(c[1]), float(c[0]))),
-                    )
+                    (row.tile_id, omega * r2, per * earth_radius_m, *_deg_of_unit(c))
                 )
             yield pd.DataFrame(
                 rows, columns=["tile_id", "area_m2", "perimeter_m", "clat", "clon"]
@@ -2073,44 +2073,8 @@ def sphere_routes_b(spark) -> DataFrame:
     )
 
 
-def route_chain_locals(lines: DataFrame) -> list[tuple]:
-    """Collect a (bounded) route table into
-    :func:`geo_line_line_join`'s closure payload: (line_id, vertex
-    chain [m, 2], cap center unit vector, cap radius rad), sorted by
-    line_id — the open-chain sibling of :func:`line_tile_locals`;
-    static-route callers compute it once and pass ``line_locals=``."""
-    import numpy as np
-
-    from ffcl_spark.kernels.geo import unit_vector_np
-
-    rows = sorted(
-        lines.select("line_id", "path").collect(), key=lambda r: r["line_id"]
-    )
-    local = []
-    for row in rows:
-        chain = np.array(
-            [[v["lat"], v["lon"]] for v in row["path"]], dtype=np.float64
-        )
-        v = unit_vector_np(chain[:, 0], chain[:, 1])
-        c = v.mean(axis=0)
-        nrm = float(np.linalg.norm(c))
-        if nrm > 0:
-            c = c / nrm
-            cap = float(np.arccos(np.clip(v @ c, -1.0, 1.0)).max())
-        else:  # antipodal degenerate chain: no usable cap
-            cap = float(np.pi)
-        # vertex unit vectors ride the payload so per-pair consumers
-        # (the Fréchet endpoint lower bound) never recompute trig for
-        # the fixed bounded side (r6, round-5 ADVICE low)
-        local.append((row["line_id"], chain, c, cap, v))
-    return local
-
-
 def geo_line_line_join(
-    lines_a: DataFrame,
-    lines_b: DataFrame | None = None,
-    *,
-    line_locals: list[tuple] | None = None,
+    lines_a: DataFrame, lines_b: DataFrame | None = None
 ) -> DataFrame:
     """Polyline ↔ polyline crossing join: (line_id, other_id) for
     every pair of open great-circle vertex chains that share at least
@@ -2131,78 +2095,20 @@ def geo_line_line_join(
     ``line_id < other_id`` — touching-at-a-shared-vertex counts, a
     route never pairs with itself.
 
-    MAP-ONLY plan mirroring :func:`geo_line_tile_join`: the bounded
-    side rides the task closure (the bounded route-table contract of
-    the nearest/snap family — for million×million route tables,
-    rasterize one side with the :func:`geo_nearest_polyline` cover
-    machinery instead), the scaling side streams through one Arrow
-    pass — no join, no shuffle. Per pair the bounding-cap prune
-    (minor arcs stay inside a cap covering the chain's vertices, caps
-    ≤ a hemisphere being geodesically convex) rejects far pairs
-    before the exact kernel; conservative, never drops a touching
-    pair."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+    Plan: :func:`_line_pair_join` with ``lines_b`` as the bounded side;
+    pairs whose caps are apart (:func:`_caps_apart`) skip the exact
+    kernel, never a touching pair."""
+    from ffcl_spark.kernels.geo import sphere_chains_cross
 
-    from ffcl_spark.kernels.geo import sphere_chains_cross, unit_vector_np
+    def pair(a: _Chain, b: _Chain):
+        if _caps_apart(a, b) or not sphere_chains_cross(a.latlon, b.latlon):
+            return None
+        return ()
 
     self_join = lines_b is None
-    if line_locals is None:
-        line_locals = route_chain_locals(lines_a if self_join else lines_b)
-    local = line_locals
-
-    out_schema = T.StructType(
-        [
-            T.StructField("line_id", lines_a.schema["line_id"].dataType),
-            # other_id carries the BOUNDED side's raw ids — take its
-            # type from that table, not a hardcoded string (r6,
-            # round-5 ADVICE low: a non-string bounded id would have
-            # hit an Arrow type error at runtime)
-            T.StructField(
-                "other_id",
-                (lines_a if self_join else lines_b).schema["line_id"].dataType,
-            ),
-        ]
+    return _line_pair_join(
+        lines_a, lines_a if self_join else lines_b, pair, self_join=self_join
     )
-
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keep_a, keep_b = [], []
-            for row in pdf.itertuples(index=False):
-                chain = np.array(
-                    [[v["lat"], v["lon"]] for v in row.path], dtype=np.float64
-                )
-                vc = unit_vector_np(chain[:, 0], chain[:, 1])
-                cc = vc.mean(axis=0)
-                nrm = float(np.linalg.norm(cc))
-                if nrm > 0:
-                    cc = cc / nrm
-                    cr = float(np.arccos(np.clip(vc @ cc, -1.0, 1.0)).max())
-                else:
-                    cr = float(np.pi)
-                for oid, ochain, oc, orad, _ov in local:
-                    if self_join and not (row.line_id < oid):
-                        continue
-                    # cap prune only when BOTH caps are geodesically
-                    # convex (radius ≤ π/2): a chain spanning more
-                    # than a hemisphere has arcs that can leave its
-                    # non-convex vertex cap, so pruning on it could
-                    # silently drop a truly crossing pair (r6,
-                    # round-5 ADVICE medium)
-                    if nrm > 0 and cr <= np.pi / 2 and orad <= np.pi / 2:
-                        gap = float(np.arccos(np.clip(cc @ oc, -1.0, 1.0)))
-                        if gap > cr + orad + 1e-9:
-                            continue
-                    if sphere_chains_cross(chain, ochain):
-                        keep_a.append(row.line_id)
-                        keep_b.append(oid)
-            if keep_a:
-                yield pd.DataFrame({"line_id": keep_a, "other_id": keep_b})
-
-    return lines_a.select("line_id", "path").mapInPandas(kernel, out_schema)
 
 
 def simplify_polylines(
@@ -2233,7 +2139,6 @@ def simplify_polylines(
     MAP-ONLY plan: one Arrow pass over (line_id, path), no join, no
     shuffle; output schema equals the input's (line_id, path), so the
     result plugs into every line-consuming operator."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
@@ -2264,9 +2169,7 @@ def simplify_polylines(
                 continue
             ids, paths = [], []
             for row in pdf.itertuples(index=False):
-                chain = np.array(
-                    [[v["lat"], v["lon"]] for v in row.path], dtype=np.float64
-                )
+                chain = _latlon(row.path)
                 idx = sphere_simplify_indices_np(chain, tol_rad)
                 ids.append(row.line_id)
                 paths.append(
@@ -2646,7 +2549,6 @@ def trajectory_frechet_join(
     *,
     max_dist_m: float | None = None,
     earth_radius_m: float = EARTH_RADIUS_M,
-    line_locals: list[tuple] | None = None,
 ) -> DataFrame:
     """Trajectory-similarity join: (line_id, other_id, frechet_m) =
     the discrete Fréchet (dog-leash) distance between every pair of
@@ -2668,87 +2570,31 @@ def trajectory_frechet_join(
     both conservative, so no qualifying pair is dropped.
 
     Self-join form (``refs=None``): each unordered pair once,
-    ``line_id < other_id``. MAP-ONLY plan of the line-join family:
-    the bounded side rides the task closure (``line_locals=`` hoists
-    the collect), the scaling side is one Arrow pass — no join, no
-    shuffle."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+    ``line_id < other_id``. Plan: :func:`_line_pair_join` with
+    ``refs`` as the bounded side."""
+    from ffcl_spark.kernels.geo import discrete_frechet_rad
 
-    from ffcl_spark.kernels.geo import (
-        discrete_frechet_rad,
-        unit_vector_np,
-    )
+    cap_rad = None if max_dist_m is None else float(max_dist_m) / earth_radius_m
+
+    def pair(a: _Chain, b: _Chain):
+        if cap_rad is not None:
+            lb = max(
+                _ang(a.v[0], b.v[0]),
+                _ang(a.v[-1], b.v[-1]),
+                _ang(a.c, b.c) - a.r - b.r,
+            )
+            if lb > cap_rad + 1e-12:
+                return None
+        fr = discrete_frechet_rad(a.latlon, b.latlon)
+        if cap_rad is not None and fr > cap_rad:
+            return None
+        return (fr * earth_radius_m,)
 
     self_join = refs is None
-    if line_locals is None:
-        line_locals = route_chain_locals(trajs if self_join else refs)
-    local = line_locals
-    cap_rad = (
-        None if max_dist_m is None else float(max_dist_m) / earth_radius_m
+    return _line_pair_join(
+        trajs, trajs if self_join else refs, pair,
+        self_join=self_join, value_fields=("frechet_m",),
     )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("line_id", trajs.schema["line_id"].dataType),
-            # bounded side's id type, not a hardcoded string (r6 ADVICE)
-            T.StructField(
-                "other_id",
-                (trajs if self_join else refs).schema["line_id"].dataType,
-            ),
-            T.StructField("frechet_m", T.DoubleType()),
-        ]
-    )
-
-    def ang(u, w) -> float:
-        return float(
-            np.arctan2(np.linalg.norm(np.cross(u, w)), float(u @ w))
-        )
-
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ida, idb, vals = [], [], []
-            for row in pdf.itertuples(index=False):
-                chain = np.array(
-                    [[v["lat"], v["lon"]] for v in row.path], dtype=np.float64
-                )
-                vc = unit_vector_np(chain[:, 0], chain[:, 1])
-                cc = vc.mean(axis=0)
-                nrm = float(np.linalg.norm(cc))
-                cc = cc / nrm if nrm > 0 else cc
-                cr = (
-                    float(np.arccos(np.clip(vc @ cc, -1.0, 1.0)).max())
-                    if nrm > 0
-                    else float(np.pi)
-                )
-                for oid, ochain, oc, orad, ov in local:
-                    if self_join and not (row.line_id < oid):
-                        continue
-                    if cap_rad is not None:
-                        # endpoint couplings are forced; cap gap is a
-                        # second lower bound — both conservative (the
-                        # bounded side's unit vectors are precomputed
-                        # in route_chain_locals — r6 ADVICE hoist)
-                        lb = max(ang(vc[0], ov[0]), ang(vc[-1], ov[-1]))
-                        if nrm > 0:
-                            lb = max(lb, ang(cc, oc) - cr - orad)
-                        if lb > cap_rad + 1e-12:
-                            continue
-                    fr = discrete_frechet_rad(chain, ochain)
-                    if cap_rad is not None and fr > cap_rad:
-                        continue
-                    ida.append(row.line_id)
-                    idb.append(oid)
-                    vals.append(fr * earth_radius_m)
-            if ida:
-                yield pd.DataFrame(
-                    {"line_id": ida, "other_id": idb, "frechet_m": vals}
-                )
-
-    return trajs.select("line_id", "path").mapInPandas(kernel, out_schema)
 
 
 def trajectory_hausdorff_join(
@@ -2757,7 +2603,6 @@ def trajectory_hausdorff_join(
     *,
     max_dist_m: float | None = None,
     earth_radius_m: float = EARTH_RADIUS_M,
-    line_locals: list[tuple] | None = None,
 ) -> DataFrame:
     """Trajectory-similarity join under the discrete Hausdorff metric:
     (line_id, other_id, hausdorff_m, h_ab_m, h_ba_m) for every chain
@@ -2779,92 +2624,28 @@ def trajectory_hausdorff_join(
     cap-to-cap gap ⇒ H ≥ gap — conservative, no qualifying pair
     dropped). Self-join form (``refs=None``): each unordered pair
     once, ``line_id < other_id``, with h_ab/h_ba oriented by the id
-    order. MAP-ONLY plan of the line-join family: bounded side in the
-    task closure (``line_locals=`` hoists the collect), scaling side
-    one Arrow pass — no join, no shuffle."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+    order. Plan: :func:`_line_pair_join` with ``refs`` as the bounded
+    side."""
+    from ffcl_spark.kernels.geo import hausdorff_rad
 
-    from ffcl_spark.kernels.geo import hausdorff_rad, unit_vector_np
+    cap_rad = None if max_dist_m is None else float(max_dist_m) / earth_radius_m
+
+    def pair(a: _Chain, b: _Chain):
+        # the vertex sets lie inside their caps (the discrete metric
+        # needs no convexity), so the cap gap bounds both directed maxima
+        if cap_rad is not None and _ang(a.c, b.c) - a.r - b.r > cap_rad + 1e-12:
+            return None
+        h_ab, h_ba = hausdorff_rad(a.latlon, b.latlon)
+        h = max(h_ab, h_ba)
+        if cap_rad is not None and h > cap_rad:
+            return None
+        return (h * earth_radius_m, h_ab * earth_radius_m, h_ba * earth_radius_m)
 
     self_join = refs is None
-    if line_locals is None:
-        line_locals = route_chain_locals(trajs if self_join else refs)
-    local = line_locals
-    cap_rad = (
-        None if max_dist_m is None else float(max_dist_m) / earth_radius_m
+    return _line_pair_join(
+        trajs, trajs if self_join else refs, pair,
+        self_join=self_join, value_fields=("hausdorff_m", "h_ab_m", "h_ba_m"),
     )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("line_id", trajs.schema["line_id"].dataType),
-            # bounded side's id type, not a hardcoded string (r6 ADVICE)
-            T.StructField(
-                "other_id",
-                (trajs if self_join else refs).schema["line_id"].dataType,
-            ),
-            T.StructField("hausdorff_m", T.DoubleType()),
-            T.StructField("h_ab_m", T.DoubleType()),
-            T.StructField("h_ba_m", T.DoubleType()),
-        ]
-    )
-
-    def ang(u, w) -> float:
-        return float(
-            np.arctan2(np.linalg.norm(np.cross(u, w)), float(u @ w))
-        )
-
-    def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ida, idb, hs, habs, hbas = [], [], [], [], []
-            for row in pdf.itertuples(index=False):
-                chain = np.array(
-                    [[v["lat"], v["lon"]] for v in row.path], dtype=np.float64
-                )
-                vc = unit_vector_np(chain[:, 0], chain[:, 1])
-                cc = vc.mean(axis=0)
-                nrm = float(np.linalg.norm(cc))
-                cc = cc / nrm if nrm > 0 else cc
-                cr = (
-                    float(np.arccos(np.clip(vc @ cc, -1.0, 1.0)).max())
-                    if nrm > 0
-                    else float(np.pi)
-                )
-                for oid, ochain, oc, orad, _ov in local:
-                    if self_join and not (row.line_id < oid):
-                        continue
-                    if cap_rad is not None and nrm > 0:
-                        # cap gap lower-bounds EVERY pairwise angle
-                        # (vertex sets live inside their caps by
-                        # construction — no convexity needed for the
-                        # DISCRETE metric), hence both directed
-                        # maxima — conservative
-                        if ang(cc, oc) - cr - orad > cap_rad + 1e-12:
-                            continue
-                    h_ab, h_ba = hausdorff_rad(chain, ochain)
-                    h = max(h_ab, h_ba)
-                    if cap_rad is not None and h > cap_rad:
-                        continue
-                    ida.append(row.line_id)
-                    idb.append(oid)
-                    hs.append(h * earth_radius_m)
-                    habs.append(h_ab * earth_radius_m)
-                    hbas.append(h_ba * earth_radius_m)
-            if ida:
-                yield pd.DataFrame(
-                    {
-                        "line_id": ida,
-                        "other_id": idb,
-                        "hausdorff_m": hs,
-                        "h_ab_m": habs,
-                        "h_ba_m": hbas,
-                    }
-                )
-
-    return trajs.select("line_id", "path").mapInPandas(kernel, out_schema)
 
 
 def geo_convex_hull(

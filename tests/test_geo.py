@@ -2153,9 +2153,7 @@ def test_trajectory_frechet_join_brute_and_cap(spark):
         for aid, ap in a_paths
         for bid, bp in b_paths
     }
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k] == pytest.approx(want[k], rel=1e-12)
+    assert got == want  # bit-equal: the operator adds no arithmetic
 
     cap = 3_000_000.0  # 3000 km
     capped = {
@@ -2266,9 +2264,7 @@ def test_trajectory_hausdorff_join_brute_and_cap(spark):
                 h_ab * EARTH_RADIUS_M,
                 h_ba * EARTH_RADIUS_M,
             )
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k] == pytest.approx(want[k], rel=1e-12)
+    assert got == want  # bit-equal: the operator adds no arithmetic
 
     cap = 3_000_000.0  # 3000 km
     capped = {
